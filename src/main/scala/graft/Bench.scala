@@ -22,12 +22,10 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val runsPerQuery = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
-    // optional comma-separated subset (fast iteration / error-path demos);
+    // optional SPARK_GRAFT_ONLY subset (fast iteration / error-path demos);
     // a subset recording never overwrites the full-suite BENCH_full.json
-    val subset = sys.env.get("SPARK_GRAFT_BENCH_SUBSET")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val queries = subset.fold(SparkEntry.queries)(names =>
-      SparkEntry.queries.view.filterKeys(names).toMap)
+    val subset = SparkEntry.only()
+    val queries = subset.getOrElse(SparkEntry.queries)
     def loadAvg(): Double =
       java.lang.management.ManagementFactory.getOperatingSystemMXBean.getSystemLoadAverage
     val loadAtStart = loadAvg()
@@ -49,19 +47,7 @@ object Bench {
             .linesIterator.next().take(160)
           -1.0
         }
-      // ops persist reused intermediates (signatures, inverted lists);
-      // clear between runs (outside the timed region) so timings measure
-      // the op, not a cache of a previous identical plan, and the block
-      // store doesn't grow 3x per query over the bench run
-      spark.catalog.clearCache()
-      // clearCache only covers CacheManager (SQL) entries — localCheckpoint
-      // blocks (resolveClusters rounds, rangeNtileBucket's pinned range
-      // table) live as raw persistent RDDs and otherwise accumulate until
-      // driver GC triggers ContextCleaner; across a 50-query suite that
-      // block-store growth inflated later queries ~2-3x (measured: the
-      // whole-suite run degraded dedup_clusters 3.1s -> 20s while the
-      // isolated run stayed flat)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      GraftSession.releaseBlocks(spark) // outside the timed region
       elapsed
     }
 

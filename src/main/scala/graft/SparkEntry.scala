@@ -20,4 +20,21 @@ object SparkEntry extends SparkEntryOracles3 {
 
   def oracleSql: Map[String, String] =
     oracleChunk1 ++ oracleChunk2 ++ oracleChunk3
+
+  /** The registry slice a Bench or Verify run covers: `None` for every
+    * query, or the names in `spec`, a comma-separated list (the
+    * `SPARK_GRAFT_ONLY` variable by default). A name the registry lacks
+    * throws, so a typo cannot shrink a run to an empty but clean-looking
+    * result. */
+  def only(spec: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Option[Map[String, (SparkSession, String) => DataFrame]] =
+    spec.map { s =>
+      val all = queries
+      val names = s.split(',').map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.filterNot(all.contains)
+      require(names.nonEmpty, s"SPARK_GRAFT_ONLY names no query: '$s'")
+      require(unknown.isEmpty, "SPARK_GRAFT_ONLY names unknown queries: " +
+        unknown.toSeq.sorted.mkString(", "))
+      all.filter { case (name, _) => names(name) }
+    }
 }

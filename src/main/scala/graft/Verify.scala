@@ -7,25 +7,17 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    // local-iteration SPARK_GRAFT_ONLY subset; driver sets nothing
+    val subset = SparkEntry.only()
     val spark = GraftSession.local(cpus, appName = "graft-verify")
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter (comma-separated names); driver sets nothing
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').map(_.trim).toSet).getOrElse(Set.empty[String])
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(only).toMap
-    selected.foreach { case (name, fn) =>
+    subset.getOrElse(SparkEntry.queries).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      // same block-store hygiene as Bench: drop SQL caches AND raw
-      // persistent RDDs (localCheckpoint blocks) between queries so a
-      // 50-query sequential run doesn't accumulate executor state
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      GraftSession.releaseBlocks(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -39,7 +31,11 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // a subset writes only its own twins, so check_oracle.py compares
+    // exactly the queries that ran
+    val oracles = subset.fold(SparkEntry.oracleSql)(sel =>
+      SparkEntry.oracleSql.filter { case (k, _) => sel.contains(k) })
+    val json = oracles
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

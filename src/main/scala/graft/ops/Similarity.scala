@@ -1155,8 +1155,8 @@ object Similarity {
       // dim explode (guide §4.4): aliased beside the posexplode, the
       // optimizer hoists the argmin kernel ABOVE the Generate and
       // re-evaluates it per (vec, dim) ROW — dims× the intended work
-      // per round (the round-13 PlanProbe caught exactly this shape; at
-      // the routed ×100 fit that is 64× of a sample×nCodes×dims scan).
+      // per round (at the routed ×100 fit, 64× of a sample×nCodes×dims
+      // scan; KernelFunctionsSpec pins the barrier's plan shape).
       // The InMemoryRelation boundary pins one evaluation per vector;
       // values are unchanged (deterministic kernel), and the cached
       // frame is sample-sized and released the moment the round's

@@ -76,6 +76,35 @@ class KernelFunctionsSpec extends SparkTestBase with Matchers {
     assert(e3.getMessage != null)
   }
 
+  test("a persist barrier keeps PqEncodeLong below the fit's posexplode") {
+    // Similarity's fitOnSample update shape. Without the barrier the
+    // encode stays in the outer plan, where the projections over the
+    // exploded rows can pull it above the Generate and evaluate it once
+    // per (vec, dim) row. Cached first, the outer plan only reads the
+    // codes column out of the InMemoryRelation.
+    val df = spark.range(10).select(col("id").as("vec_id"),
+      array(col("id"), col("id") + 1, col("id") + 2, col("id") + 3)
+        .as("qv"))
+    val cents = Map((0, 0) -> Array(1L, 2L, 0L, 0L),
+      (0, 1) -> Array(3L, 4L, 0L, 0L))
+    val enc = graft.functions.PqEncodeLong(col("qv"), cents, 1, 4)
+    val cached = df.select(col("qv"), enc.as("codes"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      def encodes(p: org.apache.spark.sql.catalyst.plans.QueryPlan[_]) =
+        p.expressions.exists(_.exists(_.isInstanceOf[graft.functions.PqEncodeLong]))
+      val upd = cached.select(col("codes"),
+        posexplode(col("qv")).as(Seq("dg", "qk"))).queryExecution.optimizedPlan
+      val barrier = upd.collectFirst {
+        case r: org.apache.spark.sql.execution.columnar.InMemoryRelation => r
+      }
+      assert(barrier.exists(_.cacheBuilder.cachedPlan.exists(encodes)),
+        s"no cached encode under the posexplode:\n${upd.treeString}")
+      val leaked = upd.collect { case p if encodes(p) => p.nodeName }
+      assert(leaked.isEmpty, s"encode outside the barrier:\n${upd.treeString}")
+    } finally cached.unpersist()
+  }
+
   test("KmvBottomAgg == exact sorted-distinct bottom-k, any partitioning") {
     val k = 16
     val kmv = udaf(new graft.functions.KmvBottomAgg(k),

@@ -275,6 +275,18 @@ class RelationalSpec extends SparkTestBase {
     assert(SparkEntry.entry(spark).count() > 0)
   }
 
+  test("SPARK_GRAFT_ONLY subsets the registry and refuses unknown names") {
+    assert(SparkEntry.only(None).isEmpty)
+    assert(SparkEntry.only(Some(" loan_t1 ,q7_join_anti,, loan_t1"))
+      .map(_.keySet) == Some(Set("loan_t1", "q7_join_anti")))
+    val typo = intercept[IllegalArgumentException] {
+      SparkEntry.only(Some("loan_t1,graph_pagerankk,q_nope"))
+    }
+    assert(typo.getMessage.contains("graph_pagerankk, q_nope"),
+      typo.getMessage)
+    intercept[IllegalArgumentException](SparkEntry.only(Some(" , ")))
+  }
+
   test("TopKByScore aggregator == window top-n on the real corpus") {
     val agg = SparkEntry.queries("q8b_topk_agg")(spark, sf0001)
       .as[(Long, Long, Double, Long)].collect().toSeq

@@ -7,7 +7,8 @@ Reads <verifyOutDir>/<name>/ (Spark parquet) + <verifyOutDir>/oracle_sql.json,
 runs each oracle SQL in DuckDB with the sf parquet tables registered as
 views, and compares: row count, column names (sorted), and exact values
 with columns sorted by name (per the driver contract: "compare sorts
-columns by name before hashing values").
+columns by name before hashing values"). Exits 1 on any failure, and
+when nothing was compared.
 """
 import glob
 import json
@@ -77,6 +78,10 @@ def main(sf_dir, out_dir):
         else:
             n_fail += 1
     print(f"== {n_pass} pass, {n_fail} fail ==")
+    if n_pass + n_fail == 0:
+        # an empty oracle_sql.json proves nothing; never report it clean
+        print("FAIL: nothing compared (oracle_sql.json is empty)")
+        return 1
     return 1 if n_fail else 0
 
 
