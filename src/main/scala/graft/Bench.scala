@@ -38,18 +38,19 @@ object Bench {
     // "errors":[...] and "n_errors"; a recording is only clean when
     // n_errors == 0, and BASELINE.md must not call it clean otherwise.
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
-    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      val elapsed =
+    // one scope per query, released outside the timed region: blocks left
+    // to accumulate over a 50-query suite once slowed dedup_clusters from
+    // 3.1 s to 20 s while its isolated run stayed flat
+    def once(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double =
+      Materialize.scope(spark) {
+        val t0 = System.nanoTime()
         try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
         catch { case e: Throwable =>
           errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName)
             .linesIterator.next().take(160)
           -1.0
         }
-      GraftSession.releaseBlocks(spark) // outside the timed region
-      elapsed
-    }
+      }
 
     // Warmup: exercise scan/shuffle/codegen paths once, uncounted.
     // SPARK_GRAFT_BENCH_WARMUP=0 skips the per-query warmup pass — the

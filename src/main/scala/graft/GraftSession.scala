@@ -64,19 +64,4 @@ object GraftSession {
     s.sparkContext.setLogLevel("WARN")
     s
   }
-
-  /** Drops every cached block between two queries of a sequential run
-    * (Bench, Verify), so each query is measured and run on its own
-    * rather than on a cache of the previous identical plan.
-    * `clearCache` only covers CacheManager (SQL) entries: the
-    * `localCheckpoint` blocks of the iterative ops (resolveClusters
-    * rounds, rangeNtileBucket's pinned range table) live as raw
-    * persistent RDDs and otherwise accumulate until driver GC triggers
-    * ContextCleaner. Across a 50-query suite that growth once slowed
-    * dedup_clusters from 3.1 s to 20 s while its isolated run stayed
-    * flat. */
-  def releaseBlocks(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-  }
 }

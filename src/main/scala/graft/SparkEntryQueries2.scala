@@ -138,14 +138,13 @@ trait SparkEntryQueries2 extends SparkEntryQueries1 {
       // each surviving set feeds ≥3 downstream stages — stage it once
       // (the single-process analog of persisting survivors between
       // pipeline phases, which a 100 TB run does via the snapshot sink)
-      val exactKept = q.join(canon.select("doc_id"), "doc_id")
-        .localCheckpoint()
+      val exactKept = Materialize.barrier(q.join(canon.select("doc_id"), "doc_id"),
+        "pipeline_pretrain_report.exactKept")
       val clusters = Dedup.resolveClusters(
         Dedup.levenshteinRescore(Dedup.minhashLsh(exactKept), exactKept))
-      val fdocs = exactKept.join(clusters, Seq("doc_id"), "left")
+      val fdocs = Materialize.barrier(exactKept.join(clusters, Seq("doc_id"), "left")
         .filter(coalesce(col("cluster_id"), col("doc_id")) === col("doc_id"))
-        .select("doc_id", "text", "source")
-        .localCheckpoint()
+        .select("doc_id", "text", "source"), "pipeline_pretrain_report.fdocs")
       val pack = TextAnalysis.packEfficiency(fdocs, 256)
         .select(col("n_docs").as("n_final"), col("total_tokens"),
           col("n_sequences"), col("waste_bp").as("pack_waste_bp"))

@@ -516,13 +516,12 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     "sketch_cms" -> ((s, dir) => {
       // one corpus scan: the vocabulary-sized count table feeds the
       // sketch (weighted build), the top-20 probe set AND the truth
-      // column; localCheckpoint stops the three consumers from each
+      // column; a barrier stops the three consumers from each
       // replaying the scan+shuffle
-      val counts = t(s, dir, "documents")
+      val counts = Materialize.barrier(t(s, dir, "documents")
         .select(explode(graft.functions.Texty.tokens(col("text"))).as("tk"))
         .filter(col("tk") =!= "")
-        .groupBy("tk").agg(count(lit(1)).as("true_cnt"))
-        .localCheckpoint()
+        .groupBy("tk").agg(count(lit(1)).as("true_cnt")), "sketch_cms.counts")
       val counters = graft.ops.Sketches.cmsBuildWeighted(counts, "tk", "true_cnt")
       val top = counts.orderBy(desc("true_cnt"), asc("tk")).limit(20)
       graft.ops.Sketches.cmsEstimate(counters, top.select("tk"), "tk")
@@ -1073,7 +1072,7 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
       // localCheckpoint: the co-purchase derivation feeds BOTH the edge
       // set and the seed extraction — materialize it once (the
       // sketch_cms shared-scan discipline)
-      val pairs = t(s, dir, "lineitem")
+      val pairs = Materialize.barrier(t(s, dir, "lineitem")
         .groupBy("l_orderkey")
         .agg(slice(array_sort(collect_set(col("l_partkey"))),
           1, CopurchaseMaxBasket).as("parts"))
@@ -1083,8 +1082,7 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
         .groupBy(col("p.da").as("da"), col("p.db").as("db"))
         .agg(count(lit(1)).as("n_orders"))
         .filter(col("n_orders") >= 2)
-        .select("da", "db")
-        .localCheckpoint()
+        .select("da", "db"), "graph_ppr.pairs")
       val seeds = pairs.select(col("da").as("node"))
         .union(pairs.select(col("db").as("node")))
         .filter(col("node") % 101 === 0).distinct()

@@ -107,7 +107,8 @@ object Classifiers {
       ceilingsBp: Map[String, Int] = AucCeilingsBp): DataFrame = {
     import spark.implicits._
     val Array(train, test) = labeled.randomSplit(Array(0.8, 0.2), seed)
-    train.persist(); test.persist()
+    graft.Materialize.cache(train, "Classifiers.trainEval.train")
+    graft.Materialize.cache(test, "Classifiers.trainEval.test")
     val (nTrain, nTest) = (train.count(), test.count())
 
     val lr = new LogisticRegression()
@@ -186,7 +187,7 @@ object Classifiers {
   def modelRoundtrip(spark: SparkSession, labeled: DataFrame,
       seed: Long = Seed): DataFrame = {
     val Array(train, test) = labeled.randomSplit(Array(0.8, 0.2), seed)
-    train.persist()
+    graft.Materialize.cache(train, "Classifiers.modelRoundtrip.train")
     val model = new RandomForestClassifier()
       .setMaxDepth(7).setNumTrees(30).setSeed(seed) // FP10 (:572)
       .fit(train)

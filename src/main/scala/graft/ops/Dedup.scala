@@ -2,8 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.Materialize
 import graft.functions.Texty
 
 /** Deduplication operators for a training-data pipeline (BASELINE.json
@@ -22,11 +22,8 @@ import graft.functions.Texty
   * dropped candidates, never to an executor-OOM quadratic join. Dropped
   * volume is observable in the `*_capped` counters of capStats.
   *
-  * Cache contract: ngramJaccard / minhashLsh persist genuinely-reused
-  * intermediates (the kept-shingle table, signatures) and cannot unpersist
-  * them before the caller materializes the returned lazy DataFrame; a
-  * long-lived session that runs many dedup jobs should call
-  * `spark.catalog.clearCache()` between them (Bench does).
+  * Reused intermediates (kept-shingle tables, signatures) are cached or
+  * checkpointed; their lifetime is [[graft.Materialize]]'s contract.
   */
 object Dedup {
 
@@ -82,9 +79,6 @@ object Dedup {
       .select("doc_id", "s")
   }
 
-  /** See [[Spread]] — shared fan-out for narrow-input/wide-output stages. */
-  private def spread(df: DataFrame): DataFrame = Spread(df)
-
   /** Distinct (doc, shingle-hash) pairs with the same df cap as
     * [[shingles]] — every downstream consumer (Jaccard join keys, MinHash
     * input) only needs shingle *identity*, so a 64-bit hash of the
@@ -103,7 +97,7 @@ object Dedup {
     // the hash kernel, which is scan-bound and cheap relative to the
     // explode's volume). Recompute is the right trade; buildSigIndex
     // keeps its barrier because its stream feeds FOUR consumers.
-    val sh = spread(docs)
+    val sh = Spread(docs)
       .select(col(id).as("doc_id"),
         explode(graft.functions.WordShingleHashes(col(text), k)).as("h"))
     val hot = sh.groupBy("h").agg(count(lit(1)).as("df"))
@@ -121,7 +115,7 @@ object Dedup {
       id: String = "doc_id", text: String = "text"): DataFrame = {
     // same two-pass-by-recompute trade as [[shingleHashes]] (the
     // round-14 barrier experiment measured 0.90× — see there)
-    val sh = spread(docs)
+    val sh = Spread(docs)
       .select(col(id).as("doc_id"),
         explode(graft.functions.WordShinglePolyHashes(col(text), k)).as("h"))
     val hot = sh.groupBy("h").agg(count(lit(1)).as("df"))
@@ -144,12 +138,9 @@ object Dedup {
       minContainBp: Long = 8000): DataFrame = {
     require(minContainBp >= 1 && minContainBp <= 10000,
       s"minContainBp in [1,10000], got $minContainBp")
-    // eager localCheckpoint, not persist (the prefixPairsWithArr
-    // lifecycle discipline): the kept-shingle stream feeds three
-    // consumers, but a persist would outlive this call — repeated ops in
-    // one session accumulate cached tables until the caller clearCache()s;
-    // checkpoint blocks are released when the Dataset is GC'd
-    val sh = shingleHashes(docs, k, maxDf).localCheckpoint()
+    // the kept-shingle stream feeds three consumers
+    val sh = Materialize.barrier(shingleHashes(docs, k, maxDf),
+      "Dedup.containmentPairs.shingles")
     val n = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val common = sh.as("a").join(sh.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
@@ -247,7 +238,8 @@ object Dedup {
     // sides of the self-join): materialize once instead of re-exploding
     // the corpus three times. At cluster scale this is the "write the
     // shingle table once" step of a multi-stage dedup job.
-    val sh = shingleHashes(docs, k, maxDf).persist(StorageLevel.MEMORY_AND_DISK)
+    val sh = Materialize.cache(shingleHashes(docs, k, maxDf),
+      "Dedup.ngramJaccard.shingles")
     val n = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val common = sh.as("a").join(sh.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
@@ -322,9 +314,9 @@ object Dedup {
     // fp-width shuffle discipline ([[exact]]): group membership derives
     // from (md5, id) pairs; text only moves in the rep-side join below
     val ids = docs.select(col("doc_id"), md5(col("text")).as("fp"))
-    val groups = ids.groupBy("fp")
-      .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("m"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val groups = Materialize.cache(ids.groupBy("fp")
+      .agg(min(col("doc_id")).as("rep_id"), count(lit(1)).as("m")),
+      "Dedup.jaccardPrefix.groups")
     // duplicate-free probe costs one fp-width shuffle; the expansion
     // machinery (members checkpoint, rep join) only materializes when
     // duplicates actually exist
@@ -335,9 +327,9 @@ object Dedup {
         .select(col("ra").as("da"), col("rb").as("db"), col("jaccard_bp"))
         .orderBy("da", "db")
     }
-    val members = ids.join(groups.select("fp", "rep_id"), "fp")
-      .select("rep_id", "doc_id")
-      .localCheckpoint() // two consumers: reps filter + both expansions
+    val members = Materialize.barrier( // reps filter + both expansions
+      ids.join(groups.select("fp", "rep_id"), "fp").select("rep_id", "doc_id"),
+      "Dedup.jaccardPrefix.members")
     groups.unpersist()
     val reps = docs.join(
       members.filter(col("doc_id") === col("rep_id")).select("doc_id"),
@@ -375,18 +367,18 @@ object Dedup {
     * verify sides), and materializing lets the wide shingle stream
     * unpersist eagerly. */
   private def rarestFirstArrays(corpus: DataFrame, k: Int): DataFrame = {
-    val sh = spread(corpus)
+    val sh = Materialize.cache(Spread(corpus)
       .select(col("doc_id"),
-        explode(graft.functions.WordShingleHashes(col("text"), k)).as("h"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        explode(graft.functions.WordShingleHashes(col("text"), k)).as("h")),
+      "Dedup.rarestFirstArrays.shingles")
     val dfT = sh.groupBy("h").agg(count(lit(1)).as("df"))
-    val arr = sh.join(dfT, "h")
+    val arr = Materialize.barrier(sh.join(dfT, "h")
       .groupBy("doc_id")
       .agg(sort_array(collect_list(struct(col("df"), col("h")))).as("dh"))
       .select(col("doc_id"),
         transform(col("dh"), x => x("h")).as("hs"),
-        size(col("dh")).cast("long").as("n_sh"))
-      .localCheckpoint()
+        size(col("dh")).cast("long").as("n_sh")),
+      "Dedup.rarestFirstArrays.arr")
     sh.unpersist()
     arr
   }
@@ -463,8 +455,8 @@ object Dedup {
     // Signatures feed banding plus both sides of the candidate re-score
     // join: one narrow row per doc, ideal cache candidate — recomputing
     // would re-run the full shingle explode + 32-way min-agg three times.
-    val sig = minhashSignatures(shinglePolyHashes(docs, k, maxDf))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sig = Materialize.cache(minhashSignatures(
+      shinglePolyHashes(docs, k, maxDf)), "Dedup.minhashLsh.sig")
     lshPairsFromSignatures(sig, maxBucket, minSigMatches)
   }
 
@@ -509,8 +501,8 @@ object Dedup {
 
   private def lshPairsFromSignatures(sig: DataFrame, maxBucket: Int,
       minSigMatches: Int): DataFrame = {
-    val kept = bandedKeys(sig, maxBucket)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val kept = Materialize.cache(bandedKeys(sig, maxBucket),
+      "Dedup.lshPairsFromSignatures.kept")
     val cand = kept.as("a").join(kept.as("b"),
         col("a.band_idx") === col("b.band_idx") &&
           col("a.band_hash") === col("b.band_hash") &&
@@ -592,13 +584,11 @@ object Dedup {
     // into sides by membership (id-width join, no parity assumption)
     val union = corpusNN.select(col(id).as("doc_id"), col(text).as("text"))
       .unionByName(batchNN.select(col(id).as("doc_id"), col(text).as("text")))
-    // eager localCheckpoint, not persist ([[containmentPairs]] lifecycle
-    // discipline): sig feeds banding + both verify sides, kept feeds both
-    // probe sides, but persisted blocks must not outlive this call
-    val sig = minhashSignatures(shinglePolyHashes(union, k, maxDf))
-      .localCheckpoint()
-    val kept = bandedKeys(sig, maxBucket)
-      .localCheckpoint()
+    // sig feeds banding + both verify sides, kept feeds both probe sides
+    val sig = Materialize.barrier(minhashSignatures(
+      shinglePolyHashes(union, k, maxDf)), "Dedup.ingestGate.sig")
+    val kept = Materialize.barrier(bandedKeys(sig, maxBucket),
+      "Dedup.ingestGate.kept")
     val batchIds = batchNN.select(col(id).as("doc_id"))
     val keptB = kept.join(batchIds, "doc_id")
     val keptC = kept.join(batchIds, Seq("doc_id"), "left_anti")
@@ -685,23 +675,22 @@ object Dedup {
     c.select(md5(col(text)).as("fp"), col(id).as("cid"))
       .groupBy("fp").agg(min("cid").as("exact_id"))
       .write.mode("overwrite").parquet(s"$path/fp")
-    val sh = spread(c.select(col(id).as("doc_id"), col(text).as("text")))
-      .select(col("doc_id"),
-        explode(graft.functions.WordShinglePolyHashes(col("text"), k)).as("h"))
-      .localCheckpoint() // feeds the hot list + the kept stream
-    val hot = sh.groupBy("h").agg(count(lit(1)).as("df"))
-      .filter(col("df") > maxDf).select("h")
-      .localCheckpoint() // feeds the sink + the anti join
+    val sh = Materialize.barrier( // feeds the hot list + the kept stream
+      Spread(c.select(col(id).as("doc_id"), col(text).as("text")))
+        .select(col("doc_id"),
+          explode(graft.functions.WordShinglePolyHashes(col("text"), k)).as("h")),
+      "Dedup.buildSigIndex.shingles")
+    val hot = Materialize.barrier( // feeds the sink + the anti join
+      sh.groupBy("h").agg(count(lit(1)).as("df"))
+        .filter(col("df") > maxDf).select("h"), "Dedup.buildSigIndex.hot")
     hot.write.mode("overwrite").parquet(s"$path/hot_shingles")
-    val sig = minhashSignatures(
-      sh.join(broadcast(hot), Seq("h"), "left_anti"))
-      .localCheckpoint() // feeds the sink + banding
+    val sig = Materialize.barrier(minhashSignatures( // sink + banding
+      sh.join(broadcast(hot), Seq("h"), "left_anti")), "Dedup.buildSigIndex.sig")
     sig.write.mode("overwrite").parquet(s"$path/sig")
-    val banded = bandKeysRaw(sig).localCheckpoint()
-    val hotBuckets = banded.groupBy("band_idx", "band_hash")
+    val banded = Materialize.barrier(bandKeysRaw(sig), "Dedup.buildSigIndex.banded")
+    val hotBuckets = Materialize.barrier(banded.groupBy("band_idx", "band_hash")
       .agg(count(lit(1)).as("bs")).filter(col("bs") > maxBucket)
-      .select("band_idx", "band_hash")
-      .localCheckpoint()
+      .select("band_idx", "band_hash"), "Dedup.buildSigIndex.hotBuckets")
     hotBuckets.write.mode("overwrite").parquet(s"$path/hot_buckets")
     banded
       .join(broadcast(hotBuckets), Seq("band_idx", "band_hash"), "left_anti")
@@ -731,12 +720,11 @@ object Dedup {
       .groupBy("fp").agg(min("cid").as("exact_id"))
       .write.mode("append").parquet(s"$path/fp")
     val hot = spark.read.parquet(s"$path/hot_shingles")
-    val sh = spread(a.select(col(id).as("doc_id"), col(text).as("text")))
+    val sh = Spread(a.select(col(id).as("doc_id"), col(text).as("text")))
       .select(col("doc_id"),
         explode(graft.functions.WordShinglePolyHashes(col("text"), k)).as("h"))
-    val sig = minhashSignatures(
-      sh.join(broadcast(hot), Seq("h"), "left_anti"))
-      .localCheckpoint() // feeds the sig sink + banding
+    val sig = Materialize.barrier(minhashSignatures( // sig sink + banding
+      sh.join(broadcast(hot), Seq("h"), "left_anti")), "Dedup.appendToSigIndex.sig")
     sig.write.mode("append").parquet(s"$path/sig")
     val hotBuckets = spark.read.parquet(s"$path/hot_buckets")
     bandKeysRaw(sig)
@@ -760,12 +748,11 @@ object Dedup {
     val bkeep = bfp.groupBy("fp").agg(min("doc_id").as("batch_keep_id"))
     val cfp = spark.read.parquet(s"$path/fp")
     val hot = spark.read.parquet(s"$path/hot_shingles")
-    val sh = spread(b.select(col(id).as("doc_id"), col(text).as("text")))
+    val sh = Spread(b.select(col(id).as("doc_id"), col(text).as("text")))
       .select(col("doc_id"),
         explode(graft.functions.WordShinglePolyHashes(col("text"), k)).as("h"))
-    val bsig = minhashSignatures(
-      sh.join(broadcast(hot), Seq("h"), "left_anti"))
-      .localCheckpoint() // feeds banding + the verify side
+    val bsig = Materialize.barrier(minhashSignatures( // banding + verify side
+      sh.join(broadcast(hot), Seq("h"), "left_anti")), "Dedup.probeSigIndex.bsig")
     val hotBuckets = spark.read.parquet(s"$path/hot_buckets")
     val bBand = bandKeysRaw(bsig)
       .join(broadcast(hotBuckets), Seq("band_idx", "band_hash"), "left_anti")
@@ -812,8 +799,8 @@ object Dedup {
   def minhashRecall(docs: DataFrame, k: Int = 3, maxDf: Int = 100,
       maxBucket: Int = 50, minSigMatches: Int = 16,
       minJaccardBp: Long = 5000): DataFrame = {
-    val sh = shinglePolyHashes(docs, k, maxDf)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sh = Materialize.cache(shinglePolyHashes(docs, k, maxDf),
+      "Dedup.minhashRecall.shingles")
     val n = sh.groupBy("doc_id").agg(count(lit(1)).as("n_sh"))
     val common = sh.as("a").join(sh.as("b"),
         col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
@@ -825,7 +812,7 @@ object Dedup {
       .filter(Texty.ratioBp(col("c"), col("na") + col("nb") - col("c"))
         >= minJaccardBp)
       .select("da", "db")
-    val sig = minhashSignatures(sh).persist(StorageLevel.MEMORY_AND_DISK)
+    val sig = Materialize.cache(minhashSignatures(sh), "Dedup.minhashRecall.sig")
     val cand = lshPairsFromSignatures(sig, maxBucket, minSigMatches)
       .select("da", "db")
     // ONE full-outer join + ONE aggregate reads each pair pipeline
@@ -871,8 +858,8 @@ object Dedup {
     // pairs is typically an expensive derived table (e.g. ngramJaccard):
     // materialize it ONCE — the symmetric closure and every round read
     // the cache, not the upstream plan.
-    val p = pairs.select(col(a).as("src"), col(b).as("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val p = Materialize.cache(pairs.select(col(a).as("src"), col(b).as("dst")),
+      "Dedup.resolveClusters.pairs")
     // Round-14 shape (guide §2.4, §3.1): the symmetric closure is
     // hash-clustered by src ONCE; each round then broadcast-joins the
     // |V|-sized label table onto it (the pagerankInt argument: labels
@@ -894,10 +881,10 @@ object Dedup {
     // ALIAS inside agg() only resolves through implicit lateral-column-
     // alias resolution (a default-on conf), while grouping EXPRESSIONS
     // are always referenceable.
-    var labels = sym.groupBy(col("src"))
+    var labels = Materialize.barrier(sym.groupBy(col("src"))
       .agg(least(min(col("dst")), col("src")).as("label"))
-      .select(col("src").as("node"), col("label"))
-      .localCheckpoint()
+      .select(col("src").as("node"), col("label")),
+      "Dedup.resolveClusters.round0")
     def labelSum(l: DataFrame): java.math.BigDecimal =
       l.agg(sum(col("label").cast(org.apache.spark.sql.types.DecimalType(38, 0))))
         .head.getDecimal(0)
@@ -927,10 +914,9 @@ object Dedup {
           col("label") === col("lbl"))
         .select(col("node"), col("gl").as("label"))
       val selfRows = labels.select(col("label").as("node"), col("label"))
-      val updated = nbr.unionByName(jump).unionByName(selfRows)
-        .groupBy(col("node"))
-        .agg(min("label").as("label"))
-        .localCheckpoint()
+      val updated = Materialize.barrier(nbr.unionByName(jump)
+        .unionByName(selfRows).groupBy(col("node")).agg(min("label").as("label")),
+        s"Dedup.resolveClusters.round${i + 1}")
       val s = labelSum(updated)
       labels = updated
       converged = (s == null && prevSum == null) ||
@@ -958,7 +944,7 @@ object Dedup {
     * Null-text docs produce no row, matching the explode-based semantics. */
   def simhash(docs: DataFrame, id: String = "doc_id",
       text: String = "text"): DataFrame =
-    spread(docs)
+    Spread(docs)
       .filter(col(text).isNotNull)
       .select(col(id).as("doc_id"),
         graft.functions.SimHash60(col(text)).as("simhash"))
@@ -979,9 +965,9 @@ object Dedup {
     val hotChunks = blocked.groupBy("chunk_idx", "chunk")
       .agg(count(lit(1)).as("bs")).filter(col("bs") > maxBucket)
       .select("chunk_idx", "chunk")
-    val kept = blocked
-      .join(broadcast(hotChunks), Seq("chunk_idx", "chunk"), "left_anti")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val kept = Materialize.cache(blocked
+      .join(broadcast(hotChunks), Seq("chunk_idx", "chunk"), "left_anti"),
+      "Dedup.simhashPairs.kept")
     kept.as("a").join(kept.as("b"),
         col("a.chunk_idx") === col("b.chunk_idx") &&
           col("a.chunk") === col("b.chunk") &&
@@ -1110,10 +1096,10 @@ object Dedup {
     // shingle df cap: distinct (doc, poly-hash) pairs — ONE explode,
     // persisted; both the hot-list report and the kept table (feeding
     // the minhash chain) derive from it rather than re-exploding
-    val sh = spread(docs)
+    val sh = Materialize.cache(Spread(docs)
       .select(col("doc_id"),
-        explode(graft.functions.WordShinglePolyHashes(col("text"), k)).as("h"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        explode(graft.functions.WordShinglePolyHashes(col("text"), k)).as("h")),
+      "Dedup.capStats.shingles")
     val hot = sh.groupBy("h").agg(count(lit(1)).as("sz"))
       .filter(col("sz") > maxDf)
     val shingleDf = hot

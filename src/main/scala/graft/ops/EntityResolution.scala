@@ -93,11 +93,9 @@ object EntityResolution {
     * Ranks are identical to a plain `row_number() OVER (ORDER BY name,
     * ties)`, which is what lets a second engine recompute them.
     *
-    * Same EAGER-materialization contract as
-    * [[Features.withRunningTotal]]: the input — narrow (name, side,
-    * key) rank rows, never record payloads — is localCheckpoint'ed at
-    * construction for the three passes; non-fault-tolerant blocks,
-    * reliable `checkpoint()` is the cluster-grade swap. The
+    * As in [[Features.withRunningTotal]], the input — narrow (name,
+    * side, key) rank rows, never record payloads — is a
+    * [[graft.Materialize]] barrier for the three passes. The
     * sortedNeighborhood call site ALSO checkpoints this function's
     * OUTPUT — not redundant (ADVICE r13): the inner barrier covers the
     * 3 input passes, the outer covers the 2 join-side consumers of the
@@ -107,7 +105,7 @@ object EntityResolution {
     // Three passes over `rows` (quantile action, local window, counts)
     // — materialize once, the rangeNtileBucket/withRunningTotal
     // discipline.
-    val rowsIn = rows.localCheckpoint()
+    val rowsIn = graft.Materialize.barrier(rows, "EntityResolution.globalRank.rows")
     val packed = (1 to 6).foldLeft(lit(0L)) { (acc, i) =>
       acc * 256L + coalesce(ascii(substring(col("name"), i, 1)), lit(0)) }
     // base-256 packing is monotone vs lexicographic order ONLY while
@@ -169,9 +167,9 @@ object EntityResolution {
         col("cand_key").as("key"))
       .unionAll(queries.select(col("dirty").as("name"), lit("q").as("side"),
         col("q_key").as("key")))
-    // ranked feeds both join sides: materialize once (eager
-    // localCheckpoint — the containment/ingestGate lineage discipline)
-    val ranked = globalRank(unioned, Seq("side", "key")).localCheckpoint()
+    // ranked feeds both join sides: materialize once
+    val ranked = graft.Materialize.barrier(globalRank(unioned, Seq("side", "key")),
+      "EntityResolution.sortedNeighborhood.ranked")
     val ents = ranked.filter(col("side") === "e")
       .select(col("rn"), col("key").as("cand_key"), col("name"))
     val probes = ranked.filter(col("side") === "q")

@@ -113,11 +113,10 @@ object Features {
     * Equal values always share a slice (cuts are on `v` alone), so slice
     * boundaries respect the total order.
     *
-    * Same EAGER-materialization contract as [[withRunningTotal]]
-    * (input checkpointed at construction; size = the caller's derived
-    * frame — RFM per-user rollups, quantile-bucket feature rows;
-    * non-fault-tolerant blocks, reliable `checkpoint()` is the
-    * cluster-grade swap; PlanShapeSpec pins one block set per pass). */
+    * Like [[withRunningTotal]], the input is a [[graft.Materialize]]
+    * barrier (size = the caller's derived frame — RFM per-user rollups,
+    * quantile-bucket feature rows); PlanShapeSpec pins one block set per
+    * pass. */
   def rangeNtileBucket(df: DataFrame, v: String, tieKey: String,
       n: Int, out: String = "bucket"): DataFrame = {
     require(n >= 1, s"ntile requires n >= 1, got $n")
@@ -128,7 +127,7 @@ object Features {
     // input re-ran pass 1 (join + window + its own quantile job) per
     // read — the whole events scan replayed ~a dozen times (measured
     // 3.9 s → 2.0 s at sf0.1 with the checkpoints).
-    val in = df.localCheckpoint()
+    val in = graft.Materialize.barrier(df, "Features.rangeNtileBucket.in")
     val ranged = in.withColumn("__pid",
       when(col(v).isNull, lit(-1)).otherwise(sliceId(in, v)))
     val wLocal = Window.partitionBy("__pid").orderBy(col(v), col(tieKey))
@@ -192,23 +191,17 @@ object Features {
     * `orderKey` must be numeric, non-null and UNIQUE — equal keys would
     * make the running total order-dependent.
     *
-    * MATERIALIZATION CONTRACT (round 14, VERDICT r13 item 6): this
-    * function EAGERLY `localCheckpoint()`s its input at construction
-    * time — even plan-only consumers execute the upstream lineage. The
-    * stored size is the INPUT FRAME, which for every registered caller
-    * is an already-reduced table (sessionize boundary deltas, packed
-    * rank keys, per-doc aggregates — NOT raw events; the heaviest is
-    * events_concurrency's distinct boundary-timestamp deltas, ≤ 2 rows
-    * per session). Cluster caveat: localCheckpoint blocks are
-    * non-fault-tolerant — a lost executor FAILS the query instead of
-    * recomputing (Spark's own unpersist warning). That is the chosen
-    * trade vs re-running the upstream 3× (or ~5× through chained
-    * callers — the round-13 measurement); a deployment that cannot
-    * accept it should switch these two call sites to reliable
-    * `checkpoint()` against a checkpoint dir (same values, adds an HDFS
-    * round-trip) — nothing else in the construction changes.
-    * PlanShapeSpec pins that all passes read ONE checkpointed block
-    * set (the round-13 win cannot silently regress to re-scans). */
+    * The input is an eager [[graft.Materialize]] barrier (round 14,
+    * VERDICT r13 item 6), so even plan-only consumers execute the
+    * upstream lineage. The stored size is the INPUT FRAME, which for
+    * every registered caller is an already-reduced table (sessionize
+    * boundary deltas, packed rank keys, per-doc aggregates — NOT raw
+    * events; the heaviest is events_concurrency's distinct
+    * boundary-timestamp deltas, ≤ 2 rows per session). That is the
+    * chosen trade vs re-running the upstream 3× (or ~5× through chained
+    * callers — the round-13 measurement). PlanShapeSpec pins that all
+    * passes read ONE checkpointed block set (the round-13 win cannot
+    * silently regress to re-scans). */
   def withRunningTotal(df: DataFrame, orderKey: String, value: String,
       out: String): DataFrame = {
     // The construction reads its input THREE times by design — the
@@ -220,7 +213,7 @@ object Features {
     // replayed 5× through this function (3 passes here × 2 consumer
     // references upstream), 9.3 s cold → 3.0 s with the checkpoints
     // (guide §1.2 step 1 — don't compute things twice, let alone 5×).
-    val in = df.localCheckpoint()
+    val in = graft.Materialize.barrier(df, "Features.withRunningTotal.in")
     val ranged = in.withColumn("__pid", sliceId(in, orderKey))
     val wLocal = Window.partitionBy("__pid").orderBy(orderKey)
       .rowsBetween(Window.unboundedPreceding, 0)

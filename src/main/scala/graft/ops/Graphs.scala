@@ -2,7 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+
+import graft.Materialize
 
 /** Iterative graph analytics over derived edge lists (EXT — SURVEY.md
   * §2h). The curation use-case: centrality as a quality/authority
@@ -52,11 +53,10 @@ object Graphs {
     * (integer sums/min/max), so oracles are unaffected. */
   private[graft] def prepEdges(sym: DataFrame, key: String,
       strategy: String, clusterBy: Option[String] = None): DataFrame =
-    if (strategy == "broadcast")
-      clusterBy.fold(sym)(k => sym.repartition(col(k)))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    else sym.repartition(col(key)).sortWithinPartitions(key)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    Materialize.cache(
+      if (strategy == "broadcast") clusterBy.fold(sym)(k => sym.repartition(col(k)))
+      else sym.repartition(col(key)).sortWithinPartitions(key),
+      "Graphs.prepEdges")
 
   /** Per-round edge ⋈ |V|-state join under the chosen strategy. */
   private[graft] def stateJoin(edges: DataFrame, state: DataFrame,
@@ -122,8 +122,8 @@ object Graphs {
     val symBare = edges.select(col(a).as("src"), col(b).as("dst"))
       .union(edges.select(col(b).as("src"), col(a).as("dst")))
       .distinct()
-    val deg = symBare.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val deg = Materialize.cache(symBare.groupBy("src")
+      .agg(count(lit(1)).as("outdeg")), "Graphs.pagerankInt.deg")
     // dst's outdeg rides ON the cached edge table (one |E| ⋈ |V| attach
     // paid ONCE): the per-round aggregate then carries it through
     // (all-equal within a dst group), so each round is ONE join + one
@@ -137,22 +137,21 @@ object Graphs {
     val base = scale * (10000L - dampBp) / 10000L
     // state carries outdeg so each round's contribution is a map-side
     // projection of the |V|-sized state, never an edge-sized join
-    var state = deg.select(col("src").as("node"), lit(scale).as("rank"),
-      col("outdeg")).localCheckpoint()
+    var state = Materialize.barrier(deg.select(col("src").as("node"),
+      lit(scale).as("rank"), col("outdeg")), "Graphs.pagerankInt.round0")
     var i = 0
     while (i < iters) {
       val contrib = state.select(col("node").as("src"),
         expr("rank div outdeg").as("c"))
-      state = stateJoin(sym, contrib, "src", strategy)
+      state = Materialize.barrier(stateJoin(sym, contrib, "src", strategy)
         .groupBy(col("dst").as("node"))
         .agg(expr(s"CAST($base AS BIGINT) + sum(c) * $dampBp div 10000")
           .as("rank"),
-          max("dst_outdeg").as("outdeg"))
-        .localCheckpoint()
+          max("dst_outdeg").as("outdeg")), s"Graphs.pagerankInt.round${i + 1}")
       i += 1
     }
-    // state is localCheckpoint'ed (materialized), so both caches can be
-    // released before returning — repeated calls must not leak blocks
+    // state is a barrier, so both caches can be released before
+    // returning — repeated calls must not leak blocks
     sym.unpersist()
     deg.unpersist()
     state.select("node", "rank").orderBy("node")
@@ -177,8 +176,8 @@ object Graphs {
     val symBare = edges.select(col(a).as("src"), col(b).as("dst"))
       .union(edges.select(col(b).as("src"), col(a).as("dst")))
       .distinct()
-    val deg = symBare.groupBy("src").agg(count(lit(1)).as("outdeg"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val deg = Materialize.cache(symBare.groupBy("src")
+      .agg(count(lit(1)).as("outdeg")), "Graphs.pprInt.deg")
     val base = scale * (10000L - dampBp) / 10000L
     val seedFlag = seeds.select(col("node")).distinct()
       .withColumn("__seed", lit(1L))
@@ -199,22 +198,20 @@ object Graphs {
         col("outdeg").as("dst_outdeg"),
         col("seed_base").as("dst_seed_base"))), "dst"),
       "src", strategy, clusterBy = Some("dst"))
-    var state = nodes
+    var state = Materialize.barrier(nodes
       .withColumn("rank",
         when(col("seed_base") > 0, lit(scale)).otherwise(lit(0L)))
-      .select("node", "rank", "outdeg", "seed_base")
-      .localCheckpoint()
+      .select("node", "rank", "outdeg", "seed_base"), "Graphs.pprInt.round0")
     var i = 0
     while (i < iters) {
       val contrib = state.select(col("node").as("src"),
         expr("rank div outdeg").as("c"))
-      state = stateJoin(sym, contrib, "src", strategy)
+      state = Materialize.barrier(stateJoin(sym, contrib, "src", strategy)
         .groupBy(col("dst").as("node"))
         .agg(expr(s"max(dst_seed_base) + sum(c) * $dampBp div 10000")
           .as("rank"),
           max("dst_outdeg").as("outdeg"),
-          max("dst_seed_base").as("seed_base"))
-        .localCheckpoint()
+          max("dst_seed_base").as("seed_base")), s"Graphs.pprInt.round${i + 1}")
       i += 1
     }
     sym.unpersist()
@@ -261,7 +258,6 @@ object Graphs {
     // derivation (scan → basket → pair explode → dedup) replays per
     // reference (measured: a 147-node physical plan re-running the
     // lineitem scan 6x, 5.3 s → 2.6 s at sf0.1 with the checkpoints).
-    // Same lineage discipline as [[pagerankInt]]'s sym/deg persists.
     val canon = canonEdges(edges, a, b)
     trianglesOnCanon(canon)
   }
@@ -269,11 +265,10 @@ object Graphs {
   /** Canonicalized (u < v, deduped, localCheckpointed) edge table —
     * shared by the exact and sampled triangle forms. */
   private def canonEdges(edges: DataFrame, a: String, b: String): DataFrame =
-    edges
+    Materialize.barrier(edges
       .select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .localCheckpoint()
+      .distinct(), "Graphs.canonEdges")
 
   /** The degree-ordered edge-iterator core over a [[canonEdges]] table
     * (see [[triangleCounts]] for the algorithm and shuffle budget). */
@@ -296,9 +291,8 @@ object Graphs {
     // Nodes with no out-edges (global rank maxima) have no adjacency row:
     // the inner join drops edges whose dst has none — correct, those
     // edges close no triangle at this orientation position.
-    val adj = oriented.groupBy(col("src").as("node"))
-      .agg(collect_list(col("dst")).as("nbrs"))
-      .localCheckpoint()
+    val adj = Materialize.barrier(oriented.groupBy(col("src").as("node"))
+      .agg(collect_list(col("dst")).as("nbrs")), "Graphs.trianglesOnCanon.adj")
     val tris = adj
       .select(col("node").as("src"), col("nbrs").as("nv"),
         explode(col("nbrs")).as("dst"))
@@ -426,17 +420,17 @@ object Graphs {
     // round-5 shape localCheckpoint'ed the growing visited table AGAIN
     // every round (a second materialization of O(|V|) rows × rounds for
     // data that was already on the block store)
-    var frontiers = List(seeds.select(col(seedCol).as("node")).distinct()
-      .withColumn("dist", lit(0L)).localCheckpoint())
+    var frontiers = List(Materialize.barrier(seeds.select(col(seedCol).as("node"))
+      .distinct().withColumn("dist", lit(0L)), "Graphs.bfsHops.hop0"))
     def visited = frontiers.reduce(_.unionByName(_))
     var h = 1
     while (h <= maxHops) {
       val cand = stateJoin(sym,
           frontiers.head.select(col("node").as("src")), "src", strategy)
         .select(col("dst").as("node")).distinct()
-      val next = antiJoin(cand, visited.select("node"), Seq("node"), strategy)
-        .withColumn("dist", lit(h.toLong))
-        .localCheckpoint()
+      val next = Materialize.barrier(antiJoin(cand, visited.select("node"),
+        Seq("node"), strategy).withColumn("dist", lit(h.toLong)),
+        s"Graphs.bfsHops.hop$h")
       frontiers ::= next
       h += 1
     }
@@ -508,18 +502,18 @@ object Graphs {
         .union(edges.select(col(b).as("src"), col(a).as("dst")))
         .distinct(),
       "src", strategy, clusterBy = Some("dst"))
-    var state = sym.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node")).localCheckpoint()
+    var state = Materialize.barrier(sym.select(col("src").as("node")).distinct()
+      .withColumn("label", col("node")), "Graphs.labelProp.round0")
     var i = 0
     while (i < rounds) {
-      state = stateJoin(sym, state.withColumnRenamed("node", "src"),
-          "src", strategy)
+      state = Materialize.barrier(stateJoin(sym,
+          state.withColumnRenamed("node", "src"), "src", strategy)
         .groupBy(col("dst").as("node"), col("label"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy("node")
         .agg(max(struct(col("cnt"), negate(col("label")).as("nl"))).as("m"))
-        .select(col("node"), negate(col("m.nl")).as("label"))
-        .localCheckpoint()
+        .select(col("node"), negate(col("m.nl")).as("label")),
+        s"Graphs.labelProp.round${i + 1}")
       i += 1
     }
     sym.unpersist()
@@ -726,17 +720,15 @@ object Graphs {
     // broadcast semi-joins preserve the clustering, and localCheckpoint
     // carries partitioning through LogicalRDD — so no round re-shuffles
     // the (shrinking) edge table at all.
-    sym = sym.union(sym.select(col("dst").as("src"), col("src").as("dst")))
-      .repartition(col("src"))
-      .localCheckpoint()
+    sym = Materialize.barrier(sym.union(sym.select(col("dst").as("src"),
+      col("src").as("dst"))).repartition(col("src")), "Graphs.kCore.round0")
     var i = 0
     while (i < rounds) {
       val keep = sym.groupBy("src").agg(count(lit(1)).as("d"))
         .filter(col("d") >= k).select("src")
-      sym = stateJoin(stateJoin(sym, keep, "src", strategy),
+      sym = Materialize.barrier(stateJoin(stateJoin(sym, keep, "src", strategy),
           keep.withColumnRenamed("src", "dst"), "dst", strategy)
-        .select("src", "dst")
-        .localCheckpoint()
+        .select("src", "dst"), s"Graphs.kCore.round${i + 1}")
       i += 1
     }
     sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
@@ -781,9 +773,9 @@ object Graphs {
       "src", strategy, clusterBy = Some("dst"))
     val seeds = sym.select(col("src").as("node")).distinct()
       .orderBy("node").limit(nSeeds)
-    var frontiers = List(seeds.select(col("node").as("seed"))
+    var frontiers = List(Materialize.barrier(seeds.select(col("node").as("seed"))
       .withColumn("node", col("seed"))
-      .withColumn("dist", lit(0L)).localCheckpoint())
+      .withColumn("dist", lit(0L)), "Graphs.harmonicCentrality.hop0"))
     def visited = frontiers.reduce(_.unionByName(_))
     var h = 1
     while (h <= maxHops) {
@@ -791,10 +783,9 @@ object Graphs {
           frontiers.head.select(col("seed"), col("node").as("src")),
           "src", strategy)
         .select(col("seed"), col("dst").as("node")).distinct()
-      val next = antiJoin(cand, visited.select("seed", "node"),
+      val next = Materialize.barrier(antiJoin(cand, visited.select("seed", "node"),
           Seq("seed", "node"), strategy)
-        .withColumn("dist", lit(h.toLong))
-        .localCheckpoint()
+        .withColumn("dist", lit(h.toLong)), s"Graphs.harmonicCentrality.hop$h")
       frontiers ::= next
       h += 1
     }

@@ -75,25 +75,6 @@ object Multimodal {
 
   case class DecodedImage(doc_id: Long, width: Int, height: Int, px_sum: Long)
 
-  /** doc_id stream spread to session parallelism before a synthesis /
-    * decode kernel: a single-file corpus scan arrives in 1-2 input
-    * partitions, and every per-payload codec call (ImageIO PNG/GIF
-    * encode+decode, javax.sound WAV synthesis — ~1 ms each) would run
-    * on 1-2 cores — measured 4.9 s for mm_decode_real at sf0.1, almost
-    * all of it serial codec time (round 14; the same single-file-scan
-    * fix ivfNearDup's kernel input carries). One narrow 8-byte-row
-    * exchange; per-row results are partition-independent and every
-    * query ends in a total order, so oracles are unaffected.
-    * IMAGE/GIF kernels only: the javax.sound WAV paths measured 2-3x
-    * SLOWER spread across 32 cores (AudioSystem's provider lookup
-    * serializes on a global registry lock, so concurrency adds pure
-    * contention) — the audio sites keep the narrow scan. */
-  private def spreadDocIds(docs: DataFrame): DataFrame = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"))
-      .repartition(docs.sparkSession.sparkContext.defaultParallelism)
-  }
-
 
   /** ====== REAL KERNEL ====== Deterministic PNG synthesis via
     * `javax.imageio` (in the JDK — needs no external codec): a W×H 8-bit
@@ -130,7 +111,7 @@ object Multimodal {
     * kernel here) — a real binary media column derived from doc_id. */
   def synthPng(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    spreadDocIds(docs).as[Long]
+    Spread(docs.select("doc_id")).as[Long]
       .mapPartitions { it =>
         it.grouped(DecodeBatch).flatMap(_.map(id => (id, synthPngBytes(id))))
       }.toDF("doc_id", "payload")
@@ -744,7 +725,7 @@ object Multimodal {
     * sample every 2nd frame through the batched reader kernel. */
   def framesReal(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    val payloads = spreadDocIds(docs).as[Long]
+    val payloads = Spread(docs.select("doc_id")).as[Long]
       .mapPartitions(it => it.grouped(DecodeBatch)
         .flatMap(_.map(id => (id, synthGifBytes(id)))))
       .toDF("doc_id", "payload")
@@ -812,7 +793,7 @@ object Multimodal {
   def shotDetect(spark: SparkSession, docs: DataFrame,
       threshold: Int = 50): DataFrame = {
     import spark.implicits._
-    val means = spreadDocIds(docs).as[Long]
+    val means = Spread(docs.select("doc_id")).as[Long]
       .mapPartitions { it =>
         javax.imageio.ImageIO.setUseCache(false)
         val reader = javax.imageio.ImageIO
@@ -926,7 +907,7 @@ object Multimodal {
     * cannot. */
   def dhashReal(spark: SparkSession, docs: DataFrame): DataFrame = {
     import spark.implicits._
-    spreadDocIds(docs).as[Long]
+    Spread(docs.select("doc_id")).as[Long]
       .mapPartitions { it =>
         javax.imageio.ImageIO.setUseCache(false)
         it.grouped(DecodeBatch).flatMap(_.flatMap { id =>

@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.{ArrayDot, Portable, Scored, TopKByScore}
 
 /** Similarity search over an embedding column `Array[Float]`
@@ -1117,9 +1118,9 @@ object Similarity {
     // the difference between minutes and seconds. Fit RESULTS are
     // partition-independent (portable integer aggregates, ordered
     // seed selection), so every baked oracle is unaffected.
-    val fs = fsIn.select(col("vec_id"), col("qv"))
-      .repartition(fsIn.sparkSession.sparkContext.defaultParallelism)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val fs = Materialize.cache(fsIn.select(col("vec_id"), col("qv"))
+      .repartition(fsIn.sparkSession.sparkContext.defaultParallelism),
+      "Similarity.fitOnSample.sample")
     // a sample smaller than codebookSize seeds fewer codewords (the
     // SQL twin's LIMIT semantics, and what a 251-point sample honestly
     // supports — the float fit it replaced padded duplicate centroids)
@@ -1161,8 +1162,8 @@ object Similarity {
       // values are unchanged (deterministic kernel), and the cached
       // frame is sample-sized and released the moment the round's
       // aggregate is collected.
-      val encoded = fs.select(col("qv"), enc.as("codes"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val encoded = Materialize.cache(fs.select(col("qv"), enc.as("codes")),
+        "Similarity.fitOnSample.encoded")
       val upd = encoded
         .select(col("codes"), posexplode(col("qv")).as(Seq("dg", "qk")))
         .select(expr(s"CAST(dg div $subDim AS INT)").as("s"),

@@ -12,7 +12,15 @@ import org.apache.spark.sql.DataFrame
   * force AQE to materialize every upstream stage of a derived input
   * just to read a number): few-or-no files → repartition (the shuffle
   * moves only the raw rows); many files means the scan is already
-  * parallel (the real-scale case) → no-op. */
+  * parallel (the real-scale case) → no-op.
+  *
+  * The multimodal image/GIF kernels spread their doc_id stream: ~1 ms
+  * of ImageIO codec work per payload ran on 1-2 cores, 4.9 s for
+  * mm_decode_real at sf0.1 (round 14). The javax.sound WAV paths
+  * measured 2-3x SLOWER spread across 32 cores (AudioSystem's provider
+  * lookup serializes on a global registry lock) and keep the narrow
+  * scan. Per-row results are partition-independent and every query
+  * ends in a total order, so oracles are unaffected. */
 private[graft] object Spread {
   def apply(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism

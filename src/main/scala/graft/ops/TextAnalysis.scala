@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Materialize
 import graft.functions.Texty
 
 /** Text-analysis operators for a training-data pipeline (BASELINE.json
@@ -40,23 +41,17 @@ object TextAnalysis {
     * low hundreds of MB broadcast — generous for any real eval suite,
     * far from the wall. Same guard discipline as bruteNearDup's
     * maxRows, except degrading to the slower-but-safe plan instead of
-    * refusing.
-    *
-    * Cache contract (same as [[graft.ops.Dedup]]'s): the distinct bench
-    * shingles feed the guard count AND the join, so they are persisted
-    * and cannot be unpersisted before the caller materializes the
-    * result — long-lived sessions should `spark.catalog.clearCache()`
-    * between pipeline runs (Bench/Verify do). */
+    * refusing. The distinct bench shingles feed the guard count AND the
+    * join, so they are cached ([[graft.Materialize]]). */
   def contamination(corpus: DataFrame, bench: DataFrame, k: Int = 3,
       minShared: Int = 3, id: String = "doc_id",
       text: String = "text",
       maxBroadcastShingles: Long = 5000000L): DataFrame = {
     val sh = corpus.select(col(id),
       explode(graft.functions.WordShingles(col(text), k)).as("s"))
-    val bsh = bench
+    val bsh = Materialize.cache(bench
       .select(explode(graft.functions.WordShingles(col(text), k)).as("s"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct(), "TextAnalysis.contamination.benchShingles")
     val probe =
       if (bsh.count() <= maxBroadcastShingles) broadcast(bsh) else bsh
     sh.join(probe, Seq("s"))
@@ -836,7 +831,7 @@ object TextAnalysis {
       .filter(col("tok") =!= "")
     // pass 1: per-partition MG candidates + token tally, in ONE scan;
     // the tiny summary feeds two consumers, so materialize it once
-    val summary = toks.as[String].mapPartitions { it =>
+    val summary = Materialize.barrier(toks.as[String].mapPartitions { it =>
       val m = scala.collection.mutable.HashMap.empty[String, Long]
       var n = 0L
       it.foreach { t =>
@@ -852,7 +847,7 @@ object TextAnalysis {
         }
       }
       Iterator.single((null: String, n)) ++ m.keysIterator.map((_, -1L))
-    }.toDF("tok", "n_p").localCheckpoint()
+    }.toDF("tok", "n_p"), "TextAnalysis.heavyHitters.summary")
     val total = summary.filter(col("tok").isNull)
       .agg(sum(col("n_p")).as("n_total"))
     val cands = summary.filter(col("tok").isNotNull).select("tok").distinct()
@@ -880,11 +875,8 @@ object TextAnalysis {
     * [[contamination]]'s: one cheap count picks broadcast vs shuffle
     * join, so a pathological charset degrades to slower-but-safe.
     * Documents under 3 chars have no trigrams and are absent (same as
-    * the SQL twin's empty generate_series).
-    *
-    * Cache contract (as [[contamination]]): the count table feeds the
-    * guard AND the join — persisted here, released by the session-level
-    * `clearCache` between queries. */
+    * the SQL twin's empty generate_series). The count table feeds the
+    * guard AND the join, so it is cached ([[graft.Materialize]]). */
   def lmFamiliarity(docs: DataFrame, maxBroadcastVocab: Long = 2000000L,
       id: String = "doc_id", text: String = "text"): DataFrame = {
     // the trigram explode multiplies rows ~|text|-fold: fan the few-file
@@ -893,8 +885,8 @@ object TextAnalysis {
       .select(col(id), explode(transform(
         sequence(lit(1), length(col(text)) - 2),
         i => col(text).substr(i, lit(3)))).as("tri"))
-    val counts = tri.groupBy("tri").agg(count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val counts = Materialize.cache(tri.groupBy("tri").agg(count(lit(1)).as("n")),
+      "TextAnalysis.lmFamiliarity.counts")
     val scored =
       if (counts.count() <= maxBroadcastVocab) tri.join(broadcast(counts), "tri")
       else tri.join(counts, "tri")
@@ -983,12 +975,11 @@ object TextAnalysis {
     // consumers below (expandedCsv + the expanded-term re-score) each
     // replayed that pipeline — materialize the 3-row table once
     // (round 14; the Features.withRunningTotal k×-read discipline).
-    val mined = fb.select(explode(split(col(text), " ")).as("term"))
+    val mined = Materialize.barrier(fb.select(explode(split(col(text), " ")).as("term"))
       .filter(col("term") =!= "" && !col("term").isin(queryTerms: _*) &&
         !col("term").isin(StopWords: _*))
       .groupBy("term").agg(count(lit(1)).as("tf_fb"))
-      .orderBy(desc("tf_fb"), asc("term")).limit(fbTerms)
-      .localCheckpoint()
+      .orderBy(desc("tf_fb"), asc("term")).limit(fbTerms), "TextAnalysis.prfExpand.mined")
     val expandedCsv = mined.agg(
       array_join(array_sort(collect_list("term")), ",")
         .as("expanded_terms"))
@@ -1250,12 +1241,12 @@ object TextAnalysis {
     require(maxBatch >= 1, s"maxBatch >= 1, got $maxBatch")
     val spark = docs.sparkSession
     import spark.implicits._
-    val reps0 = docs.select(explode(split(col(text), " ")).as("tok"))
+    val reps0 = Materialize.barrier(docs.select(explode(split(col(text), " ")).as("tok"))
       .filter(col("tok") =!= "")
       .groupBy("tok").agg(count(lit(1)).as("w"))
       .select(concat_ws(" ",
-        filter(split(col("tok"), ""), s => s =!= "")).as("rep"), col("w"))
-      .localCheckpoint()
+        filter(split(col("tok"), ""), s => s =!= "")).as("rep"), col("w")),
+      "TextAnalysis.bpeMergeListBatched.reps0")
     var reps = reps0
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     var r = 1
@@ -1290,7 +1281,8 @@ object TextAnalysis {
           org.apache.spark.sql.functions.replace(c, lit(pn._1),
             lit(pn._1.replace(" ", "")))
         }
-        reps = reps.select(newRep.as("rep"), col("w")).localCheckpoint()
+        reps = Materialize.barrier(reps.select(newRep.as("rep"), col("w")),
+          s"TextAnalysis.bpeMergeListBatched.merge$r")
       }
     }
     reps0.unpersist()
@@ -1305,14 +1297,14 @@ object TextAnalysis {
     require(merges >= 1 && merges <= 50, s"merges in [1,50], got $merges")
     val spark = docs.sparkSession
     import spark.implicits._
-    val reps0 = docs.select(explode(split(col(text), " ")).as("tok"))
+    val reps0 = Materialize.barrier(docs.select(explode(split(col(text), " ")).as("tok"))
       .filter(col("tok") =!= "")
       .groupBy("tok").agg(count(lit(1)).as("w"))
       // split(tok, "") keeps a trailing "" in Spark; drop empties so
       // symbols are exactly the characters
       .select(concat_ws(" ",
-        filter(split(col("tok"), ""), s => s =!= "")).as("rep"), col("w"))
-      .localCheckpoint()
+        filter(split(col("tok"), ""), s => s =!= "")).as("rep"), col("w")),
+      "TextAnalysis.bpeMergeList.reps0")
     var reps = reps0
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long)]
     var r = 1
@@ -1446,9 +1438,8 @@ object TextAnalysis {
     * APPENDED in the strip pass ([[withQualityColumns]]), not joined
     * back, so the cleaned corpus is built exactly once; that build
     * (strip → quality → fp) feeds three consumers (rep agg, benchmark
-    * probe, final attribution join) and is persisted — same cache
-    * contract as [[graft.ops.Dedup]]: the caller materializes before
-    * `clearCache()`. The bench split (doc_id % 50 == 0) stands in for
+    * probe, final attribution join) and is cached
+    * ([[graft.Materialize]]). The bench split (doc_id % 50 == 0) stands in for
     * an external eval suite. */
   def corpusPrep(docs: DataFrame, id: String = "doc_id",
       text: String = "text", source: String = "source"): DataFrame = {
@@ -1463,7 +1454,7 @@ object TextAnalysis {
       .select(col(id), col("source"), col("clean_text"),
         col("n_tokens"), col("keep"))
       .withColumn("fp", md5(col("clean_text")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    Materialize.cache(withQ, "TextAnalysis.corpusPrep.withQ")
     val reps = withQ.filter(col("keep") === 1)
       .groupBy("fp").agg(min(col(id)).as("rep_id"))
     val repDocs = withQ.join(reps, Seq("fp"))

@@ -141,16 +141,15 @@ object Csv {
 
   /** Quarantine split of a permissive read: (clean rows without the
     * corrupt column, quarantined raw lines). The parsed read is
-    * persisted: Spark refuses plans that reference ONLY the corrupt
-    * column of a raw CSV scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN — its
-    * documented remedy is caching the parsed result), and the split
-    * reads the scan twice anyway. Same cache contract as
-    * graft.ops.Dedup: callers `clearCache()` between pipeline runs. */
+    * cached ([[graft.Materialize]]): Spark refuses plans that reference
+    * ONLY the corrupt column of a raw CSV scan
+    * (QUERY_ONLY_CORRUPT_RECORD_COLUMN — its documented remedy is
+    * caching the parsed result), and the split reads the scan twice. */
   def quarantine(spark: SparkSession, path: String, schema: StructType,
       corruptCol: String = "_corrupt_record")
       : (DataFrame, DataFrame) = {
-    val all = readPermissiveCorrupt(spark, path, schema, corruptCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val all = graft.Materialize.cache(readPermissiveCorrupt(spark, path, schema,
+      corruptCol), "Csv.quarantine.parsed")
     (all.filter(col(corruptCol).isNull).drop(corruptCol),
       all.filter(col(corruptCol).isNotNull).select(col(corruptCol).as("raw")))
   }

@@ -872,8 +872,9 @@ object EventStream {
     }
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     val gateBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
-      val verdicts = graft.ops.Dedup.probeSigIndex(spark, idx, batch)
-        .localCheckpoint() // verdicts feed the sink AND the admit join
+      val verdicts = graft.Materialize.barrier( // feeds the sink AND the admit join
+        graft.ops.Dedup.probeSigIndex(spark, idx, batch),
+        s"EventStream.ingestGate.verdicts$batchId")
       verdicts.withColumn("admit_cycle", lit(batchId))
         .write.mode("append").parquet(out)
       val admitted = batch.join(
@@ -964,11 +965,11 @@ object EventStream {
     }
     val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     val gateBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
-      val bfp = batch.select(col("vec_id"),
-          graft.ops.Similarity.vecFingerprint(col("embedding")).as("fp"))
-        .localCheckpoint() // feeds the probe AND the admission append
+      val bfp = graft.Materialize.barrier(batch.select(col("vec_id"), // probe + append
+          graft.ops.Similarity.vecFingerprint(col("embedding")).as("fp")),
+        s"EventStream.embedGate.fp$batchId")
       val bkeep = bfp.groupBy("fp").agg(min("vec_id").as("batch_keep_id"))
-      val verdicts = bfp
+      val verdicts = graft.Materialize.barrier(bfp
         .join(spark.read.parquet(idx), Seq("fp"), "left")
         .join(bkeep, "fp")
         .select(col("vec_id"),
@@ -978,8 +979,8 @@ object EventStream {
           when(col("exact_id").isNotNull, col("exact_id"))
             .when(col("vec_id") =!= col("batch_keep_id"),
               col("batch_keep_id"))
-            .as("match_id"))
-        .localCheckpoint() // sink + admit join must not re-probe
+            .as("match_id")), // sink + admit join must not re-probe
+        s"EventStream.embedGate.verdicts$batchId")
       verdicts.withColumn("admit_cycle", lit(batchId))
         .write.mode("append").parquet(out)
       bfp.join(verdicts.filter(col("verdict") === "new").select("vec_id"),

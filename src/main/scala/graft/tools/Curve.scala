@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{GraftSession, Tables}
+import graft.{GraftSession, Materialize, Tables}
 
 /** Scaling-curve harness (dev tool) for the heavy pairwise tail:
   * measures `jaccardPrefix`, `containmentPairs`, `containmentPrefix`
@@ -38,7 +38,7 @@ object Curve {
       .select("doc_id", "text")
     val docShift = baseDocs.agg(max("doc_id")).head.getLong(0) + 1L
 
-    def docsAt(n: Int): DataFrame =
+    def docsAt(n: Int): DataFrame = Materialize.cache(
       (0 until n).map { r =>
         val text =
           if (r == 0) col("text")
@@ -48,19 +48,17 @@ object Curve {
         baseDocs.select(
           (col("doc_id") + lit(r * docShift)).as("doc_id"),
           text.as("text"))
-      }.reduce(_.union(_))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }.reduce(_.union(_)), s"Curve.docs${n}x")
 
     // the registered graph_triangles edge stream (capped co-purchase)
-    val basePairs = Tables(spark, sfDir, "lineitem")
+    val basePairs = Materialize.cache(Tables(spark, sfDir, "lineitem")
       .groupBy("l_orderkey")
       .agg(slice(array_sort(collect_set(col("l_partkey"))),
         1, graft.SparkEntry.CopurchaseMaxBasket).as("parts"))
       .select(explode(flatten(transform(col("parts"), a =>
         transform(filter(col("parts"), b => b > a),
           b => struct(a.as("da"), b.as("db")))))).as("p"))
-      .select(col("p.da").as("da"), col("p.db").as("db"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("p.da").as("da"), col("p.db").as("db")), "Curve.basePairs")
     val nodeShift = basePairs.agg(greatest(max("da"), max("db")))
       .head.getLong(0) + 1L
 
@@ -80,14 +78,13 @@ object Curve {
       val m = baseEnts.agg(max("cand_key")).head.getLong(0) + 1L
       ((m / 37000L) + 1L) * 37000L
     }
-    def entsAt(n: Int): DataFrame =
+    def entsAt(n: Int): DataFrame = Materialize.cache(
       (0 until n).map { r =>
         val nm = if (r == 0) col("name")
                  else concat(lit(s"r${r}x"), col("name"), lit(s"x${r}r"))
         baseEnts.select((col("cand_key") + lit(r * entShift)).as("cand_key"),
           nm.as("name"))
-      }.reduce(_.union(_))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }.reduce(_.union(_)), s"Curve.ents${n}x")
     def dirtyFrom(ents: DataFrame): DataFrame =
       ents.filter(col("cand_key") % 37 === 0)
         .withColumn("pos", (lit(5) +
@@ -96,25 +93,19 @@ object Curve {
           concat(expr("substring(name, 1, pos)"),
             expr("substring(name, pos + 2, 1000000)")).as("dirty"))
 
-    def edgesAt(n: Int): DataFrame =
+    def edgesAt(n: Int): DataFrame = Materialize.cache(
       (0 until n).map { r =>
         basePairs.select(
           (col("da") + lit(r * nodeShift)).as("da"),
           (col("db") + lit(r * nodeShift)).as("db"))
-      }.reduce(_.union(_))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      }.reduce(_.union(_)), s"Curve.edges${n}x")
 
-    var pinned: Set[Int] = Set.empty
-    def pin(): Unit =
-      pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    def time(f: => Long): (Double, Long) = {
+    // the op's own blocks are released after each timing; the replicated
+    // input, cached before the scope opens, survives it
+    def time(f: => Long): (Double, Long) = Materialize.scope(spark) {
       val t0 = System.nanoTime()
       val n = f
-      val dt = (System.nanoTime() - t0) / 1e9
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => pinned(id) }
-        .values.foreach(_.unpersist(true))
-      (dt, n)
+      ((System.nanoTime() - t0) / 1e9, n)
     }
 
     val allOps: Seq[(String, DataFrame => DataFrame)] = Seq(
@@ -132,7 +123,7 @@ object Curve {
     ops.foreach { case (name, f) =>
       val in = if (name == "triangles") edgesAt(1)
                else if (name == "er_fuzzy") entsAt(1) else docsAt(1)
-      in.count(); pin(); f(in).count(); in.unpersist(true)
+      in.count(); time(f(in).count()); in.unpersist(true)
     }
 
     val results = ops.map { case (name, f) =>
@@ -140,7 +131,6 @@ object Curve {
         val in = if (name == "triangles") edgesAt(n)
                  else if (name == "er_fuzzy") entsAt(n) else docsAt(n)
         val rows = in.count() // materialize the replicated input, uncounted
-        pin()
         val (dt, out) = time(f(in).count())
         in.unpersist(true)
         println(f"$name%-20s ${n}x  in=$rows%9d  out=$out%9d  $dt%8.2f s")

@@ -71,8 +71,8 @@ object IvfPqTune {
     def sweepDir(dir: String): Seq[(String, Long)] = {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       val n = emb.count()
-      val exact = Similarity.bruteTopK(emb, 20, 5).select("q_id", "vec_id")
-        .withColumn("in_e", lit(1L)).cache()
+      val exact = graft.Materialize.cache(Similarity.bruteTopK(emb, 20, 5)
+        .select("q_id", "vec_id").withColumn("in_e", lit(1L)), "IvfPqTune.exact")
       println(s"# corpus=$dir n=$n fit_cap=$cap exact_pairs=${exact.count()}")
       def recall(approx: DataFrame): Long = {
         val row = exact.join(approx.select("q_id", "vec_id")

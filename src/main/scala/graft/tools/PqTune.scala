@@ -22,8 +22,8 @@ object PqTune {
     val spark = graft.GraftSession.local(8, appName = "graft-pqtune")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val n = emb.count()
-    val exact = Similarity.bruteTopK(emb, 20, 5).select("q_id", "vec_id")
-      .withColumn("in_e", lit(1L)).cache()
+    val exact = graft.Materialize.cache(Similarity.bruteTopK(emb, 20, 5)
+      .select("q_id", "vec_id").withColumn("in_e", lit(1L)), "PqTune.exact")
     println(s"corpus=$n m=$m codebookSize=$cb exact_pairs=${exact.count()}")
     sweep.foreach { sl =>
       val approx = Similarity

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.{GraftSession, Tables}
+import graft.{GraftSession, Materialize, Tables}
 
 /** Scale-up stress harness (dev tool): replicates the documents /
   * embeddings / events tables N× in memory (ids shifted per replica so
@@ -34,16 +34,11 @@ object Stress {
       }.reduce(_.union(_))
     }
 
-    // Bench's block-store hygiene, adapted: ops localCheckpoint
-    // intermediates (CC rounds, signature tables) that clearCache can't
-    // see; without releasing them between ops the block store grows over
-    // the suite and inflates later timings 2-3x (the exact pathology
-    // Bench documents). The pinned set protects the replicated
-    // corpus/events caches — everything else unpersists after each op.
-    var pinned: Set[Int] = Set.empty
-    def pin(): Unit =
-      pinned = spark.sparkContext.getPersistentRDDs.keySet.toSet
-    def time(name: String)(f: => Long): Unit = {
+    // each op's barriers and caches are released before the next one
+    // (left to accumulate, they inflated later timings 2-3x); the
+    // replicated corpus/events caches are made outside every scope and
+    // survive
+    def time(name: String)(f: => Long): Unit = Materialize.scope(spark) {
       val t0 = System.nanoTime()
       // a DESIGNED refusal (collision-law require, recall floor) must
       // not kill the rest of the ladder: record it and keep measuring
@@ -62,18 +57,14 @@ object Stress {
           println(f"$name%-26s ${(System.nanoTime() - t0) / 1e9}%8.2f s" +
             s"   REFUSED: $msg")
       }
-      spark.sparkContext.getPersistentRDDs
-        .filterNot { case (id, _) => pinned(id) }
-        .values.foreach(_.unpersist(true))
     }
 
-    val docs = replicate(Tables(spark, sfDir, "documents"), "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val emb = replicate(Tables(spark, sfDir, "embeddings"), "vec_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docs = Materialize.cache(
+      replicate(Tables(spark, sfDir, "documents"), "doc_id"), "Stress.docs")
+    val emb = Materialize.cache(
+      replicate(Tables(spark, sfDir, "embeddings"), "vec_id"), "Stress.emb")
     println(s"stress corpus: ${docs.count()} docs, ${emb.count()} vectors " +
       s"(${factor}x $sfDir)")
-    pin()
 
     // NB: replicated docs are exact duplicates across replicas — the
     // df-cap drops every shingle (df = factor x original). That is the
@@ -172,10 +163,9 @@ object Stress {
     // events replicate on event_id; user_id left as-is (same users, N×
     // denser timelines — the worst case for the banded range join's
     // per-band bucket sizes)
-    val events = replicate(Tables(spark, sfDir, "events"), "event_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val events = Materialize.cache(
+      replicate(Tables(spark, sfDir, "events"), "event_id"), "Stress.events")
     println(s"stress events: ${events.count()} rows")
-    pin()
     time("banded_range_join") {
       graft.ops.Events.bandedRangeJoin(events).count()
     }

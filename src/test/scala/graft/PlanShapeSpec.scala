@@ -534,12 +534,12 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("corpus_prep reuses its cached clean-corpus build; hybrid search tops out") {
-    // the strip -> quality -> fp intermediate is persisted and feeds three
-    // consumers: the plan must read it via InMemoryTableScan, and the
+    // the strip -> quality -> fp intermediate is cached and feeds three
+    // consumers: the plan must read it via its named in-memory scan, and the
     // boilerplate hot-set removal stays an anti join (never a filter over
     // a collected list)
     val cp = planOf("corpus_prep")
-    assert(cp.contains("InMemoryTableScan"),
+    assert(cp.contains("Scan In-memory table TextAnalysis.corpusPrep.withQ"),
       s"corpus_prep should reuse the persisted clean-corpus build:\n$cp")
     assert(cp.contains("LeftAnti"),
       s"boilerplate hot-set removal should plan an anti join:\n$cp")
@@ -588,7 +588,7 @@ class PlanShapeSpec extends SparkTestBase {
       // the cached edge side supplies partitioning: the only exchange
       // below the join feeds the small state side
       val joinIdx = plan.indexOf("SortMergeJoin")
-      val scanIdx = plan.indexOf("InMemoryTableScan")
+      val scanIdx = plan.indexOf("Scan In-memory table Graphs.prepEdges")
       assert(scanIdx > joinIdx, s"edge side not read from cache:\n$plan")
     } finally sym.unpersist()
     // results bit-identical across strategies for all three ops
