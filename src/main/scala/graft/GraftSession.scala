@@ -47,19 +47,14 @@ object GraftSession {
     master.fold(b)(b.master)
   }
 
-  /** One JVM-scoped temp warehouse dir (bucketed-table tests must never
-    * pollute the repo); lazy so repeat local() calls — which getOrCreate
-    * resolves to the existing session anyway — don't leak directories. */
-  private lazy val warehouseDir: String =
-    java.nio.file.Files.createTempDirectory("graft-warehouse").toString
-
   /** The local[n] session every repo entrypoint uses. */
   def local(cores: Int, appName: String = "graft"): SparkSession = {
     val s = builder(Some(s"local[$cores]"), shufflePartitions = cores,
         initialPartitions = None)
       .appName(appName)
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", warehouseDir)
+      // bucketed tables must never pollute the repo
+      .config("spark.sql.warehouse.dir", Scratch.dir("warehouse"))
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s

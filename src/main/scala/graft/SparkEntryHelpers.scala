@@ -15,26 +15,6 @@ trait SparkEntryHelpers {
   private[graft] def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
 
-  /** One-time shutdown hook deleting every staged pid-scoped artifact
-    * dir a query registered (IVF index, malformed-CSV fixture): the
-    * consumers read the files LAZILY, so cleanup can only run at JVM
-    * exit (prevents per-pid dirs accumulating across driver runs). */
-  private[graft] val stagedCleanupDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[graft] val stagedCleanupRegistered =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-  private[graft] def stagedDirCleanup(dir: String): Unit = {
-    stagedCleanupDirs.add(dir)
-    if (stagedCleanupRegistered.compareAndSet(false, true))
-      sys.addShutdownHook {
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles).toSeq.flatten.foreach(rm)
-          p.delete(): Unit
-        }
-        stagedCleanupDirs.forEach(p => rm(new java.io.File(p)))
-      }
-  }
-
   /** Process-shared persisted-INDEX fixtures (the snapshot-query
     * idempotence discipline applied to every build-once/probe-many
     * lifecycle — the dedup sig index AND the ANN indexes): each fixture
@@ -51,19 +31,7 @@ trait SparkEntryHelpers {
   private[graft] def idxFixture(key: String, dir: String)(
       build: String => Unit): String =
     idxFixtures.computeIfAbsent(s"$key|$dir", { _ =>
-      // collision-proof dir token: String.hashCode collisions across two
-      // sf dirs in one JVM would alias their fixture DIRECTORIES while
-      // the CHM keeps distinct entries — the second build would overwrite
-      // an index the first's lazily-read probes still consume. SHA-256
-      // prefix makes the path injective in practice.
-      val dirTok = java.security.MessageDigest.getInstance("SHA-256")
-        .digest(dir.getBytes("UTF-8"))
-        .take(8).map(b => f"$b%02x").mkString
-      val p = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-idxfix-$key-$dirTok-${ProcessHandle.current().pid()}")
-        .toString
-      stagedDirCleanup(p)
+      val p = Scratch.dir(s"idxfix-$key", dir)
       build(p)
       p
     })

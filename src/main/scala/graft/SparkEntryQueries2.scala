@@ -55,8 +55,8 @@ trait SparkEntryQueries2 extends SparkEntryQueries1 {
         all.filter(col("doc_id") % 2 === 1))
     }),
     // the gate's PERSISTED form: corpus signatures/caps built ONCE into
-    // an on-disk index (the process-shared sigIdx* fixtures — pid-scoped,
-    // JVM-exit cleanup like the IVF one), every cycle probes it with
+    // an on-disk index (the process-shared sigIdx* fixtures, scratch
+    // files like the IVF one), every cycle probes it with
     // batch-sized work — the steady-state 100 TB ingest shape. Caps are
     // corpus-scoped by construction (the one semantic difference from
     // the inline gate), and the oracle rebuilds the same corpus-scoped
@@ -340,7 +340,7 @@ trait SparkEntryQueries2 extends SparkEntryQueries1 {
     // ≡ the inline ivfTopK, spec-asserted.
     "ann_index_probe" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
-      // build-once fixture (pid-scoped, JVM-exit cleanup): each run of
+      // build-once fixture (graft.Scratch files): each run of
       // the query measures the PROBE — the steady-state op
       Similarity.probeIvfIndex(s, ivfIdx(s, dir),
         emb.filter(col("vec_id") < 20), 5)
@@ -643,13 +643,9 @@ trait SparkEntryQueries2 extends SparkEntryQueries1 {
     // S4 CSV sink smoke (rows-only — filesystem op, SURVEY §7 M1): write
     // the flagship result as single-file GBK CSV, read it back schema-less.
     // NB: the write job runs at DataFrame-construction time (inherent to a
-    // round-trip query); one overwrite dir per PROCESS (pid-scoped: no
-    // orphan growth per call, no cross-JVM race on a shared path).
+    // round-trip query); one overwrite dir per JVM (graft.Scratch).
     "csv_gbk_roundtrip" -> ((s, dir) => {
-      val out = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-csv-gbk-roundtrip-${ProcessHandle.current().pid()}")
-        .toString
+      val out = Scratch.dir("csv-gbk-roundtrip")
       graft.sources.Csv.writeSingle(
         Relational.groupCountSortDesc(t(s, dir, "customer"), "c_mktsegment"),
         out)
@@ -664,11 +660,7 @@ trait SparkEntryQueries2 extends SparkEntryQueries1 {
     // synthesis rule (same trick as the multimodal kernel surfaces).
     "source_malformed_policy" -> ((s, dir) => {
       import java.nio.file.{Files, Paths}
-      val base = Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft-malformed-src-${ProcessHandle.current().pid()}")
-      Files.createDirectories(base)
-      // the CSV reads below are lazy — JVM-exit cleanup, like the IVF dir
-      stagedDirCleanup(base.toString)
+      val base = Paths.get(Scratch.dir("malformed-src"))
       val lines = "id,amount" +: (0 until 50).map(i =>
         if (i % 3 == 0) s"$i,x$i" else s"$i,${i * 100L}")
       Files.write(base.resolve("rows.csv"),
@@ -707,12 +699,9 @@ trait SparkEntryQueries2 extends SparkEntryQueries1 {
     // EXT partitioned parquet sink + partition-pruned scan (the layout a
     // 100 TB corpus lives in — graft.sources.Partitioned; PlanShapeSpec
     // asserts the read-back plan prunes on PartitionFilters). Same
-    // pid-scoped tmp-dir convention as csv_gbk_roundtrip.
+    // scratch-dir convention as csv_gbk_roundtrip.
     "sink_partitioned_roundtrip" -> ((s, dir) => {
-      val out = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-part-sink-${ProcessHandle.current().pid()}")
-        .toString
+      val out = Scratch.dir("part-sink")
       graft.sources.Partitioned.write(t(s, dir, "orders"), out, "o_orderpriority")
       graft.sources.Partitioned.readPruned(s, out, "o_orderpriority", "1-URGENT")
         .groupBy("o_orderstatus")
@@ -736,10 +725,7 @@ trait SparkEntryQueries2 extends SparkEntryQueries1 {
     // tiny files, compact to ~8 MB targets (sources/Compaction), read
     // back. Layout-only rewrite — oracle is the plain aggregate.
     "sink_compacted_roundtrip" -> ((s, dir) => {
-      val base = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-compact-${ProcessHandle.current().pid()}")
-        .toString
+      val base = Scratch.dir("compact")
       t(s, dir, "orders").repartition(64)
         .write.mode("overwrite").parquet(s"$base/frag")
       graft.sources.Compaction.compact(s, s"$base/frag", s"$base/out",
@@ -893,13 +879,10 @@ trait SparkEntryQueries2 extends SparkEntryQueries1 {
 
     // EXT JSONL sink + explicit-schema source round-trip (the LLM-corpus
     // interchange format), then an aggregate — oracle is the plain
-    // aggregate over the parquet original. Same pid-scoped tmp dir
-    // convention as the other sink queries.
+    // aggregate over the parquet original. Same scratch-dir convention
+    // as the other sink queries.
     "sink_jsonl_roundtrip" -> ((s, dir) => {
-      val out = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-jsonl-${ProcessHandle.current().pid()}")
-        .toString
+      val out = Scratch.dir("jsonl")
       graft.sources.Jsonl.write(
         t(s, dir, "documents").select("doc_id", "lang", "n_chars"), out)
       graft.sources.Jsonl.read(s, out,
@@ -920,10 +903,7 @@ trait SparkEntryQueries2 extends SparkEntryQueries1 {
     // old rows surface nulls for the new column. The steady state of any
     // long-lived corpus; the oracle reconstructs the null pattern.
     "sink_schema_evolution" -> ((s, dir) => {
-      val base = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-evolve-${ProcessHandle.current().pid()}")
-        .toString
+      val base = Scratch.dir("evolve")
       val orders = t(s, dir, "orders")
       orders.filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "o_totalprice")
@@ -1093,10 +1073,8 @@ trait SparkEntryQueries2 extends SparkEntryQueries1 {
     // difference between listing 2/5 of the directories and scanning all.
     "dpp_partitioned_join" -> ((s, dir) => {
       import s.implicits._
-      val out = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-dpp-${ProcessHandle.current().pid()}")
-        .toString
+      val out = Scratch.dir("dpp")
+      val dim = Scratch.dir("dpp-dim")
       graft.sources.Partitioned.write(t(s, dir, "orders"), out, "o_orderpriority")
       // the dim must be a real table scan: a literal local relation gets
       // its filter constant-folded away, and with no selective Filter on
@@ -1105,9 +1083,9 @@ trait SparkEntryQueries2 extends SparkEntryQueries1 {
         ("1-URGENT", "expedite"), ("2-HIGH", "expedite"),
         ("3-MEDIUM", "standard"), ("4-NOT SPECIFIED", "standard"),
         ("5-LOW", "standard")).toDF("priority", "sla")
-        .write.mode("overwrite").parquet(s"$out-dim")
+        .write.mode("overwrite").parquet(dim)
       s.read.parquet(out)
-        .join(broadcast(s.read.parquet(s"$out-dim")
+        .join(broadcast(s.read.parquet(dim)
           .filter(col("sla") === "expedite")),
           col("o_orderpriority") === col("priority"))
         .groupBy("o_orderpriority")
@@ -1119,10 +1097,7 @@ trait SparkEntryQueries2 extends SparkEntryQueries1 {
     // EXT ORC source/sink round-trip (vectorized reader, predicate
     // pushdown into stripe indexes — second columnar format).
     "sink_orc_roundtrip" -> ((s, dir) => {
-      val out = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-orc-${ProcessHandle.current().pid()}")
-        .toString
+      val out = Scratch.dir("orc")
       graft.sources.Orc.write(
         t(s, dir, "lineitem")
           .select("l_returnflag", "l_linestatus", "l_quantity",

@@ -687,11 +687,7 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // scan actually skips files. The Delta/Iceberg skipping mechanism
     // as a library op.
     "manifest_prune" -> ((s, dir) => {
-      val staged = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-manifest-${ProcessHandle.current().pid()}")
-        .toString
-      stagedDirCleanup(staged)
+      val staged = Scratch.dir("manifest")
       graft.sources.Manifest.stageClustered(
         t(s, dir, "orders"), staged, "o_orderdate", 8)
       val mani = graft.sources.Manifest.buildManifest(s, staged, "o_orderdate")
@@ -1025,11 +1021,7 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // staging files are structurally invisible (SnapshotsSpec proves
     // both isolation and the optimistic-concurrency retry).
     "snapshot_time_travel" -> ((s, dir) => {
-      val root = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-snap-${ProcessHandle.current().pid()}")
-        .toString
-      stagedDirCleanup(root)
+      val root = Scratch.dir("snap", dir)
       val o = t(s, dir, "orders")
       if (graft.sources.Snapshots.latestVersion(root).isEmpty) {
         graft.sources.Snapshots.commit(
@@ -1110,11 +1102,7 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // mergeAggState supplies the algebra, and the result must be
     // indistinguishable from a full recompute (the oracle).
     "snapshot_incremental_mv" -> ((s, dir) => {
-      val root = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-snapmv-${ProcessHandle.current().pid()}")
-        .toString
-      stagedDirCleanup(root)
+      val root = Scratch.dir("snapmv", dir)
       val ev = t(s, dir, "events")
       val rows = ev.select(col("user_id"), col("event_id"),
         round(col("value") * 100).cast("long").as("cents"),
@@ -1183,11 +1171,7 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // incremental, i.e. the miniature table format completed. Result is
     // exact (residual filter); SnapshotsSpec asserts the skipping.
     "snapshot_pruned_read" -> ((s, dir) => {
-      val root = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-snapband-${ProcessHandle.current().pid()}")
-        .toString
-      stagedDirCleanup(root)
+      val root = Scratch.dir("snapband", dir)
       // NTZ read as UTC (GraftSession pins the session zone): the epoch
       // band constants below are the same instants
       val o = t(s, dir, "orders")
@@ -1217,11 +1201,7 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // contract). Output = the post-delete table aggregate; oracle =
     // the base table minus the predicate.
     "snapshot_delete" -> ((s, dir) => {
-      val root = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-snapdel-${ProcessHandle.current().pid()}")
-        .toString
-      stagedDirCleanup(root)
+      val root = Scratch.dir("snapdel", dir)
       if (graft.sources.Snapshots.latestVersion(root).isEmpty) {
         graft.sources.Snapshots.commit(t(s, dir, "orders")
           .repartitionByRange(4, col("o_orderkey")), root)
@@ -1241,11 +1221,7 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // fully derivable from orders, so the table-format semantics are
     // driver-oracle'd end to end.
     "snapshot_merge" -> ((s, dir) => {
-      val root = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-snapmerge-${ProcessHandle.current().pid()}")
-        .toString
-      stagedDirCleanup(root)
+      val root = Scratch.dir("snapmerge", dir)
       if (graft.sources.Snapshots.latestVersion(root).isEmpty) {
         val orders = t(s, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice",
@@ -1281,11 +1257,7 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // Isolation/conflict/vacuum-pinning semantics are spec'd; the
     // driver checks the published end state relationally.
     "snapshot_wap" -> ((s, dir) => {
-      val root = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-snapwap-${ProcessHandle.current().pid()}")
-        .toString
-      stagedDirCleanup(root)
+      val root = Scratch.dir("snapwap", dir)
       if (graft.sources.Snapshots.latestVersion(root).isEmpty) {
         val orders = t(s, dir, "orders")
           .select("o_orderkey", "o_totalprice")
@@ -1314,11 +1286,7 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // original schema — the table-format evolution contract,
     // driver-oracle'd via the evolved read's aggregate.
     "snapshot_add_column" -> ((s, dir) => {
-      val root = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-snapaddcol-${ProcessHandle.current().pid()}")
-        .toString
-      stagedDirCleanup(root)
+      val root = Scratch.dir("snapaddcol", dir)
       if (graft.sources.Snapshots.latestVersion(root).isEmpty) {
         val orders = t(s, dir, "orders")
         graft.sources.Snapshots.commit(
@@ -1342,11 +1310,7 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // versions still time-travel until vacuum. The small-files answer
     // for streaming-append tables.
     "snapshot_compaction" -> ((s, dir) => {
-      val root = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-snapcompact-${ProcessHandle.current().pid()}")
-        .toString
-      stagedDirCleanup(root)
+      val root = Scratch.dir("snapcompact", dir)
       if (graft.sources.Snapshots.latestVersion(root).isEmpty) {
         val orders = t(s, dir, "orders")
         (0 until 5).foreach { i =>
@@ -1374,12 +1338,7 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // deterministic under bench reruns (a shared root would vacuum 0 on
     // the second pass).
     "snapshot_vacuum" -> ((s, dir) => {
-      val root = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-snapvacuum-${ProcessHandle.current().pid()}",
-          java.util.UUID.randomUUID().toString)
-        .toString
-      stagedDirCleanup(root)
+      val root = Scratch.fresh("snapvacuum")
       val orders = t(s, dir, "orders")
       (0 until 4).foreach { i =>
         graft.sources.Snapshots.commit(
@@ -1673,11 +1632,7 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // boundary. Oracle rebuilds the same answer from the base table
     // with the evolution rule inlined.
     "source_schema_evolution" -> ((s, dir) => {
-      val staged = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"),
-          s"graft-evo-${ProcessHandle.current().pid()}")
-        .toString
-      stagedDirCleanup(staged)
+      val staged = Scratch.dir("evo")
       val o = t(s, dir, "orders")
       o.filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "o_custkey", "o_totalprice")

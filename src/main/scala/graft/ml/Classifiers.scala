@@ -154,21 +154,6 @@ object Classifiers {
       .orderBy("model")
   }
 
-  /** One-time shutdown hook deleting this process's staged model dir —
-    * same lifecycle as the IVF index staging (the reload reads the files
-    * lazily, so cleanup can only happen at JVM exit; pid-scoping plus
-    * overwrite-in-place bounds each process to one copy). */
-  private val modelCleanupRegistered = new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def modelDirCleanup(dir: String): Unit =
-    if (modelCleanupRegistered.compareAndSet(false, true))
-      sys.addShutdownHook {
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles).toSeq.flatten.foreach(rm)
-          p.delete(): Unit
-        }
-        rm(new java.io.File(dir))
-      }
-
   /** S6 model persistence (the reference saves its trained RF,
     * 任务四/exp4_work4.ipynb:690 cell 45): fit the reference-parameter RF
     * on the seeded train split, `write.overwrite().save` it (Spark ML's
@@ -192,12 +177,9 @@ object Classifiers {
       .setMaxDepth(7).setNumTrees(30).setSeed(seed) // FP10 (:572)
       .fit(train)
     train.unpersist()
-    val dir = java.nio.file.Paths
-      .get(System.getProperty("java.io.tmpdir"),
-        s"graft-rf-model-${ProcessHandle.current().pid()}")
-      .toString
+    // overwritten in place; the reload reads it lazily (graft.Scratch)
+    val dir = graft.Scratch.dir("rf-model")
     model.write.overwrite().save(dir)
-    modelDirCleanup(dir)
     val reloaded = RandomForestClassificationModel.load(dir)
     def score(m: RandomForestClassificationModel, tag: String): DataFrame =
       m.transform(test).select(

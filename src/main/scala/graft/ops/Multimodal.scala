@@ -519,7 +519,6 @@ object Multimodal {
       .drop("payload")
       .orderBy("doc_id")
 
-  case class MediaFeatures(doc_id: Long, features: Array[Float])
   case class Frame(doc_id: Long, frame_idx: Int, frame_bytes: Array[Byte])
   case class Resized(doc_id: Long, payload: Array[Byte], width: Int,
       height: Int)
@@ -554,31 +553,6 @@ object Multimodal {
       }.toDF().orderBy("doc_id")
   }
 
-  /** ====== STUB kernel / real plumbing ====== Feature extraction: one
-    * fixed-width float vector per payload (the embedding-model execution
-    * shape — batched kernel calls, `array<float>` output column ready for
-    * graft.ops.Similarity). The fake projects byte histograms; a real
-    * kernel would run an ONNX/image model per batch. */
-  def featureExtract(spark: SparkSession, docs: DataFrame,
-      dim: Int = 16): DataFrame = {
-    import spark.implicits._
-    withBinary(docs).select("doc_id", "payload")
-      .as[(Long, Array[Byte])]
-      .mapPartitions { it =>
-        it.grouped(DecodeBatch).flatMap { batch =>
-          batch.map { case (id, raw) =>
-            val bytes = if (raw == null) Array.emptyByteArray else raw
-            val v = new Array[Float](dim)
-            var i = 0
-            while (i < bytes.length) {
-              v(i % dim) += (bytes(i) & 0xFF) / 255.0f; i += 1
-            }
-            MediaFeatures(id, v)
-          }
-        }
-      }.toDF().orderBy("doc_id")
-  }
-
   /** Driver-checkable surface of [[resize]]: the resized payload reduced
     * to scalars (dims, length, byte-sum checksum) — the driver's checker
     * cannot hash a binary column, and on the ASCII corpus the checksum is
@@ -599,11 +573,11 @@ object Multimodal {
       .orderBy("doc_id")
   }
 
-  /** Like [[featureExtract]] but with an INTEGER histogram kernel (per
-    * slot j: sum of payload bytes at positions ≡ j mod dim), surfaced as
-    * a CSV string. Same batched mapPartitions plumbing; exact integer
-    * math on both engines, so — unlike the float feature vector, whose
-    * accumulation order is float32-rounding-sensitive — this one is
+  /** Feature extraction: one fixed-width histogram per payload (per slot
+    * j: sum of payload bytes at positions ≡ j mod dim), surfaced as a CSV
+    * string — the embedding-model execution shape (batched kernel calls
+    * in mapPartitions). Exact integer math on both engines (a float
+    * vector's accumulation order is float32-rounding-sensitive), so it is
     * hash-oracle'd. */
   def featureHistogram(spark: SparkSession, docs: DataFrame,
       dim: Int = 16): DataFrame = {

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.GroupStateTimeout
 import org.apache.spark.sql.types._
@@ -78,39 +78,61 @@ object EventStream {
       .select(unix_micros(col("window.start")).as("win_start_us"),
         col("event_type"), col("cnt"), col("sum_value"))
 
-  /** Execute [[tumblingCounts]] as a REAL streaming query over the events
-    * parquet path — file-source micro-batches, `AvailableNow` trigger (a
-    * bounded run over everything currently in the source, the standard
-    * backfill/parity harness), complete-mode file sink — and return the
-    * final result, totally ordered. In complete mode no window is ever
-    * evicted, so the result equals the batch `Events.tumblingAgg` exactly:
-    * this is the driver-oracle surface for the streaming family. */
-  private val parityRunSeq = new java.util.concurrent.atomic.AtomicLong(0L)
+  /** Stateful operators instantiate one state store PER shuffle partition
+    * PER stateful op; at the parity runs' data volume the fixed store
+    * open/commit cost dominates (a stream-stream join pays 2
+    * stores/partition), so the parity streams run at 8 partitions —
+    * pinned at first run from this conf — under [[withConf]], which
+    * restores the batch conf after. Production streams size this to
+    * their key space. */
+  private val StreamPartitions = "spark.sql.shuffle.partitions" -> "8"
 
-  /** JVM-exit cleanup of every parity artifact dir this process staged
-    * (sink output, upsert version chain): the read-back DataFrames scan
-    * the files LAZILY, so deletion can only happen at exit — same
-    * lifecycle as the IVF index staging. Pid-scoping bounds disk use to
-    * one process's artifacts; the hook stops dirs accumulating across
-    * driver runs. */
-  private val parityCleanupDirs =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private val parityCleanupRegistered =
-    new java.util.concurrent.atomic.AtomicBoolean(false)
-  private def parityCleanupAtExit(dir: java.nio.file.Path): Unit = {
-    parityCleanupDirs.add(dir.toString)
-    if (parityCleanupRegistered.compareAndSet(false, true))
-      sys.addShutdownHook {
-        def rm(p: java.io.File): Unit = {
-          if (p.isDirectory) Option(p.listFiles).toSeq.flatten.foreach(rm)
-          p.delete(): Unit
-        }
-        parityCleanupDirs.forEach(p => rm(new java.io.File(p)))
-      }
+  /** The RocksDB state store, required by the v2 state API. */
+  private val RocksDb =
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** Runs `body` with `confs` set on the session and each previous value
+    * (or its absence) restored after — streams pin their confs at start,
+    * so the change cannot leak into the run or out of it. */
+  private def withConf[T](spark: SparkSession, confs: (String, String)*)(
+      body: => T): T = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** Stages one single-file parquet slice of `df` per predicate of
+    * `slices`, surfaced directly under `stage` (file sources don't recurse
+    * into non-partition subdirs) with STRICTLY INCREASING modification
+    * times: FileStreamSource lists files by timestamp, so with
+    * maxFilesPerTrigger=1 micro-batch i reads exactly slice i. */
+  private def stageSlices(df: DataFrame, stage: java.nio.file.Path,
+      slices: Seq[Column]): Unit = {
+    import java.nio.file.Files
+    slices.zipWithIndex.foreach { case (keep, i) =>
+      val dir = stage.resolve(s"slice_$i")
+      df.filter(keep).coalesce(1).write.mode("overwrite")
+        .parquet(dir.toString)
+      val listing = Files.list(dir)
+      val part =
+        try listing.filter(_.getFileName.toString.endsWith(".parquet"))
+          .findFirst().get()
+        finally listing.close()
+      val staged = stage.resolve(s"slice_$i.parquet")
+      Files.move(part, staged)
+      Files.setLastModifiedTime(staged,
+        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + i * 60000L))
+    }
   }
 
   /** Shared harness of the `*ParityRun` queries: stage the single-file
-    * corpus parquet into a pid-scoped directory (a file stream source
+    * corpus parquet into a fresh scratch directory (a file stream source
     * needs a DIRECTORY — FileStreamSource pins partition-discovery
     * basePath to the source path — and files arriving in a watched dir is
     * the honest shape of a file stream anyway), run `transform` of the
@@ -131,40 +153,23 @@ object EventStream {
       transform: DataFrame => DataFrame): DataFrame = {
     val srcSchema =
       if (sourceSchema ne null) sourceSchema else probeFileSchema(spark, path)
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    // per-invocation sink subdir AND staging subdir: repeated runs must
-    // not collide, and a reused directory must never replay files staged
-    // by an EARLIER invocation (stale files would corrupt parity results)
-    val seq = parityRunSeq.incrementAndGet()
-    val pid = ProcessHandle.current().pid()
-    val stage = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-stage-$tag-$pid", seq.toString)
-    Files.createDirectories(stage)
-    parityCleanupAtExit(stage.getParent) // pid-scoped staging root
+    import java.nio.file.{Files, Paths}
+    // per-invocation sink dir AND staging dir: repeated runs must not
+    // collide, and a reused directory must never replay files staged by
+    // an EARLIER invocation (stale files would corrupt parity results)
+    val stage = graft.Scratch.fresh(s"stream-stage-$tag")
     val src = Paths.get(path)
-    Files.copy(src, stage.resolve(src.getFileName),
-      StandardCopyOption.REPLACE_EXISTING)
-    val resultRoot = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-result-$pid")
-    parityCleanupAtExit(resultRoot)
-    val out = resultRoot.resolve(s"$tag-$seq").toString
+    Files.copy(src, Paths.get(stage).resolve(src.getFileName))
+    val out = graft.Scratch.fresh(s"stream-result-$tag")
     val complete = outputMode == "complete"
     val sink: (DataFrame, Long) => Unit = { (batch, batchId) =>
       if (complete) batch.write.mode("overwrite").parquet(out)
       else batch.withColumn("__batch_id", lit(batchId))
         .write.mode("append").parquet(out)
     }
-    // Stateful operators instantiate one state store PER shuffle
-    // partition PER stateful op; at the parity runs' data volume the
-    // fixed store open/commit cost dominates (a stream-stream join pays
-    // 2 stores/partition), so the streaming query runs at 8 partitions —
-    // pinned at first run from this conf — and the batch conf is
-    // restored after. Production streams size this to their key space.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
+    try withConf(spark, StreamPartitions) {
       val q = transform(
-        readParquetStream(spark, stage.toString, maxFilesPerTrigger,
+        readParquetStream(spark, stage, maxFilesPerTrigger,
           sourceSchema = srcSchema))
         .writeStream
         .outputMode(outputMode)
@@ -174,13 +179,18 @@ object EventStream {
       q.awaitTermination()
       spark.read.parquet(out)
     } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
       // the staged copy served this one run; don't accumulate per call
-      Files.deleteIfExists(stage.resolve(src.getFileName))
-      Files.deleteIfExists(stage)
+      graft.Scratch.delete(stage)
     }
   }
 
+  /** Execute [[tumblingCounts]] as a REAL streaming query over the events
+    * parquet path — file-source micro-batches, `AvailableNow` trigger (a
+    * bounded run over everything currently in the source, the standard
+    * backfill/parity harness), complete-mode file sink — and return the
+    * final result, totally ordered. In complete mode no window is ever
+    * evicted, so the result equals the batch `Events.tumblingAgg` exactly:
+    * this is the driver-oracle surface for the streaming family. */
   def tumblingCountsParityRun(spark: SparkSession, path: String,
       maxFilesPerTrigger: Int = 16): DataFrame =
     parityRun(spark, path, "tumbling", maxFilesPerTrigger, "complete")(
@@ -307,23 +317,13 @@ object EventStream {
     * inspect the version history the run produced. */
   def snapshotSinkRunWithRoot(spark: SparkSession, path: String,
       nSplits: Int = 4): (DataFrame, String) = {
-    import java.nio.file.{Files, Paths}
-    val seq = parityRunSeq.incrementAndGet()
-    val pid = ProcessHandle.current().pid()
-    val stage = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-stage-snap-$pid", seq.toString)
-    Files.createDirectories(stage)
-    parityCleanupAtExit(stage.getParent) // pid-scoped staging root
+    val stage = graft.Scratch.fresh("stream-stage-snap")
     val srcSchema = probeFileSchema(spark, path)
     spark.read.schema(srcSchema).parquet(path)
       .repartitionByRange(nSplits, col("event_id"))
-      .write.mode("overwrite").parquet(stage.toString)
-    val resultRoot = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-result-$pid")
-    parityCleanupAtExit(resultRoot)
-    val tableRoot = resultRoot.resolve(s"snap-$seq").toString
-    Files.createDirectories(Paths.get(tableRoot))
-    val q = readParquetStream(spark, stage.toString, maxFilesPerTrigger = 1,
+      .write.mode("overwrite").parquet(stage)
+    val tableRoot = graft.Scratch.fresh("stream-result-snap")
+    val q = readParquetStream(spark, stage, maxFilesPerTrigger = 1,
         sourceSchema = srcSchema)
       .writeStream
       .outputMode("append")
@@ -616,28 +616,12 @@ object EventStream {
         org.apache.spark.sql.streaming.OutputMode.Update())(
         org.apache.spark.sql.Encoders.product[LatestRow])
 
-  /** Run `body` with the RocksDB state store pinned (required by the v2
-    * state API) and the previous provider restored after — streams pin
-    * their provider at start, so the change cannot leak into the run. */
-  private def withRocksDb[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming.state." +
-      "RocksDBStateStoreProvider")
-    try body finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
   /** Parity family for [[twsLatest]]: real AvailableNow run over the
     * staged corpus, final state == the batch latest-event-per-user
     * (same oracle as the foreachBatch upsert — two implementations, one
     * contract). */
   def twsLatestParityRun(spark: SparkSession, path: String,
-      maxFilesPerTrigger: Int = 16): DataFrame = withRocksDb(spark) {
+      maxFilesPerTrigger: Int = 16): DataFrame = withConf(spark, RocksDb) {
     val sunk = parityRun(spark, path, "twslatest", maxFilesPerTrigger,
       "update") { events => twsLatest(events).toDF() }
     // update mode emits the running state per touched micro-batch; the
@@ -688,7 +672,7 @@ object EventStream {
     * and 2, exactly as the batch/DuckDB oracle ranks them (a `distinct()`
     * over all emissions would have collapsed them). */
   def twsTopKParityRun(spark: SparkSession, path: String, k: Int = 3,
-      maxFilesPerTrigger: Int = 16): DataFrame = withRocksDb(spark) {
+      maxFilesPerTrigger: Int = 16): DataFrame = withConf(spark, RocksDb) {
     val sunk = parityRun(spark, path, "twstopk", maxFilesPerTrigger,
       "update") { events =>
       latestRows(events)
@@ -734,44 +718,20 @@ object EventStream {
     * micro-batches rather than trivially once. */
   def upsertParityRun(spark: SparkSession, path: String,
       nSlices: Int = 3): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val seq = parityRunSeq.incrementAndGet()
-    val pid = ProcessHandle.current().pid()
-    val stage = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-stage-upsert-$pid", seq.toString)
-    val targetRoot = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-upsert-target-$pid")
-    val target = targetRoot.resolve(seq.toString)
-    Files.createDirectories(stage)
-    parityCleanupAtExit(stage.getParent) // pid-scoped staging root
-    Files.createDirectories(target)
+    val stage = java.nio.file.Paths.get(
+      graft.Scratch.fresh("stream-stage-upsert"))
     // the returned DataFrame scans the final version's files lazily, so
-    // the whole version chain lives until JVM exit (pid-scoped, hooked)
-    parityCleanupAtExit(targetRoot)
-    // slice the corpus into nSlices staged files (event_id % n) so the
-    // AvailableNow run has one merge round per slice
+    // the whole version chain lives until JVM exit (graft.Scratch)
+    val target = java.nio.file.Paths.get(
+      graft.Scratch.fresh("stream-upsert-target"))
     // inferred batch read: the staged slices inherit the corpus's own
     // ts encoding, which readParquetStream normalizes per-type below
     val srcDf = spark.read.parquet(path)
-    (0 until nSlices).foreach { i =>
-      srcDf.filter(col("event_id") % nSlices === i)
-        .coalesce(1).write.mode("overwrite")
-        .parquet(stage.resolve(s"slice_$i").toString)
-    }
-    // file sources don't recurse into non-partition subdirs: surface each
-    // slice's part file at the staging root
-    (0 until nSlices).foreach { i =>
-      val dir = stage.resolve(s"slice_$i")
-      val listing = Files.list(dir)
-      val part =
-        try listing.filter(_.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        finally listing.close()
-      Files.move(part, stage.resolve(s"slice_$i.parquet"))
-    }
+    // one merge round per slice (event_id % n)
+    stageSlices(srcDf, stage,
+      (0 until nSlices).map(i => col("event_id") % nSlices === i))
     val versionOf: Long => java.nio.file.Path =
       v => target.resolve(s"v$v")
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
     var lastVersion = -1L
     val mergeBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       val updates = batch.select(col("user_id"),
@@ -789,8 +749,7 @@ object EventStream {
         .write.mode("overwrite").parquet(versionOf(batchId).toString)
       lastVersion = batchId
     }
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
+    withConf(spark, StreamPartitions) {
       val q = readParquetStream(spark, stage.toString,
           maxFilesPerTrigger = 1, sourceSchema = srcDf.schema)
         .writeStream
@@ -804,8 +763,6 @@ object EventStream {
       // so the lazy read-back stays valid however large the key space
       spark.read.parquet(versionOf(lastVersion).toString)
         .orderBy("user_id")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
   }
 
@@ -832,45 +789,16 @@ object EventStream {
     * rather than silently reordering admissions. */
   def ingestGateParityRun(spark: SparkSession, path: String,
       nSlices: Int = 3): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val seq = parityRunSeq.incrementAndGet()
-    val pid = ProcessHandle.current().pid()
-    val stage = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-stage-gate-$pid", seq.toString)
-    val idxRoot = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-gate-idx-$pid")
-    val idx = idxRoot.resolve(seq.toString).toString
-    val resultRoot = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-result-$pid")
-    Files.createDirectories(stage)
-    parityCleanupAtExit(stage.getParent)
-    parityCleanupAtExit(idxRoot)
-    parityCleanupAtExit(resultRoot)
-    val out = resultRoot.resolve(s"gate-$seq").toString
+    val stage = java.nio.file.Paths.get(
+      graft.Scratch.fresh("stream-stage-gate"))
+    val idx = graft.Scratch.fresh("stream-gate-idx")
+    val out = graft.Scratch.fresh("stream-result-gate")
     val srcDf = spark.read.parquet(path)
     graft.ops.Dedup.buildSigIndex(
       srcDf.filter(col("doc_id") % 2 === 0), idx)
     val mod = 2 * nSlices
-    (0 until nSlices).foreach { j =>
-      srcDf.filter(col("doc_id") % mod === (2 * j + 1))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(stage.resolve(s"slice_$j").toString)
-    }
-    (0 until nSlices).foreach { j =>
-      val dir = stage.resolve(s"slice_$j")
-      val listing = Files.list(dir)
-      val part =
-        try listing.filter(_.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        finally listing.close()
-      val staged = stage.resolve(s"slice_$j.parquet")
-      Files.move(part, staged)
-      // strictly increasing mtimes pin the micro-batch order (the
-      // FileStreamSource listing sorts by timestamp)
-      Files.setLastModifiedTime(staged,
-        java.nio.file.attribute.FileTime.fromMillis(1000000000000L + j * 60000L))
-    }
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+    stageSlices(srcDf, stage,
+      (0 until nSlices).map(j => col("doc_id") % mod === (2 * j + 1)))
     val gateBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       val verdicts = graft.Materialize.barrier( // feeds the sink AND the admit join
         graft.ops.Dedup.probeSigIndex(spark, idx, batch),
@@ -881,8 +809,7 @@ object EventStream {
         verdicts.filter(col("verdict") === "new").select("doc_id"), "doc_id")
       graft.ops.Dedup.appendToSigIndex(spark, idx, admitted)
     }
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
+    withConf(spark, StreamPartitions) {
       val q = readParquetStream(spark, stage.toString,
           maxFilesPerTrigger = 1, sourceSchema = srcDf.schema)
         .writeStream
@@ -891,8 +818,6 @@ object EventStream {
         .start()
       q.awaitTermination()
       spark.read.parquet(out).orderBy("doc_id")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
   }
 
@@ -923,21 +848,10 @@ object EventStream {
     * duplicates ride the same union the oracle replays in SQL). */
   def embedGateParityRun(spark: SparkSession, src: DataFrame,
       nSlices: Int = 3): DataFrame = {
-    import java.nio.file.{Files, Paths}
-    val seq = parityRunSeq.incrementAndGet()
-    val pid = ProcessHandle.current().pid()
-    val stage = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-stage-embed-$pid", seq.toString)
-    val idxRoot = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-embed-idx-$pid")
-    val idx = idxRoot.resolve(seq.toString).toString
-    val resultRoot = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft-stream-result-$pid")
-    Files.createDirectories(stage)
-    parityCleanupAtExit(stage.getParent)
-    parityCleanupAtExit(idxRoot)
-    parityCleanupAtExit(resultRoot)
-    val out = resultRoot.resolve(s"embed-gate-$seq").toString
+    val stage = java.nio.file.Paths.get(
+      graft.Scratch.fresh("stream-stage-embed"))
+    val idx = graft.Scratch.fresh("stream-embed-idx")
+    val out = graft.Scratch.fresh("stream-result-embed-gate")
     val srcDf = src.select("vec_id", "embedding")
     srcDf.filter(col("vec_id") % 2 === 0)
       .select(graft.ops.Similarity.vecFingerprint(col("embedding"))
@@ -945,25 +859,8 @@ object EventStream {
       .groupBy("fp").agg(min("vec_id").as("exact_id"))
       .write.mode("overwrite").parquet(idx)
     val mod = 2 * nSlices
-    (0 until nSlices).foreach { j =>
-      srcDf.filter(col("vec_id") % mod === (2 * j + 1))
-        .coalesce(1).write.mode("overwrite")
-        .parquet(stage.resolve(s"slice_$j").toString)
-    }
-    (0 until nSlices).foreach { j =>
-      val dir = stage.resolve(s"slice_$j")
-      val listing = Files.list(dir)
-      val part =
-        try listing.filter(_.getFileName.toString.endsWith(".parquet"))
-          .findFirst().get()
-        finally listing.close()
-      val staged = stage.resolve(s"slice_$j.parquet")
-      Files.move(part, staged)
-      Files.setLastModifiedTime(staged,
-        java.nio.file.attribute.FileTime.fromMillis(
-          1000000000000L + j * 60000L))
-    }
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
+    stageSlices(srcDf, stage,
+      (0 until nSlices).map(j => col("vec_id") % mod === (2 * j + 1)))
     val gateBatch: (DataFrame, Long) => Unit = { (batch, batchId) =>
       val bfp = graft.Materialize.barrier(batch.select(col("vec_id"), // probe + append
           graft.ops.Similarity.vecFingerprint(col("embedding")).as("fp")),
@@ -988,8 +885,7 @@ object EventStream {
         .groupBy("fp").agg(min("vec_id").as("exact_id"))
         .write.mode("append").parquet(idx)
     }
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "8")
+    withConf(spark, StreamPartitions) {
       val q = readParquetStream(spark, stage.toString,
           maxFilesPerTrigger = 1,
           sourceSchema = srcDf.select("vec_id", "embedding").schema)
@@ -999,8 +895,6 @@ object EventStream {
         .start()
       q.awaitTermination()
       spark.read.parquet(out).orderBy("vec_id")
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevParts)
     }
   }
 

@@ -15,7 +15,7 @@ class CsvSourcesSpec extends SparkTestBase {
   import spark.implicits._
 
   private def tmpDir(prefix: String): String =
-    Files.createTempDirectory(prefix).toString
+    Scratch.fresh(prefix)
 
   test("schema-less header read: every column StringType (S2)") {
     val dir = tmpDir("csv-s2")

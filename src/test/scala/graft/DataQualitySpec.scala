@@ -435,8 +435,7 @@ class DataQualitySpec extends SparkTestBase {
   }
 
   test("readEvolved: footer merge + default fill + gen provenance") {
-    val root = java.nio.file.Files
-      .createTempDirectory("graft-evo-spec").toString
+    val root = Scratch.fresh("evo-spec")
     Seq((1L, 10.0), (2L, 20.0)).toDF("k", "amt")
       .write.parquet(s"$root/gen=1")
     Seq((3L, 30.0, "HI"), (4L, 40.0, null.asInstanceOf[String]))

@@ -159,12 +159,12 @@ class EdgeCaseSpec extends SparkTestBase {
 
   test("multimodal kernels: empty corpus and empty payload") {
     assert(graft.ops.Multimodal.decodeMeta(spark, emptyDocs).count() == 0)
-    assert(graft.ops.Multimodal.featureExtract(spark, emptyDocs).count() == 0)
+    assert(graft.ops.Multimodal.featureHistogram(spark, emptyDocs).count() == 0)
     assert(graft.ops.Multimodal.frameSample(spark, emptyDocs).count() == 0)
     val one = Seq((1L, "")).toDF("doc_id", "text")
     assert(graft.ops.Multimodal.frameSample(spark, one).count() == 0)
-    val feats = graft.ops.Multimodal.featureExtract(spark, one).head()
-    assert(feats.getSeq[Float](1).forall(_ == 0.0f))
+    val hist = graft.ops.Multimodal.featureHistogram(spark, one).head()
+    assert(hist.getString(1).split(",").forall(_ == "0"))
   }
 
   test("multimodal resize: fixed output size incl. empty/null payloads") {
@@ -177,11 +177,11 @@ class EdgeCaseSpec extends SparkTestBase {
     assert(r.filter(col("width") =!= 16 || col("height") =!= 8).count() == 0)
   }
 
-  test("multimodal featureExtract/frameSample shapes on real docs") {
+  test("multimodal featureHistogram/frameSample shapes on real docs") {
     val docs = Tables(spark, sf0001, "documents").limit(5)
-    val f = graft.ops.Multimodal.featureExtract(spark, docs, dim = 8)
+    val f = graft.ops.Multimodal.featureHistogram(spark, docs, dim = 8)
     assert(f.count() == 5)
-    assert(f.head().getSeq[Float](1).length == 8)
+    assert(f.head().getString(1).split(",").length == 8)
     val frames = graft.ops.Multimodal.frameSample(spark, docs,
       frameBytes = 16, stride = 2)
     assert(frames.count() > 0)
@@ -229,8 +229,7 @@ class EdgeCaseSpec extends SparkTestBase {
     // z-order write on a CONSTANT column: bucket degenerates to 0, the
     // layout still writes and round-trips
     val const = Seq((1L, 5.0, 9.0), (2L, 5.0, 3.0)).toDF("k", "x", "y")
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-zorder-const").toString
+    val out = Scratch.fresh("zorder-const")
     graft.sources.ZOrder.write(const, out, "x", "y", bits = 4, numFiles = 2)
     assert(spark.read.parquet(out).count() == 2)
     // mortonKey rejects out-of-contract bit widths

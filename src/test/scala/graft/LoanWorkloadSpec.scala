@@ -61,7 +61,7 @@ class LoanWorkloadSpec extends SparkTestBase {
     }
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 4), Csv.loanSchema)
-    val dir = java.nio.file.Files.createTempDirectory("loan-fixture").toString
+    val dir = Scratch.fresh("loan-fixture")
     Csv.writePartitioned(df, dir) // UTF-8 multi-file CSV
     Csv.readLoan(spark, dir)
   }
@@ -79,7 +79,7 @@ class LoanWorkloadSpec extends SparkTestBase {
   }
 
   test("T1 output round-trips through the GBK sink like the ref goldens") {
-    val dir = java.nio.file.Files.createTempDirectory("t1-gbk").toString
+    val dir = Scratch.fresh("t1-gbk")
     Csv.writeSingle(LoanWorkload.t1IndustryCount(loan), dir)
     val back = Csv.readSchemaless(spark, dir, encoding = "GBK")
     assert(back.count() == Industries.length)

@@ -77,23 +77,33 @@ class MaterializeSpec extends SparkTestBase {
     }
   }
 
-  test("no file but Materialize.scala calls Spark's materialization APIs") {
-    val raw = Seq("localCheckpoint(", ".persist(", ".cache()",
-      "getPersistentRDDs", "StorageLevel")
+  test("raw materialization and scratch-file calls live only in their seams") {
+    val seams = Seq(
+      "Materialize.scala" -> Seq("localCheckpoint(", ".persist(", ".cache()",
+        "getPersistentRDDs", "StorageLevel"),
+      "Scratch.scala" -> Seq("java.io.tmpdir", "createTempDirectory",
+        "ProcessHandle.current", "addShutdownHook"))
     val root = new java.io.File("src/main/scala")
     assert(root.isDirectory, s"run from the repository root: $root")
     def files(d: java.io.File): Seq[java.io.File] =
       d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val offenders = for {
-      f <- files(root) if f.getName.endsWith(".scala") &&
-        f.getName != "Materialize.scala"
+    val code = for {
+      f <- files(root) if f.getName.endsWith(".scala")
       src = scala.io.Source.fromFile(f, "UTF-8")
       (line, n) <- try src.getLines().toList.zipWithIndex finally src.close()
-      code = line.trim
-      if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
-      if raw.exists(code.contains)
-    } yield s"${f.getPath}:${n + 1}: $code"
+      c = line.trim
+      if !c.startsWith("//") && !c.startsWith("*") && !c.startsWith("/*")
+    } yield (f, n + 1, c)
+    val offenders = for {
+      (seam, raw) <- seams
+      (f, n, c) <- code if f.getName != seam && raw.exists(c.contains)
+    } yield s"${f.getPath}:$n: $c"
     if (offenders.nonEmpty)
-      fail("materialize through graft.Materialize:\n" + offenders.mkString("\n"))
+      fail("go through graft.Materialize / graft.Scratch:\n" +
+        offenders.mkString("\n"))
+    // the one exit hook: Scratch deletes its root, nothing else registers
+    val hooks = code.filter(_._3.contains("addShutdownHook"))
+    assert(hooks.map(_._1.getName) == Seq("Scratch.scala"),
+      s"expected exactly one exit hook, in Scratch.scala: $hooks")
   }
 }

@@ -71,7 +71,7 @@ class MlPipelineSpec extends SparkTestBase {
       .first().getSeq[Double](0)
     assert(v.length == 3) // idx, bucket, raw
     // model persistence (S6, ref FP: save with overwrite - exp4_work4.ipynb:690)
-    val dir = java.nio.file.Files.createTempDirectory("graft-model").toString
+    val dir = Scratch.fresh("model")
     model.write.overwrite().save(dir)
     val re = org.apache.spark.ml.PipelineModel.load(dir)
     assert(re.stages.length == model.stages.length)

@@ -105,8 +105,7 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   test("partitioned sink read-back prunes on PartitionFilters") {
-    val out = java.nio.file.Files
-      .createTempDirectory("graft-part-prune").toString
+    val out = Scratch.fresh("part-prune")
     graft.sources.Partitioned.write(
       Tables(spark, sf0001, "orders").limit(1000), out, "o_orderpriority")
     val plan = graft.sources.Partitioned

@@ -20,7 +20,7 @@ class ReferenceGoldenSpec extends SparkTestBase {
     // the checkout carries a stale Hadoop .crc sidecar next to the golden
     // (from the original Windows run); copy just the CSV so the local
     // filesystem reader doesn't trip on it
-    val dir = java.nio.file.Files.createTempDirectory("golden-t31")
+    val dir = java.nio.file.Paths.get(Scratch.fresh("golden-t31"))
     java.nio.file.Files.copy(java.nio.file.Paths.get(T31Golden),
       dir.resolve("golden.csv"))
     val df = Csv.readSchemaless(spark, dir.resolve("golden.csv").toString,
@@ -47,7 +47,7 @@ class ReferenceGoldenSpec extends SparkTestBase {
 
   test("T3-3 golden: 150,328 rows and every work_year parses > 5 with OUR parser") {
     assume(new java.io.File(T33Golden).exists())
-    val dir = java.nio.file.Files.createTempDirectory("golden-t33")
+    val dir = java.nio.file.Paths.get(Scratch.fresh("golden-t33"))
     java.nio.file.Files.copy(java.nio.file.Paths.get(T33Golden),
       dir.resolve("golden.csv"))
     val df = Csv.readSchemaless(spark, dir.resolve("golden.csv").toString)

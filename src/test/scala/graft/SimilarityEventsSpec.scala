@@ -101,8 +101,7 @@ class SimilarityEventsSpec extends SparkTestBase {
 
   test("probeLshIndex == inline lshMultiProbeTopK") {
     val emb = Tables(spark, sf0001, "embeddings")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-lsh-index-spec").toString
+    val dir = Scratch.fresh("lsh-index-spec")
     graft.ops.Similarity.buildLshIndex(emb, dir)
     val persisted = graft.ops.Similarity
       .probeLshIndex(spark, dir, emb, 10, 5).collect().toSeq
@@ -261,8 +260,7 @@ class SimilarityEventsSpec extends SparkTestBase {
 
   test("probeIvfIndex == inline ivfTopK; probe scan prunes partitions") {
     val emb = Tables(spark, sf0001, "embeddings")
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-ivf-spec").toString
+    val idx = Scratch.fresh("ivf-spec")
     graft.ops.Similarity.buildIvfIndex(emb, idx)
     val probed = graft.ops.Similarity
       .probeIvfIndex(spark, idx, emb.filter($"vec_id" < 10), 5)
@@ -332,8 +330,7 @@ class SimilarityEventsSpec extends SparkTestBase {
     // build-once/probe-many form answers identically to the inline form
     // (same seeds, same bounded fit sample) and the codes scan carries
     // dynamic partition pruning to the probed lists
-    val idx = java.nio.file.Files
-      .createTempDirectory("graft-ivfpq-spec").toString
+    val idx = Scratch.fresh("ivfpq-spec")
     graft.ops.Similarity.buildIvfPqIndex(emb, idx, fitSampleCap = 250)
     val probed = graft.ops.Similarity.probeIvfPqIndex(spark, idx,
       emb.filter($"vec_id" < 10), 5, nProbe = 6)

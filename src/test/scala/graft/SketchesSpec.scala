@@ -739,8 +739,7 @@ class SketchesSpec extends SparkTestBase {
   // ---- file-level min/max skipping -----------------------------------
 
   test("manifest: band read skips files and equals the plain filter") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-manifest-spec").toString
+    val tmp = Scratch.fresh("manifest-spec")
     val orders = spark.read.parquet(s"$sf001/orders.parquet")
     graft.sources.Manifest.stageClustered(orders, tmp, "o_orderdate", 8)
     val mani = graft.sources.Manifest
@@ -769,8 +768,7 @@ class SketchesSpec extends SparkTestBase {
   }
 
   test("manifest: empty band yields empty result with the right schema") {
-    val tmp = java.nio.file.Files
-      .createTempDirectory("graft-manifest-spec-empty").toString
+    val tmp = Scratch.fresh("manifest-spec-empty")
     val orders = spark.read.parquet(s"$sf001/orders.parquet").limit(100)
     graft.sources.Manifest.stageClustered(orders, tmp, "o_orderdate", 2)
     val mani = graft.sources.Manifest.buildManifest(spark, tmp, "o_orderdate")

@@ -11,14 +11,15 @@ class SnapshotsSpec extends SparkTestBase {
   import spark.implicits._
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft-snap-spec").toString
+    Scratch.fresh("snap-spec")
 
-  private def rm(dir: String): Unit = {
-    def go(p: java.io.File): Unit = {
-      if (p.isDirectory) Option(p.listFiles).toSeq.flatten.foreach(go)
-      p.delete(): Unit
-    }
-    go(new java.io.File(dir))
+  test("snapshot queries key their table by corpus: sf0.001, then sf0.01") {
+    val q = SparkEntry.queries("snapshot_time_travel")
+    q(spark, sf0001).collect()
+    val v2 = q(spark, sf001).filter($"version" === 2L).select("cnt")
+      .as[Long].head()
+    assert(v2 == Tables(spark, sf001, "orders").count(),
+      "the sf0.01 run read the table an earlier sf0.001 run built")
   }
 
   test("commit/read round trip and time travel across versions") {
@@ -33,7 +34,6 @@ class SnapshotsSpec extends SparkTestBase {
     val old = Snapshots.read(spark, root, Some(1L))
       .as[(Long, String)].collect().toSet
     assert(old == Set((1L, "a"), (2L, "b")))
-    rm(root)
   }
 
   test("uncommitted staging data is structurally invisible") {
@@ -44,7 +44,6 @@ class SnapshotsSpec extends SparkTestBase {
       .write.parquet(s"$root/data/orphan-stage")
     assert(Snapshots.read(spark, root).count() == 1L,
       "reader must plan only manifest-listed files")
-    rm(root)
   }
 
   test("version race: loser retries past the taken number") {
@@ -59,7 +58,6 @@ class SnapshotsSpec extends SparkTestBase {
     val v = Snapshots.commit(Seq((2L, 2L)).toDF("k", "v"), root)
     assert(v == 3L, s"commit must skip the taken v2, got v$v")
     assert(Snapshots.read(spark, root, Some(3L)).count() == 1L)
-    rm(root)
   }
 
   test("vacuum: drops old versions + orphans, keeps the retained window") {
@@ -80,7 +78,6 @@ class SnapshotsSpec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       Snapshots.read(spark, root, Some(1L))
     }
-    rm(root)
   }
 
   test("commitAppend: versions accumulate; every version is a prefix") {
@@ -94,7 +91,6 @@ class SnapshotsSpec extends SparkTestBase {
         .select("k").as[Long].collect().toSet
       assert(ks == (1L to v).toSet, s"v$v must be the first $v batches")
     }
-    rm(root)
   }
 
   test("commitDelete: file-granular COW — untouched files carry by reference") {
@@ -119,7 +115,6 @@ class SnapshotsSpec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       Snapshots.read(spark, root, Some(1L))
     }
-    rm(root)
   }
 
   test("commitMerge: update + delete + insert in one version; untouched files carry") {
@@ -146,7 +141,6 @@ class SnapshotsSpec extends SparkTestBase {
     // pre-merge version still time-travels
     assert(Snapshots.read(spark, root, Some(1L)).as[(Long, Long)]
       .collect().toSet.contains((12L, 120L)))
-    rm(root)
   }
 
   test("WAP branch: isolation, fast-forward, and the stale-base conflict") {
@@ -172,7 +166,6 @@ class SnapshotsSpec extends SparkTestBase {
     intercept[java.util.ConcurrentModificationException] {
       Snapshots.fastForward(root, "audit2")
     }
-    rm(root)
   }
 
   test("WAP branch: open branches pin their files against vacuum; dropBranch releases") {
@@ -189,7 +182,6 @@ class SnapshotsSpec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       Snapshots.readBranch(spark, root, "wip")
     }
-    rm(root)
   }
 
   test("readEvolved: appended new column is NULL on old files; old readers unaffected") {
@@ -205,7 +197,6 @@ class SnapshotsSpec extends SparkTestBase {
     val v1 = Snapshots.read(spark, root, Some(1L))
     assert(v1.columns.toSeq == Seq("k", "v"))
     assert(v1.count() == 2)
-    rm(root)
   }
 
   test("commitMerge: all-tombstone batch shrinks the table; racing append survives") {
@@ -222,7 +213,6 @@ class SnapshotsSpec extends SparkTestBase {
     assert(v == 3L) // the racing append took v2; the merge rebased to v3
     assert(Snapshots.read(spark, root).as[(Long, Long)].collect().toSet
       == Set((1L, 1L), (3L, 3L), (9L, 9L)))
-    rm(root)
   }
 
   test("commitDelete: no matches carries everything; full erase -> empty table version") {
@@ -239,7 +229,6 @@ class SnapshotsSpec extends SparkTestBase {
     assert(c2 == 0)
     val emptied = Snapshots.read(spark, root, Some(v2))
     assert(emptied.count() == 0L && emptied.columns.toSeq == Seq("k"))
-    rm(root)
   }
 
   test("commitClustered/readBand: stats sidecars skip files across stages") {
@@ -272,7 +261,6 @@ class SnapshotsSpec extends SparkTestBase {
     val openedAfter = after.select(
       org.apache.spark.sql.functions.input_file_name()).distinct().count()
     assert(openedAfter < 8, s"post-vacuum pruning lost: $openedAfter")
-    rm(root)
   }
 
   test("readVersionDelta: exactly the appended rows, refusal modes") {
@@ -291,7 +279,6 @@ class SnapshotsSpec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       Snapshots.readVersionDelta(spark, root, 1L, 9L) // never published
     }
-    rm(root)
   }
 
   test("refuses reads with no committed snapshot or unknown version") {
@@ -301,7 +288,6 @@ class SnapshotsSpec extends SparkTestBase {
     intercept[IllegalArgumentException] {
       Snapshots.read(spark, root, Some(7L))
     }
-    rm(root)
   }
 
   test("commitDelete keeps rows whose predicate evaluates to NULL " +
@@ -318,7 +304,6 @@ class SnapshotsSpec extends SparkTestBase {
       .select("k").as[Long].collect().toSet
     assert(kept == Set(2L, 3L),
       s"NULL-predicate row was erased: kept only $kept")
-    rm(root)
   }
 
   test("commitDelete racing commitAppend: the appended file survives " +
@@ -344,7 +329,6 @@ class SnapshotsSpec extends SparkTestBase {
     // no appended row silently dropped; every 'drop' row (including the
     // concurrently appended one) deleted
     assert(finalRows == Set((1L, "keep"), (3L, "keep")), finalRows.toString)
-    rm(root)
   }
 
   test("concurrent delete/delete is a write-write conflict, not silent " +
@@ -368,7 +352,6 @@ class SnapshotsSpec extends SparkTestBase {
     val rows = Snapshots.read(spark, root)
       .as[(Long, String)].collect().toSet
     assert(rows == Set((1L, "a")))
-    rm(root)
   }
 
   test("commitAppend under real thread contention: every appender's " +
@@ -385,7 +368,6 @@ class SnapshotsSpec extends SparkTestBase {
     assert(vs.toSet.size == 6, s"versions must be distinct: $vs")
     val keys = Snapshots.read(spark, root).select("k").as[Long].collect().toSet
     assert(keys == (0L to 6L).toSet, s"lost an append: $keys")
-    rm(root)
   }
 
   test("compact: identical contents in targetFiles files; time travel " +
@@ -418,7 +400,6 @@ class SnapshotsSpec extends SparkTestBase {
           ()
         })
     }
-    rm(root)
   }
 
   test("commitClustered(append) racing another commit keeps both " +
@@ -438,7 +419,6 @@ class SnapshotsSpec extends SparkTestBase {
     assert(v == 3L)
     val keys = Snapshots.read(spark, root).select("k").as[Long].collect().toSet
     assert(keys == Set(1L, 2L, 3L, 4L), s"append dropped files: $keys")
-    rm(root)
   }
 
   test("commitMerge refuses duplicate change keys before staging anything") {
@@ -452,7 +432,6 @@ class SnapshotsSpec extends SparkTestBase {
     assert(e.getMessage.contains("unique change keys"))
     // nothing staged, nothing published: still one version, one row
     assert(Snapshots.read(spark, root).count() == 1L)
-    rm(root)
   }
 
   test("branch lifecycle guards: reads never mint directories, " +
@@ -480,6 +459,5 @@ class SnapshotsSpec extends SparkTestBase {
     // after a drop the name is reusable (the token goes with the dir)
     Snapshots.dropBranch(root, "audit3")
     assert(Snapshots.createBranch(root, "audit3") >= 1L)
-    rm(root)
   }
 }

@@ -112,7 +112,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("readParquetStream picks up files as micro-batches") {
-    val dir = java.nio.file.Files.createTempDirectory("stream-src").toString
+    val dir = Scratch.fresh("stream-src")
     val batch1 = Seq(
       Event(1, ts(0), 1, "click", 1.0), Event(2, ts(10), 2, "view", 2.0))
     val out = spark.createDataFrame(
@@ -167,8 +167,7 @@ class StreamingSpec extends SparkTestBase {
       (5L, textA2, "en", "S"),              // c2: near_dup of corpus 2
       (11L, "entirely novel thing here", "en", "S")) // c2: new
       .toDF("doc_id", "text", "lang", "source")
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-gate-parity-spec")
+    val dir = java.nio.file.Paths.get(Scratch.fresh("gate-parity-spec"))
     val staged = dir.resolve("stage")
     docs.coalesce(1).write.mode("overwrite").parquet(staged.toString)
     val listing = java.nio.file.Files.list(staged)
@@ -281,7 +280,7 @@ class StreamingSpec extends SparkTestBase {
   test("checkpoint resume: a restarted stream processes only new files, exactly once") {
     import org.apache.spark.sql.DataFrame
     import org.apache.spark.sql.functions.col
-    val root = java.nio.file.Files.createTempDirectory("graft-resume")
+    val root = java.nio.file.Paths.get(Scratch.fresh("resume"))
     val src = root.resolve("src"); val ckpt = root.resolve("ckpt")
     java.nio.file.Files.createDirectories(src)
     def writeSlice(name: String, ids: Seq[Long]): Unit = {

@@ -823,8 +823,7 @@ class TextDedupSpec extends SparkTestBase {
   }
 
   test("appendToSigIndex: cycle-2 probe sees cycle-1 admissions as corpus") {
-    val dir = java.nio.file.Files
-      .createTempDirectory("graft-sig-append-spec").toString
+    val dir = Scratch.fresh("sig-append-spec")
     val longA = (1 to 40).map(i => s"ctok$i").mkString(" ")  // corpus doc
     val longB = (1 to 40).map(i => s"ntok$i").mkString(" ")  // admitted in c1
     val longB2 = (1 to 39).map(i => s"ntok$i").mkString(" ") + " ntokX"
@@ -847,8 +846,7 @@ class TextDedupSpec extends SparkTestBase {
       (5L, "exact_dup", Some(1L)),
       (7L, "new", None)))
     // negative control: a fresh, never-appended index misses all of it
-    val dir2 = java.nio.file.Files
-      .createTempDirectory("graft-sig-append-ctl").toString
+    val dir2 = Scratch.fresh("sig-append-ctl")
     Dedup.buildSigIndex(corpus, dir2)
     val ctl = Dedup.probeSigIndex(spark, dir2, batch2)
       .as[(Long, String, Option[Long])].collect().toSeq
@@ -856,8 +854,7 @@ class TextDedupSpec extends SparkTestBase {
   }
 
   test("sig-index REBUILD re-scopes the caps appendToSigIndex pins") {
-    def tmp(tag: String) = java.nio.file.Files
-      .createTempDirectory(s"graft-sig-rebuild-$tag").toString
+    def tmp(tag: String) = Scratch.fresh(s"sig-rebuild-$tag")
     val dirA = tmp("a"); val dirB = tmp("b")
     // d0 and the batch-1 doc share exactly ONE shingle ('a b c'); the
     // rest of batch-1's vocabulary is disjoint, so it probes as `new`

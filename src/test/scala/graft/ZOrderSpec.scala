@@ -7,8 +7,7 @@ import graft.sources.ZOrder
 class ZOrderSpec extends SparkTestBase {
   import spark.implicits._
 
-  private val tmp = java.nio.file.Files
-    .createTempDirectory("graft-zorder-spec").toString
+  private val tmp = Scratch.fresh("zorder-spec")
 
   test("mortonKey: bit interleave, known values") {
     val got = Seq((0L, 0L), (1L, 0L), (0L, 1L), (3L, 5L), (1023L, 1023L))
