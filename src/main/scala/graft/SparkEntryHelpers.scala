@@ -477,12 +477,15 @@ trait SparkEntryHelpers {
   /** Pick count for fp_pps_sample (shared with its generated oracle). */
   val PpsSampleK = 50
 
-  /** The unthresholded (all-pairs, basket-capped) co-purchase edge list
-    * the triangle family runs on — triangle density IS the signal, a
-    * pre-threshold would erase it. No .distinct() here: triangleCounts /
-    * the sampled estimator canonicalize + dedup their input themselves. */
-  private[graft] def copurchaseTriEdges(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "lineitem")
+  /** Every (da < db) part pair of each order's basket, one row per order
+    * that holds it: the unthresholded (all-pairs, basket-capped) edge
+    * stream the triangle family runs on — triangle density IS the
+    * signal, a pre-threshold would erase it — and the input of
+    * [[copurchaseEdges]] and copurchase_pairs. No .distinct() here:
+    * triangleCounts / the sampled estimator canonicalize + dedup their
+    * input themselves. */
+  private[graft] def copurchaseTriEdges(lineitem: DataFrame): DataFrame =
+    lineitem
       .groupBy("l_orderkey")
       .agg(slice(array_sort(collect_set(col("l_partkey"))),
         1, CopurchaseMaxBasket).as("parts"))
@@ -490,6 +493,25 @@ trait SparkEntryHelpers {
         transform(filter(col("parts"), b => b > a),
           b => struct(a.as("da"), b.as("db")))))).as("p"))
       .select(col("p.da").as("da"), col("p.db").as("db"))
+
+  /** The co-purchase part graph every other graph_* query runs on: the
+    * [[copurchaseTriEdges]] pairs seen in at least 2 orders, as unique
+    * (da < db) rows. Single co-occurrences are noise, and the support
+    * threshold keeps the graph entity-vocabulary-sized — ~3.5k edges at
+    * both sf0.01 and sf0.1 — instead of corpus-sized. */
+  private[graft] def copurchaseEdges(lineitem: DataFrame): DataFrame =
+    copurchaseTriEdges(lineitem)
+      .groupBy("da", "db")
+      .agg(count(lit(1)).as("n_orders"))
+      .filter(col("n_orders") >= 2)
+      .select("da", "db")
+
+  /** The graph_bfs / graph_ppr seed set: every node of `edges` whose id
+    * is a multiple of 101. */
+  private[graft] def copurchaseSeeds(edges: DataFrame): DataFrame =
+    edges.select(col("da").as("node"))
+      .union(edges.select(col("db").as("node")))
+      .filter(col("node") % 101 === 0).distinct()
 
   /** graph_kcore parameters, shared with the generated unrolled oracle:
     * the 2-core of the n_orders≥2 co-purchase graph peels in ≤ 6 rounds

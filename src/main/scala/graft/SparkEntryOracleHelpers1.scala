@@ -615,6 +615,30 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
        |ORDER BY doc_id""".stripMargin
   }
 
+  /** The co-purchase twins' CTE prologue, written independently of the
+    * Spark builders it checks: `li` (each order's distinct parts),
+    * `capped` (its CopurchaseMaxBasket lowest part ids, the row_number
+    * form of slice(array_sort(collect_set))) and, with `pairs`, the
+    * min-support-2 edge list `pairs (da < db)`. Starts at `li AS` and
+    * ends without a comma; `indent` adds that many spaces to every
+    * continuation line, for SQL that is not stripMargin'd. */
+  private[graft] def copurchaseCtes(pairs: Boolean, indent: Int = 0): String = {
+    val ctes =
+      s"""li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+         | capped AS (SELECT l_orderkey, l_partkey FROM (
+         |     SELECT l_orderkey, l_partkey,
+         |            row_number() OVER (PARTITION BY l_orderkey
+         |                               ORDER BY l_partkey) AS rn
+         |     FROM li) WHERE rn <= $CopurchaseMaxBasket)""".stripMargin
+    val edges =
+      """,
+         | pairs AS (SELECT a.l_partkey AS da, b.l_partkey AS db
+         |           FROM capped a JOIN capped b
+         |             ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
+         |           GROUP BY 1, 2 HAVING count(*) >= 2)""".stripMargin
+    (if (pairs) ctes + edges else ctes).replace("\n", "\n" + " " * indent)
+  }
+
   /** Integer PageRank unrolled to PagerankQueryIters chained CTEs
     * (recursive terms cannot aggregate, so fixed iterations unroll
     * instead) — every step is floor arithmetic matching
@@ -628,16 +652,7 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
          |   FROM sym s JOIN r${i - 1} r ON r.node = s.src
          |   JOIN deg d ON d.src = s.src
          |   GROUP BY s.dst)""".stripMargin).mkString(",\n ")
-    s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       | capped AS (SELECT l_orderkey, l_partkey FROM (
-       |     SELECT l_orderkey, l_partkey,
-       |            row_number() OVER (PARTITION BY l_orderkey
-       |                               ORDER BY l_partkey) AS rn
-       |     FROM li) WHERE rn <= $CopurchaseMaxBasket),
-       | pairs AS (SELECT a.l_partkey AS da, b.l_partkey AS db
-       |           FROM capped a JOIN capped b
-       |             ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |           GROUP BY 1, 2 HAVING count(*) >= 2),
+    s"""WITH ${copurchaseCtes(pairs = true)},
        | sym AS (SELECT da AS src, db AS dst FROM pairs
        |         UNION SELECT db, da FROM pairs),
        | deg AS (SELECT src, count(*) AS outdeg FROM sym GROUP BY 1),
@@ -646,7 +661,7 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
        |SELECT node, CAST(rank AS BIGINT) AS rank FROM r$iters ORDER BY node""".stripMargin
   }
 
-  /** k-core oracle: the [[pagerankOracle]] edge prologue, then
+  /** k-core oracle: the [[copurchaseCtes]] edge prologue, then
     * KcoreRounds unrolled peel stages, then the surviving degrees —
     * floor-free integer counts throughout, so the peel replicates
     * Graphs.kCore exactly. Each stage is formulated as ONE window-
@@ -663,16 +678,7 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
          |     FROM e${i - 1})
          |   WHERE ds >= $KcoreK AND dd >= $KcoreK)""".stripMargin)
       .mkString(",\n ")
-    s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       | capped AS (SELECT l_orderkey, l_partkey FROM (
-       |     SELECT l_orderkey, l_partkey,
-       |            row_number() OVER (PARTITION BY l_orderkey
-       |                               ORDER BY l_partkey) AS rn
-       |     FROM li) WHERE rn <= $CopurchaseMaxBasket),
-       | pairs AS (SELECT a.l_partkey AS da, b.l_partkey AS db
-       |           FROM capped a JOIN capped b
-       |             ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |           GROUP BY 1, 2 HAVING count(*) >= 2),
+    s"""WITH ${copurchaseCtes(pairs = true)},
        | e0 AS (SELECT da AS src, db AS dst FROM pairs
        |        UNION SELECT db, da FROM pairs),
        | $steps
@@ -680,16 +686,14 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
        |FROM e$KcoreRounds GROUP BY 1 ORDER BY node""".stripMargin
   }
 
-  /** Label-propagation oracle: the [[pagerankOracle]] edge prologue,
-    * then LabelPropRounds unrolled synchronous sweeps — per sweep, one
-    * (node, label) neighbor count, a per-node max window, and the
-    * min-label tie-break; the argmax is formulated as
+  /** Shared CTEs of the label-prop family's twins: the
+    * [[copurchaseCtes]] edge prologue, its symmetric closure `sym`, then
+    * LabelPropRounds unrolled synchronous sweeps r1..r`LabelPropRounds`
+    * — per sweep, one (node, label) neighbor count, a per-node max
+    * window, and the min-label tie-break; the argmax is formulated as
     * `min(label) WHERE cnt = max(cnt) OVER node`, which is exactly
     * Graphs.labelProp's `max(struct(cnt, −label))` collapse. Each CTE
     * references its predecessor once (the kcoreOracle inlining rule). */
-  /** Shared CTE prologue for the label-prop family: thresholded
-    * co-purchase pairs, symmetric closure, and the unrolled synchronous
-    * sweeps r1..r`LabelPropRounds` (min-label tie-break replicated). */
   private[graft] def labelPropCtes: String = {
     val steps = (1 to LabelPropRounds).map(i =>
       s"""r$i AS (
@@ -699,16 +703,7 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
          |           FROM sym s JOIN r${i - 1} r ON r.node = s.src
          |           GROUP BY 1, 2))
          |   WHERE cnt = mx GROUP BY node)""".stripMargin).mkString(",\n ")
-    s"""li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       | capped AS (SELECT l_orderkey, l_partkey FROM (
-       |     SELECT l_orderkey, l_partkey,
-       |            row_number() OVER (PARTITION BY l_orderkey
-       |                               ORDER BY l_partkey) AS rn
-       |     FROM li) WHERE rn <= $CopurchaseMaxBasket),
-       | pairs AS (SELECT a.l_partkey AS da, b.l_partkey AS db
-       |           FROM capped a JOIN capped b
-       |             ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |           GROUP BY 1, 2 HAVING count(*) >= 2),
+    s"""${copurchaseCtes(pairs = true)},
        | sym AS (SELECT da AS src, db AS dst FROM pairs
        |         UNION SELECT db, da FROM pairs),
        | r0 AS (SELECT DISTINCT src AS node, src AS label FROM sym),
@@ -718,16 +713,7 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
   /** Assortativity twin: the same co-purchase prologue, stub moments,
     * and the single final floor division. */
   private[graft] def assortativityOracle: String =
-    s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       | capped AS (SELECT l_orderkey, l_partkey FROM (
-       |     SELECT l_orderkey, l_partkey,
-       |            row_number() OVER (PARTITION BY l_orderkey
-       |                               ORDER BY l_partkey) AS rn
-       |     FROM li) WHERE rn <= $CopurchaseMaxBasket),
-       | pairs AS (SELECT a.l_partkey AS da, b.l_partkey AS db
-       |           FROM capped a JOIN capped b
-       |             ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |           GROUP BY 1, 2 HAVING count(*) >= 2),
+    s"""WITH ${copurchaseCtes(pairs = true)},
        | stubs AS (SELECT da AS src, db AS dst FROM pairs
        |           UNION ALL SELECT db, da FROM pairs),
        | deg AS (SELECT src, CAST(count(*) AS BIGINT) AS deg
@@ -748,15 +734,6 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
        |                 // (m2 * sxx - sx * sx) END AS r_milli
        |FROM t""".stripMargin
 
-  /** Connected-components twin: RECURSIVE label spread — every node
-    * accumulates the labels of everything it can reach (set-semantics
-    * UNION terminates at the closure), then min per node = the
-    * component's min node id, the exact fixpoint the Spark side's
-    * shortcutting propagation converges to (and asserts). A fixed-round
-    * unroll was tried first and planned pathologically in DuckDB
-    * (deeply nested inlined CTE chains); the recursive form is the
-    * engine's native iteration and closes in seconds at oracle scale.
-    * Closure size is Σ comp², fine at sf0.01 (giant component ~1.9k). */
   /** Shared CTE chain for the sampled-triangle twins: the co-purchase
     * canonical edges, the portable-hash p=1/4 edge sample (coefficient
     * index 31 — the Spark predicate verbatim), and the id-ordered
@@ -765,12 +742,7 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
     * degree-ordered engine exactly). `tail` is the final SELECT. */
   private[graft] def triSampledOracle(tail: String): String = {
     import Portable.{P1, aCoef, bCoef}
-    s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       | capped AS (SELECT l_orderkey, l_partkey FROM (
-       |     SELECT l_orderkey, l_partkey,
-       |            row_number() OVER (PARTITION BY l_orderkey
-       |                               ORDER BY l_partkey) AS rn
-       |     FROM li) WHERE rn <= $CopurchaseMaxBasket),
+    s"""WITH ${copurchaseCtes(pairs = false)},
        | e AS MATERIALIZED (
        |       SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
        |       FROM capped a JOIN capped b
@@ -789,18 +761,18 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
        |$tail""".stripMargin
   }
 
+  /** Connected-components twin: RECURSIVE label spread — every node
+    * accumulates the labels of everything it can reach (set-semantics
+    * UNION terminates at the closure), then min per node = the
+    * component's min node id, the exact fixpoint the Spark side's
+    * shortcutting propagation converges to (and asserts). A fixed-round
+    * unroll was tried first and planned pathologically in DuckDB
+    * (deeply nested inlined CTE chains); the recursive form is the
+    * engine's native iteration and closes in seconds at oracle scale.
+    * Closure size is Σ comp², fine at sf0.01 (giant component ~1.9k). */
   private[graft] def componentsOracle: String =
     s"""WITH RECURSIVE
-       | li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       | capped AS (SELECT l_orderkey, l_partkey FROM (
-       |     SELECT l_orderkey, l_partkey,
-       |            row_number() OVER (PARTITION BY l_orderkey
-       |                               ORDER BY l_partkey) AS rn
-       |     FROM li) WHERE rn <= $CopurchaseMaxBasket),
-       | pairs AS (SELECT a.l_partkey AS da, b.l_partkey AS db
-       |           FROM capped a JOIN capped b
-       |             ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |           GROUP BY 1, 2 HAVING count(*) >= 2),
+       | ${copurchaseCtes(pairs = true)},
        | sym AS (SELECT da AS src, db AS dst FROM pairs
        |         UNION SELECT db, da FROM pairs),
        | nodes AS (SELECT DISTINCT src AS node FROM sym),
@@ -821,16 +793,7 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
     * milli sum. */
   private[graft] def harmonicOracle: String =
     s"""WITH RECURSIVE
-       | li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       | capped AS (SELECT l_orderkey, l_partkey FROM (
-       |     SELECT l_orderkey, l_partkey,
-       |            row_number() OVER (PARTITION BY l_orderkey
-       |                               ORDER BY l_partkey) AS rn
-       |     FROM li) WHERE rn <= $CopurchaseMaxBasket),
-       | pairs AS (SELECT a.l_partkey AS da, b.l_partkey AS db
-       |           FROM capped a JOIN capped b
-       |             ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |           GROUP BY 1, 2 HAVING count(*) >= 2),
+       | ${copurchaseCtes(pairs = true)},
        | sym AS (SELECT da AS src, db AS dst FROM pairs
        |         UNION SELECT db, da FROM pairs),
        | seeds AS (SELECT node FROM (
@@ -851,16 +814,7 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
     * (no float log — the binary-digit-count formulation of the Spark
     * side), CCDF over the ≤ 64-row binned table. */
   private[graft] def degreeDistOracle: String =
-    s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       | capped AS (SELECT l_orderkey, l_partkey FROM (
-       |     SELECT l_orderkey, l_partkey,
-       |            row_number() OVER (PARTITION BY l_orderkey
-       |                               ORDER BY l_partkey) AS rn
-       |     FROM li) WHERE rn <= $CopurchaseMaxBasket),
-       | pairs AS (SELECT a.l_partkey AS da, b.l_partkey AS db
-       |           FROM capped a JOIN capped b
-       |             ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |           GROUP BY 1, 2 HAVING count(*) >= 2),
+    s"""WITH ${copurchaseCtes(pairs = true)},
        | stubs AS (SELECT da AS node FROM pairs
        |           UNION ALL SELECT db FROM pairs),
        | deg AS (SELECT node, CAST(count(*) AS BIGINT) AS degree
@@ -924,16 +878,7 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
     * row_number neighbor cap replicated structurally, wedge pair
     * counts, the NOT-EXISTS edge exclusion, exact degrees, floor bp. */
   private[graft] def jaccardLinksOracle: String =
-    s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       | capped AS (SELECT l_orderkey, l_partkey FROM (
-       |     SELECT l_orderkey, l_partkey,
-       |            row_number() OVER (PARTITION BY l_orderkey
-       |                               ORDER BY l_partkey) AS rn
-       |     FROM li) WHERE rn <= $CopurchaseMaxBasket),
-       | pairs AS (SELECT a.l_partkey AS da, b.l_partkey AS db
-       |           FROM capped a JOIN capped b
-       |             ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |           GROUP BY 1, 2 HAVING count(*) >= 2),
+    s"""WITH ${copurchaseCtes(pairs = true)},
        | adj AS (SELECT da AS src, db AS dst FROM pairs
        |         UNION ALL SELECT db, da FROM pairs),
        | deg AS (SELECT src, count(*) AS deg FROM adj GROUP BY 1),
@@ -957,7 +902,7 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
        |        JOIN deg dy ON dy.src = ne.b
        |ORDER BY jacc_bp DESC, a, b LIMIT 50""".stripMargin
 
-  /** Personalized-PageRank oracle: the [[pagerankOracle]] CTE prologue
+  /** Personalized-PageRank oracle: the [[copurchaseCtes]] prologue
     * with seed-gated restart mass, unrolled left-join rounds keeping
     * zero-inflow nodes — every floor step mirrored. */
   private[graft] def pprOracle: String = {
@@ -973,16 +918,7 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
          |     JOIN deg d2 ON d2.src = s.src
          |     GROUP BY 1) f ON f.node = n.node)""".stripMargin)
       .mkString(",\n ")
-    s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       | capped AS (SELECT l_orderkey, l_partkey FROM (
-       |     SELECT l_orderkey, l_partkey,
-       |            row_number() OVER (PARTITION BY l_orderkey
-       |                               ORDER BY l_partkey) AS rn
-       |     FROM li) WHERE rn <= $CopurchaseMaxBasket),
-       | pairs AS (SELECT a.l_partkey AS da, b.l_partkey AS db
-       |           FROM capped a JOIN capped b
-       |             ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |           GROUP BY 1, 2 HAVING count(*) >= 2),
+    s"""WITH ${copurchaseCtes(pairs = true)},
        | sym AS (SELECT da AS src, db AS dst FROM pairs
        |         UNION SELECT db, da FROM pairs),
        | deg AS (SELECT src, count(*) AS outdeg FROM sym GROUP BY 1),

@@ -418,16 +418,7 @@ trait SparkEntryOracleHelpers2 extends SparkEntryOracleHelpers1 {
     * (node, depth); UNION (distinct) bounds the walk at |V|·maxHops rows
     * and min(d) recovers the hop distance. */
   private[graft] def bfsOracle: String =
-    s"""WITH RECURSIVE li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-       | capped AS (SELECT l_orderkey, l_partkey FROM (
-       |     SELECT l_orderkey, l_partkey,
-       |            row_number() OVER (PARTITION BY l_orderkey
-       |                               ORDER BY l_partkey) AS rn
-       |     FROM li) WHERE rn <= $CopurchaseMaxBasket),
-       | pairs AS (SELECT a.l_partkey AS da, b.l_partkey AS db
-       |           FROM capped a JOIN capped b
-       |             ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey
-       |           GROUP BY 1, 2 HAVING count(*) >= 2),
+    s"""WITH RECURSIVE ${copurchaseCtes(pairs = true)},
        | sym AS (SELECT da AS src, db AS dst FROM pairs
        |         UNION SELECT db, da FROM pairs),
        | seeds AS (SELECT DISTINCT src AS node FROM sym WHERE src % 101 = 0),

@@ -82,12 +82,7 @@ trait SparkEntryOracles1 extends SparkEntryQueries3 {
     // graph_triangles: id-ordered (u < v) edges; each triangle appears
     // once as n1 < n2 < n3; per-node counts via unnest of the corners.
     "graph_triangles" ->
-      s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-         capped AS (SELECT l_orderkey, l_partkey FROM (
-             SELECT l_orderkey, l_partkey,
-                    row_number() OVER (PARTITION BY l_orderkey
-                                       ORDER BY l_partkey) AS rn
-             FROM li) WHERE rn <= $CopurchaseMaxBasket),
+      s"""WITH ${copurchaseCtes(pairs = false, indent = 8)},
          e AS (SELECT DISTINCT a.l_partkey AS u, b.l_partkey AS v
                FROM capped a JOIN capped b
                  ON a.l_orderkey = b.l_orderkey
@@ -754,12 +749,7 @@ trait SparkEntryOracles1 extends SparkEntryQueries3 {
     // capped-basket semantics (MaxBasket lowest part ids per order) —
     // identical to the Spark side's slice(array_sort(collect_set(...)))
     "copurchase_pairs" ->
-      s"""WITH li AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
-         capped AS (SELECT l_orderkey, l_partkey FROM (
-             SELECT l_orderkey, l_partkey,
-                    row_number() OVER (PARTITION BY l_orderkey
-                                       ORDER BY l_partkey) AS rn
-             FROM li) WHERE rn <= $CopurchaseMaxBasket)
+      s"""WITH ${copurchaseCtes(pairs = false, indent = 8)}
          SELECT a.l_partkey AS pa, b.l_partkey AS pb, count(*) AS n_orders
          FROM capped a JOIN capped b
            ON a.l_orderkey = b.l_orderkey AND a.l_partkey < b.l_partkey

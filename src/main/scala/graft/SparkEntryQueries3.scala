@@ -72,14 +72,8 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // pays a third exchange for the distinct and moves every (order,
     // part) row twice — measured 1.9 s vs 1.2 s warm at sf0.1.
     "copurchase_pairs" -> ((s, dir) =>
-      t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(slice(array_sort(collect_set(col("l_partkey"))),
-          1, CopurchaseMaxBasket).as("parts"))
-        .select(explode(flatten(transform(col("parts"), a =>
-          transform(filter(col("parts"), b => b > a),
-            b => struct(a.as("pa"), b.as("pb")))))).as("p"))
-        .groupBy(col("p.pa").as("pa"), col("p.pb").as("pb"))
+      copurchaseTriEdges(t(s, dir, "lineitem"))
+        .groupBy(col("da").as("pa"), col("db").as("pb"))
         .agg(count(lit(1)).as("n_orders"))
         .orderBy(desc("n_orders"), asc("pa"), asc("pb"))
         .limit(20)),
@@ -87,25 +81,12 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // EXT iterative graph centrality: INTEGER PageRank
     // (PagerankQueryIters = 5 fixed rounds here; floor arithmetic —
     // bit-portable, so even the iteration is oracle'd) over the capped
-    // co-purchase part graph at min-support 2
-    // (single co-occurrences are noise, and the support threshold keeps
-    // the graph entity-vocabulary-sized — ~3.5k edges at both sf0.01
-    // and sf0.1 — instead of corpus-sized). The curation use:
-    // authority/quality weighting from a co-occurrence graph.
-    "graph_pagerank" -> ((s, dir) => {
-      val pairs = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(slice(array_sort(collect_set(col("l_partkey"))),
-          1, CopurchaseMaxBasket).as("parts"))
-        .select(explode(flatten(transform(col("parts"), a =>
-          transform(filter(col("parts"), b => b > a),
-            b => struct(a.as("da"), b.as("db")))))).as("p"))
-        .groupBy(col("p.da").as("da"), col("p.db").as("db"))
-        .agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 2)
-        .select("da", "db")
-      graft.ops.Graphs.pagerankInt(pairs, iters = PagerankQueryIters)
-    }),
+    // co-purchase part graph at min-support 2 (copurchaseEdges). The
+    // curation use: authority/quality weighting from a co-occurrence
+    // graph.
+    "graph_pagerank" -> ((s, dir) =>
+      graft.ops.Graphs.pagerankInt(copurchaseEdges(t(s, dir, "lineitem")),
+        iters = PagerankQueryIters)),
 
     // EXT graph: per-node triangle participation over the (capped)
     // co-purchase graph — degree-ordered orientation bounds the wedge
@@ -114,7 +95,8 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // co-purchase pairs (no n_orders floor): triangle density IS the
     // signal, pre-thresholding would erase it.
     "graph_triangles" -> ((s, dir) =>
-      graft.ops.Graphs.triangleCounts(copurchaseTriEdges(s, dir))),
+      graft.ops.Graphs.triangleCounts(
+        copurchaseTriEdges(t(s, dir, "lineitem")))),
     // EXT the BOUNDED scale path of graph_triangles (VERDICT r11 item
     // 2 — the registry's one measured superlinear wall-time at ×100):
     // DOULION edge sampling at exact p=1/4 via the portable pair hash,
@@ -124,12 +106,14 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // hot-node cap would shed nothing or everything); deterministic
     // integers end to end ⇒ hash-oracled, unlike any RNG sampler.
     "graph_triangles_sampled" -> ((s, dir) =>
-      graft.ops.Graphs.triangleCountsSampled(copurchaseTriEdges(s, dir))),
+      graft.ops.Graphs.triangleCountsSampled(
+        copurchaseTriEdges(t(s, dir, "lineitem")))),
     // the estimator's accounting row (the dedup_cap_stats discipline):
     // edge totals vs sampled, the exact scale factor, sampled and
     // scaled triangle totals — what was dropped, said out loud
     "graph_tri_sample_stats" -> ((s, dir) =>
-      graft.ops.Graphs.triangleSampleStats(copurchaseTriEdges(s, dir))),
+      graft.ops.Graphs.triangleSampleStats(
+        copurchaseTriEdges(t(s, dir, "lineitem")))),
 
     // EXT graph: 2-core of the thresholded co-purchase graph — iterative
     // peeling with the in-plan fixpoint certificate (any peel fixpoint
@@ -137,60 +121,26 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // safe). The dense-cohesion screen over the same graph pagerank
     // ranks; 8 rounds covers the measured peel depth (6 at sf0.1) with
     // headroom.
-    "graph_kcore" -> ((s, dir) => {
-      val pairs = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(slice(array_sort(collect_set(col("l_partkey"))),
-          1, CopurchaseMaxBasket).as("parts"))
-        .select(explode(flatten(transform(col("parts"), a =>
-          transform(filter(col("parts"), b => b > a),
-            b => struct(a.as("da"), b.as("db")))))).as("p"))
-        .groupBy(col("p.da").as("da"), col("p.db").as("db"))
-        .agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 2)
-        .select("da", "db")
-      graft.ops.Graphs.kCore(pairs, k = KcoreK, rounds = KcoreRounds)
-    }),
+    "graph_kcore" -> ((s, dir) =>
+      graft.ops.Graphs.kCore(copurchaseEdges(t(s, dir, "lineitem")),
+        k = KcoreK, rounds = KcoreRounds)),
 
     // EXT graph: synchronous label-propagation communities over the
     // thresholded co-purchase graph — the topical-cluster / ring screen
     // (per-community quotas, coordinated-spam excision). Deterministic
     // min-label tie-break means even the sweep trajectory is oracle'd;
     // LabelPropRounds fixed sweeps, labels snapshot not fixpoint.
-    "graph_labelprop" -> ((s, dir) => {
-      val pairs = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(slice(array_sort(collect_set(col("l_partkey"))),
-          1, CopurchaseMaxBasket).as("parts"))
-        .select(explode(flatten(transform(col("parts"), a =>
-          transform(filter(col("parts"), b => b > a),
-            b => struct(a.as("da"), b.as("db")))))).as("p"))
-        .groupBy(col("p.da").as("da"), col("p.db").as("db"))
-        .agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 2)
-        .select("da", "db")
-      graft.ops.Graphs.labelProp(pairs, rounds = LabelPropRounds)
-    }),
+    "graph_labelprop" -> ((s, dir) =>
+      graft.ops.Graphs.labelProp(copurchaseEdges(t(s, dir, "lineitem")),
+        rounds = LabelPropRounds)),
 
     // EXT graph link prediction: common-neighbor Jaccard over the
     // thresholded co-purchase graph — candidates from wedges only
     // (never the n² pair space), hub-capped per the bounded-candidate
     // contract (inert at this corpus's degrees, so exact), existing
     // edges anti-joined away, top-50 suggested links.
-    "graph_jaccard_links" -> ((s, dir) => {
-      val pairs = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(slice(array_sort(collect_set(col("l_partkey"))),
-          1, CopurchaseMaxBasket).as("parts"))
-        .select(explode(flatten(transform(col("parts"), a =>
-          transform(filter(col("parts"), b => b > a),
-            b => struct(a.as("da"), b.as("db")))))).as("p"))
-        .groupBy(col("p.da").as("da"), col("p.db").as("db"))
-        .agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 2)
-        .select("da", "db")
-      graft.ops.Graphs.jaccardNeighbors(pairs)
-    }),
+    "graph_jaccard_links" -> ((s, dir) =>
+      graft.ops.Graphs.jaccardNeighbors(copurchaseEdges(t(s, dir, "lineitem")))),
 
     // EXT graph: modularity scoring of the labelProp partition — the
     // detector's quality number (Newman-Girvan Q in exact integers:
@@ -199,17 +149,7 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // fact, not a judgment call. Overflow-guarded in-plan at 1.5e9
     // edges.
     "graph_modularity" -> ((s, dir) => {
-      val pairs = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(slice(array_sort(collect_set(col("l_partkey"))),
-          1, CopurchaseMaxBasket).as("parts"))
-        .select(explode(flatten(transform(col("parts"), a =>
-          transform(filter(col("parts"), b => b > a),
-            b => struct(a.as("da"), b.as("db")))))).as("p"))
-        .groupBy(col("p.da").as("da"), col("p.db").as("db"))
-        .agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 2)
-        .select("da", "db")
+      val pairs = copurchaseEdges(t(s, dir, "lineitem"))
       graft.ops.Graphs.modularityReport(pairs,
         graft.ops.Graphs.labelProp(pairs, rounds = LabelPropRounds)
           .select("node", "label"))
@@ -220,38 +160,14 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // only rounding is the final floor div, twin-matched), deciding
     // whether hub-capped algorithms bite on this topology; regular
     // graphs surface r NULL (undefined), never a fake 0.
-    "graph_assortativity" -> ((s, dir) => {
-      val pairs = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(slice(array_sort(collect_set(col("l_partkey"))),
-          1, CopurchaseMaxBasket).as("parts"))
-        .select(explode(flatten(transform(col("parts"), a =>
-          transform(filter(col("parts"), b => b > a),
-            b => struct(a.as("da"), b.as("db")))))).as("p"))
-        .groupBy(col("p.da").as("da"), col("p.db").as("db"))
-        .agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 2)
-        .select("da", "db")
-      graft.ops.Graphs.assortativity(pairs)
-    }),
+    "graph_assortativity" -> ((s, dir) =>
+      graft.ops.Graphs.assortativity(copurchaseEdges(t(s, dir, "lineitem")))),
 
     // EXT truncated harmonic centrality: sum of 1/d in floor milli over
     // a 6-hop radius from the 8 lowest nodes — |seeds| simultaneous BFS
     // layers, integer-exact end to end; the all-pairs-free closeness.
-    "graph_harmonic" -> ((s, dir) => {
-      val pairs = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(slice(array_sort(collect_set(col("l_partkey"))),
-          1, CopurchaseMaxBasket).as("parts"))
-        .select(explode(flatten(transform(col("parts"), a =>
-          transform(filter(col("parts"), b => b > a),
-            b => struct(a.as("da"), b.as("db")))))).as("p"))
-        .groupBy(col("p.da").as("da"), col("p.db").as("db"))
-        .agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 2)
-        .select("da", "db")
-      graft.ops.Graphs.harmonicCentrality(pairs)
-    }),
+    "graph_harmonic" -> ((s, dir) =>
+      graft.ops.Graphs.harmonicCentrality(copurchaseEdges(t(s, dir, "lineitem")))),
 
     // EXT connected components: the min-label fixpoint over the
     // copurchase graph (Dedup.resolveClusters — shortcutting min
@@ -259,17 +175,7 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // component sizes. The explicit CC surface the dedup/ER families
     // use internally, exposed as a graph query.
     "graph_components" -> ((s, dir) => {
-      val pairs = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(slice(array_sort(collect_set(col("l_partkey"))),
-          1, CopurchaseMaxBasket).as("parts"))
-        .select(explode(flatten(transform(col("parts"), a =>
-          transform(filter(col("parts"), b => b > a),
-            b => struct(a.as("da"), b.as("db")))))).as("p"))
-        .groupBy(col("p.da").as("da"), col("p.db").as("db"))
-        .agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 2)
-        .select("da", "db")
+      val pairs = copurchaseEdges(t(s, dir, "lineitem"))
       val cc = graft.ops.Dedup.resolveClusters(pairs, "da", "db")
         .select(col("doc_id").as("node"), col("cluster_id").as("component"))
       val sizes = cc.groupBy("component")
@@ -283,20 +189,8 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // over the same co-purchase graph — the skew diagnostic that sizes
     // every broadcast/copartition/cap decision; one edge scan, one
     // node-keyed count, a <=64-row binned aggregate.
-    "graph_degree_dist" -> ((s, dir) => {
-      val pairs = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(slice(array_sort(collect_set(col("l_partkey"))),
-          1, CopurchaseMaxBasket).as("parts"))
-        .select(explode(flatten(transform(col("parts"), a =>
-          transform(filter(col("parts"), b => b > a),
-            b => struct(a.as("da"), b.as("db")))))).as("p"))
-        .groupBy(col("p.da").as("da"), col("p.db").as("db"))
-        .agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 2)
-        .select("da", "db")
-      graft.ops.Graphs.degreeDistribution(pairs)
-    }),
+    "graph_degree_dist" -> ((s, dir) =>
+      graft.ops.Graphs.degreeDistribution(copurchaseEdges(t(s, dir, "lineitem")))),
 
     // EXT percentile winsorization: clamp each event's value into its
     // type's exact [p05, p95] band — the outlier-taming feature-eng pass.
@@ -598,21 +492,8 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // from-trusted-set as a curation signal. Frontier rounds broadcast
     // only the frontier; the oracle is a recursive CTE taking min(d).
     "graph_bfs" -> ((s, dir) => {
-      val pairs = t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(slice(array_sort(collect_set(col("l_partkey"))),
-          1, CopurchaseMaxBasket).as("parts"))
-        .select(explode(flatten(transform(col("parts"), a =>
-          transform(filter(col("parts"), b => b > a),
-            b => struct(a.as("da"), b.as("db")))))).as("p"))
-        .groupBy(col("p.da").as("da"), col("p.db").as("db"))
-        .agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 2)
-        .select("da", "db")
-      val seeds = pairs.select(col("da").as("node"))
-        .union(pairs.select(col("db").as("node")))
-        .filter(col("node") % 101 === 0).distinct()
-      graft.ops.Graphs.bfsHops(pairs, seeds, maxHops = 4)
+      val pairs = copurchaseEdges(t(s, dir, "lineitem"))
+      graft.ops.Graphs.bfsHops(pairs, copurchaseSeeds(pairs), maxHops = 4)
     }),
 
     // EXT gaps-and-islands: per-user consecutive-active-day streaks via
@@ -1064,21 +945,9 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
       // localCheckpoint: the co-purchase derivation feeds BOTH the edge
       // set and the seed extraction — materialize it once (the
       // sketch_cms shared-scan discipline)
-      val pairs = Materialize.barrier(t(s, dir, "lineitem")
-        .groupBy("l_orderkey")
-        .agg(slice(array_sort(collect_set(col("l_partkey"))),
-          1, CopurchaseMaxBasket).as("parts"))
-        .select(explode(flatten(transform(col("parts"), a =>
-          transform(filter(col("parts"), b => b > a),
-            b => struct(a.as("da"), b.as("db")))))).as("p"))
-        .groupBy(col("p.da").as("da"), col("p.db").as("db"))
-        .agg(count(lit(1)).as("n_orders"))
-        .filter(col("n_orders") >= 2)
-        .select("da", "db"), "graph_ppr.pairs")
-      val seeds = pairs.select(col("da").as("node"))
-        .union(pairs.select(col("db").as("node")))
-        .filter(col("node") % 101 === 0).distinct()
-      graft.ops.Graphs.pprInt(pairs, seeds)
+      val pairs = Materialize.barrier(
+        copurchaseEdges(t(s, dir, "lineitem")), "graph_ppr.pairs")
+      graft.ops.Graphs.pprInt(pairs, copurchaseSeeds(pairs))
     }),
 
     // EXT inter-arrival profile: per-user min/max/×2-scaled-median gap —

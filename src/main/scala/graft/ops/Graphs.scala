@@ -82,6 +82,91 @@ object Graphs {
     if (strategy == "broadcast") cand.join(broadcast(visited), keys, "anti")
     else cand.hint("merge").join(visited, keys, "anti")
 
+  /** Undirected closure of `edges`: both orientations of every (a, b)
+    * row as (src, dst), deduplicated. */
+  private def symmetric(edges: DataFrame, a: String, b: String): DataFrame =
+    edges.select(col(a).as("src"), col(b).as("dst"))
+      .union(edges.select(col(b).as("src"), col(a).as("dst")))
+      .distinct()
+
+  /** The family's fixed-round loop: `init` is barriered as
+    * `<name>.round0`, then `step` maps round i−1's state to round i, `n`
+    * times, each result barriered as `<name>.round<i>` (named, so
+    * `getRDDStorageInfo` lists every round). Lineage is truncated per
+    * round exactly like [[Dedup.resolveClusters]]: round i plans against
+    * round i−1's blocks and never recomputes its predecessors. A fixed
+    * count, never a convergence test — the O(d) scheduling pattern of
+    * the whole family. */
+  private def rounds(init: DataFrame, n: Int, name: String)(
+      step: DataFrame => DataFrame): DataFrame =
+    (1 to n).foldLeft(Materialize.barrier(init, s"$name.round0"))(
+      (state, i) => Materialize.barrier(step(state), s"$name.round$i"))
+
+  /** The family's layered-frontier loop ([[bfsHops]], and
+    * [[harmonicCentrality]] with one BFS per seed): `hop0` — (`keys`,
+    * node, dist) rows, `keys` being Seq() or Seq("seed") — is barriered
+    * as `<name>.hop0`; layer h joins ONLY layer h−1 against `sym` under
+    * the chosen strategy, anti-joins every earlier layer ([[antiJoin]])
+    * and is barriered as `<name>.hop<h>` with dist = h, so each round's
+    * work follows the frontier's edge neighborhood, not |V|. Returns the
+    * union of the layers. Because BFS layers are disjoint, a node's first
+    * discovery IS its shortest distance (no min-combine pass), and the
+    * visited set is the lazy union of already-barriered layers — the
+    * round-5 shape re-materialized the growing visited table every round
+    * (a second O(|V|) rows × rounds for data already on the block
+    * store). */
+  private def layers(sym: DataFrame, hop0: DataFrame, keys: Seq[String],
+      maxHops: Int, strategy: String, name: String): DataFrame = {
+    val tags = keys.map(col)
+    (1 to maxHops).foldLeft(List(Materialize.barrier(hop0, s"$name.hop0"))) {
+      (done, h) =>
+        val cand = stateJoin(sym,
+            done.head.select(tags :+ col("node").as("src"): _*), "src", strategy)
+          .select(tags :+ col("dst").as("node"): _*).distinct()
+        val visited = done.reduce(_.unionByName(_)).select(tags :+ col("node"): _*)
+        Materialize.barrier(antiJoin(cand, visited, keys :+ "node", strategy)
+          .withColumn("dist", lit(h.toLong)), s"$name.hop$h") :: done
+    }.reduce(_.unionByName(_))
+  }
+
+  /** The integer rank iteration shared by [[pagerankInt]] and
+    * [[pprInt]]: `init` is round 0's (node, rank, outdeg, seed_base)
+    * state over the `sym` closure, seed_base being the restart mass a
+    * node receives every round — pagerank is the case where every node
+    * receives the base. dst's (outdeg, seed_base) ride ON the cached
+    * edge table (one |E| ⋈ |V| attach paid ONCE): the per-round
+    * aggregate carries them through (all-equal within a dst group), so
+    * each round is ONE join + one partial-agg'd shuffle — the round-5
+    * shape re-joined them per round, an extra |V| join × iters for
+    * values that never change. In the symmetric closure every node has
+    * >= 1 incoming edge and contrib covers EVERY node each round
+    * (zero-rank nodes contribute c = 0 rows, they don't disappear), so
+    * the aggregate reaches every node with no nodes-side join. */
+  private def rankRounds(sym: DataFrame, init: DataFrame, iters: Int,
+      dampBp: Long, strategy: String, name: String): DataFrame = {
+    val edges = prepEdges(
+      sym.join(broadcast(init.select(col("node").as("dst"),
+        col("outdeg").as("dst_outdeg"),
+        col("seed_base").as("dst_seed_base"))), "dst"),
+      "src", strategy, clusterBy = Some("dst"))
+    // state carries outdeg so each round's contribution is a map-side
+    // projection of the |V|-sized state, never an edge-sized join
+    val ranks = rounds(init, iters, name) { state =>
+      val contrib = state.select(col("node").as("src"),
+        expr("rank div outdeg").as("c"))
+      stateJoin(edges, contrib, "src", strategy)
+        .groupBy(col("dst").as("node"))
+        .agg(expr(s"max(dst_seed_base) + sum(c) * $dampBp div 10000")
+          .as("rank"),
+          max("dst_outdeg").as("outdeg"),
+          max("dst_seed_base").as("seed_base"))
+    }
+    // the last round is a barrier, so the edge cache can be released
+    // before returning — repeated calls must not leak blocks
+    edges.unpersist()
+    ranks
+  }
+
   /** INTEGER PageRank over an undirected simple graph, `iters` fixed
     * rounds — every step is integer arithmetic with explicit floor
     * semantics, so ranks are bit-identical on any engine (the float
@@ -106,10 +191,10 @@ object Graphs {
     * sf0.1; broadcast cut it to ~3.5 s). The only per-round exchange is
     * the partial-aggregated contribution sum (map-side combine reduces
     * it to ≤ |V| rows per map partition); re-attaching outdeg is a
-    * |V| ⋈ |V| join AQE broadcasts on its own. Lineage is truncated per
-    * round (localCheckpoint) exactly like resolveClusters. When |V|
-    * exceeds broadcast limits (hundreds of millions of entities), pass
-    * `strategy = "copartition"` — see [[Strategies]]. Rank magnitudes
+    * |V| ⋈ |V| join AQE broadcasts on its own. The rounds go through
+    * [[rankRounds]]. When |V| exceeds broadcast limits (hundreds of
+    * millions of entities), pass `strategy = "copartition"` — see
+    * [[Strategies]]. Rank magnitudes
     * are bounded by scale · |V| (conservation up to floors), far from
     * BIGINT range.
     */
@@ -119,42 +204,15 @@ object Graphs {
     require(iters >= 1 && dampBp >= 0 && dampBp <= 10000,
       s"iters >= 1 and dampBp in [0,10000]; got $iters, $dampBp")
     requireStrategy(strategy)
-    val symBare = edges.select(col(a).as("src"), col(b).as("dst"))
-      .union(edges.select(col(b).as("src"), col(a).as("dst")))
-      .distinct()
-    val deg = Materialize.cache(symBare.groupBy("src")
+    val sym = symmetric(edges, a, b)
+    val deg = Materialize.cache(sym.groupBy("src")
       .agg(count(lit(1)).as("outdeg")), "Graphs.pagerankInt.deg")
-    // dst's outdeg rides ON the cached edge table (one |E| ⋈ |V| attach
-    // paid ONCE): the per-round aggregate then carries it through
-    // (all-equal within a dst group), so each round is ONE join + one
-    // partial-agg'd shuffle — the round-5 shape re-joined deg per round,
-    // an extra |V| broadcast join × iters for a value that never changes
-    val sym = prepEdges(
-      symBare.join(broadcast(deg
-        .select(col("src").as("dst"), col("outdeg").as("dst_outdeg"))),
-        "dst"),
-      "src", strategy, clusterBy = Some("dst"))
     val base = scale * (10000L - dampBp) / 10000L
-    // state carries outdeg so each round's contribution is a map-side
-    // projection of the |V|-sized state, never an edge-sized join
-    var state = Materialize.barrier(deg.select(col("src").as("node"),
-      lit(scale).as("rank"), col("outdeg")), "Graphs.pagerankInt.round0")
-    var i = 0
-    while (i < iters) {
-      val contrib = state.select(col("node").as("src"),
-        expr("rank div outdeg").as("c"))
-      state = Materialize.barrier(stateJoin(sym, contrib, "src", strategy)
-        .groupBy(col("dst").as("node"))
-        .agg(expr(s"CAST($base AS BIGINT) + sum(c) * $dampBp div 10000")
-          .as("rank"),
-          max("dst_outdeg").as("outdeg")), s"Graphs.pagerankInt.round${i + 1}")
-      i += 1
-    }
-    // state is a barrier, so both caches can be released before
-    // returning — repeated calls must not leak blocks
-    sym.unpersist()
+    val ranks = rankRounds(sym, deg.select(col("src").as("node"),
+        lit(scale).as("rank"), col("outdeg"), lit(base).as("seed_base")),
+      iters, dampBp, strategy, "Graphs.pagerankInt")
     deg.unpersist()
-    state.select("node", "rank").orderBy("node")
+    ranks.select("node", "rank").orderBy("node")
   }
 
   /** Personalized PageRank, integer-exact: like [[pagerankInt]] but the
@@ -173,10 +231,8 @@ object Graphs {
     require(iters >= 1 && dampBp >= 0 && dampBp <= 10000,
       s"iters >= 1 and dampBp in [0,10000]; got $iters, $dampBp")
     requireStrategy(strategy)
-    val symBare = edges.select(col(a).as("src"), col(b).as("dst"))
-      .union(edges.select(col(b).as("src"), col(a).as("dst")))
-      .distinct()
-    val deg = Materialize.cache(symBare.groupBy("src")
+    val sym = symmetric(edges, a, b)
+    val deg = Materialize.cache(sym.groupBy("src")
       .agg(count(lit(1)).as("outdeg")), "Graphs.pprInt.deg")
     val base = scale * (10000L - dampBp) / 10000L
     val seedFlag = seeds.select(col("node")).distinct()
@@ -186,37 +242,13 @@ object Graphs {
       .withColumn("seed_base",
         when(col("__seed").isNotNull, lit(base)).otherwise(lit(0L)))
       .drop("__seed")
-    // dst's (outdeg, seed_base) ride ON the cached edge table — the
-    // pagerankInt one-time-attach shape. In the symmetric closure every
-    // node in `nodes` has >= 1 incoming edge and contrib covers EVERY
-    // node each round (zero-rank nodes contribute c = 0 rows, they
-    // don't disappear), so the per-round aggregate reaches every node
-    // and the round-5 nodes-side left join — a second |V| join × iters
-    // for values that never change — is not needed at all.
-    val sym = prepEdges(
-      symBare.join(broadcast(nodes.select(col("node").as("dst"),
-        col("outdeg").as("dst_outdeg"),
-        col("seed_base").as("dst_seed_base"))), "dst"),
-      "src", strategy, clusterBy = Some("dst"))
-    var state = Materialize.barrier(nodes
-      .withColumn("rank",
-        when(col("seed_base") > 0, lit(scale)).otherwise(lit(0L)))
-      .select("node", "rank", "outdeg", "seed_base"), "Graphs.pprInt.round0")
-    var i = 0
-    while (i < iters) {
-      val contrib = state.select(col("node").as("src"),
-        expr("rank div outdeg").as("c"))
-      state = Materialize.barrier(stateJoin(sym, contrib, "src", strategy)
-        .groupBy(col("dst").as("node"))
-        .agg(expr(s"max(dst_seed_base) + sum(c) * $dampBp div 10000")
-          .as("rank"),
-          max("dst_outdeg").as("outdeg"),
-          max("dst_seed_base").as("seed_base")), s"Graphs.pprInt.round${i + 1}")
-      i += 1
-    }
-    sym.unpersist()
+    val ranks = rankRounds(sym, nodes
+        .withColumn("rank",
+          when(col("seed_base") > 0, lit(scale)).otherwise(lit(0L)))
+        .select("node", "rank", "outdeg", "seed_base"),
+      iters, dampBp, strategy, "Graphs.pprInt")
     deg.unpersist()
-    state.select("node", "rank").filter(col("rank") > 0).orderBy("node")
+    ranks.select("node", "rank").filter(col("rank") > 0).orderBy("node")
   }
 
   /** Per-node triangle participation counts over an undirected simple
@@ -396,74 +428,26 @@ object Graphs {
     * definitionally disjoint, a node's first discovery IS its shortest
     * distance (no min-combine pass needed). The frontier is broadcast
     * (bounded by the seed neighborhood's growth; same |V|-vocabulary
-    * argument as pagerankInt's contrib), the cached symmetric edge
-    * table never shuffles, and lineage is truncated per round with
-    * localCheckpoint exactly like [[Dedup.resolveClusters]]. When
+    * argument as pagerankInt's contrib) and the cached symmetric edge
+    * table never shuffles; the rounds go through [[layers]]. When
     * frontiers outgrow broadcast, `strategy = "copartition"` merge-joins
     * them against the once-partitioned edge table ([[Strategies]]).
-    * Rounds = maxHops (graph diameter when uncapped) — the O(d)
-    * scheduling pattern shared by every iterative op in this family.
+    * Rounds = maxHops (graph diameter when uncapped).
     */
   def bfsHops(edges: DataFrame, seeds: DataFrame, a: String = "da",
       b: String = "db", seedCol: String = "node", maxHops: Int = 4,
       strategy: String = "broadcast"): DataFrame = {
     require(maxHops >= 0, s"maxHops must be >= 0, got $maxHops")
     requireStrategy(strategy)
-    val sym = prepEdges(
-      edges.select(col(a).as("src"), col(b).as("dst"))
-        .union(edges.select(col(b).as("src"), col(a).as("dst")))
-        .distinct(),
-      "src", strategy, clusterBy = Some("dst"))
-    // visited = the UNION of per-round checkpointed frontiers, never
-    // re-materialized: BFS layers are disjoint, so the anti-join can
-    // read the lazy union of already-checkpointed pieces directly — the
-    // round-5 shape localCheckpoint'ed the growing visited table AGAIN
-    // every round (a second materialization of O(|V|) rows × rounds for
-    // data that was already on the block store)
-    var frontiers = List(Materialize.barrier(seeds.select(col(seedCol).as("node"))
-      .distinct().withColumn("dist", lit(0L)), "Graphs.bfsHops.hop0"))
-    def visited = frontiers.reduce(_.unionByName(_))
-    var h = 1
-    while (h <= maxHops) {
-      val cand = stateJoin(sym,
-          frontiers.head.select(col("node").as("src")), "src", strategy)
-        .select(col("dst").as("node")).distinct()
-      val next = Materialize.barrier(antiJoin(cand, visited.select("node"),
-        Seq("node"), strategy).withColumn("dist", lit(h.toLong)),
-        s"Graphs.bfsHops.hop$h")
-      frontiers ::= next
-      h += 1
-    }
+    val sym = prepEdges(symmetric(edges, a, b), "src", strategy,
+      clusterBy = Some("dst"))
+    val visited = layers(sym, seeds.select(col(seedCol).as("node"))
+        .distinct().withColumn("dist", lit(0L)),
+      Seq(), maxHops, strategy, "Graphs.bfsHops")
     sym.unpersist()
     visited.orderBy("node")
   }
 
-  /** k-core decomposition by iterative peeling: repeatedly delete every
-    * node whose remaining degree is < k; what survives is the maximal
-    * subgraph where everyone keeps ≥ k neighbors — the dense-cohesion
-    * screen (bot rings and link farms live in high cores, organic
-    * long-tail entities peel away; conversely a 100 TB curation run
-    * peels to find the spam core to EXCLUDE). Output: (node, core_deg =
-    * the node's degree inside the k-core).
-    *
-    * Peeling is confluent — any fixpoint of the peel step IS the k-core
-    * regardless of deletion order — so the result carries its own
-    * certificate: after `rounds` fixed peels, every surviving node's
-    * degree is re-checked IN-PLAN (`assert_true`, the fail-loud
-    * contract). If `rounds` under-shoots the corpus's peel depth the
-    * query throws rather than returning a too-large pseudo-core; the
-    * fix is raising `rounds`, and the unrolled oracle twin replicates
-    * whatever value is chosen.
-    *
-    * Scale shape: each round is one degree aggregate over the remaining
-    * edges plus a semi-join of both endpoints against the surviving
-    * node set — the keep-set is |V|-bounded (the entity vocabulary, the
-    * same broadcast-ability argument as [[pagerankInt]]'s contrib), the
-    * edge table only ever SHRINKS, and lineage is truncated per round
-    * with localCheckpoint like the rest of the family. `copartition`
-    * pins merge joins when |V| outgrows broadcast. Rounds = peel depth
-    * ≤ graph degeneracy-diameter, the family's O(d) scheduling bound.
-    */
   /** Synchronous label-propagation community detection (LPA), `rounds`
     * fixed sweeps — the near-linear community screen over the same
     * co-occurrence graphs the centrality family reads (communities =
@@ -490,31 +474,25 @@ object Graphs {
     * with the edge side pinned — never reshuffled) feeding TWO hash
     * aggregates: (dst, label) counts, then an argmax collapsed via
     * `max(struct(cnt, −label))` — a map-side-combinable agg instead of
-    * a per-node sort window. State stays |V| rows; lineage truncates
-    * per round. Output: (node, label, comm_size).
+    * a per-node sort window. State stays |V| rows; the sweeps go
+    * through [[rounds]]. Output: (node, label, comm_size).
     */
   def labelProp(edges: DataFrame, rounds: Int = 4, a: String = "da",
       b: String = "db", strategy: String = "broadcast"): DataFrame = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     requireStrategy(strategy)
-    val sym = prepEdges(
-      edges.select(col(a).as("src"), col(b).as("dst"))
-        .union(edges.select(col(b).as("src"), col(a).as("dst")))
-        .distinct(),
-      "src", strategy, clusterBy = Some("dst"))
-    var state = Materialize.barrier(sym.select(col("src").as("node")).distinct()
-      .withColumn("label", col("node")), "Graphs.labelProp.round0")
-    var i = 0
-    while (i < rounds) {
-      state = Materialize.barrier(stateJoin(sym,
+    val sym = prepEdges(symmetric(edges, a, b), "src", strategy,
+      clusterBy = Some("dst"))
+    // `this.`: the `rounds` parameter shadows the loop helper
+    val state = this.rounds(sym.select(col("src").as("node")).distinct()
+        .withColumn("label", col("node")), rounds, "Graphs.labelProp") {
+      state => stateJoin(sym,
           state.withColumnRenamed("node", "src"), "src", strategy)
         .groupBy(col("dst").as("node"), col("label"))
         .agg(count(lit(1)).as("cnt"))
         .groupBy("node")
         .agg(max(struct(col("cnt"), negate(col("label")).as("nl"))).as("m"))
-        .select(col("node"), negate(col("m.nl")).as("label")),
-        s"Graphs.labelProp.round${i + 1}")
-      i += 1
+        .select(col("node"), negate(col("m.nl")).as("label"))
     }
     sym.unpersist()
     val sizes = state.groupBy("label").agg(count(lit(1)).as("comm_size"))
@@ -705,12 +683,37 @@ object Graphs {
       .select("m2", "sx", "sxx", "sxy", "num", "den", "r_milli")
   }
 
+  /** k-core decomposition by iterative peeling: repeatedly delete every
+    * node whose remaining degree is < k; what survives is the maximal
+    * subgraph where everyone keeps ≥ k neighbors — the dense-cohesion
+    * screen (bot rings and link farms live in high cores, organic
+    * long-tail entities peel away; conversely a 100 TB curation run
+    * peels to find the spam core to EXCLUDE). Output: (node, core_deg =
+    * the node's degree inside the k-core).
+    *
+    * Peeling is confluent — any fixpoint of the peel step IS the k-core
+    * regardless of deletion order — so the result carries its own
+    * certificate: after `rounds` fixed peels, every surviving node's
+    * degree is re-checked IN-PLAN (`assert_true`, the fail-loud
+    * contract). If `rounds` under-shoots the corpus's peel depth the
+    * query throws rather than returning a too-large pseudo-core; the
+    * fix is raising `rounds`, and the unrolled oracle twin replicates
+    * whatever value is chosen.
+    *
+    * Scale shape: each round is one degree aggregate over the remaining
+    * edges plus a semi-join of both endpoints against the surviving
+    * node set — the keep-set is |V|-bounded (the entity vocabulary, the
+    * same broadcast-ability argument as [[pagerankInt]]'s contrib), the
+    * edge table only ever SHRINKS, and the peels go through [[rounds]].
+    * `copartition` pins merge joins when |V| outgrows broadcast. Rounds = peel depth
+    * ≤ graph degeneracy-diameter, the family's O(d) scheduling bound.
+    */
   def kCore(edges: DataFrame, k: Int = 2, rounds: Int = 8,
       a: String = "da", b: String = "db",
       strategy: String = "broadcast"): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     requireStrategy(strategy)
-    var sym = edges
+    val canon = edges
       .select(least(col(a), col(b)).as("u"), greatest(col(a), col(b)).as("v"))
       .filter(col("u") =!= col("v"))
       .distinct()
@@ -719,19 +722,18 @@ object Graphs {
     // aggregate and the final core-degree count group on src, the two
     // broadcast semi-joins preserve the clustering, and localCheckpoint
     // carries partitioning through LogicalRDD — so no round re-shuffles
-    // the (shrinking) edge table at all.
-    sym = Materialize.barrier(sym.union(sym.select(col("dst").as("src"),
-      col("src").as("dst"))).repartition(col("src")), "Graphs.kCore.round0")
-    var i = 0
-    while (i < rounds) {
-      val keep = sym.groupBy("src").agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select("src")
-      sym = Materialize.barrier(stateJoin(stateJoin(sym, keep, "src", strategy),
-          keep.withColumnRenamed("src", "dst"), "dst", strategy)
-        .select("src", "dst"), s"Graphs.kCore.round${i + 1}")
-      i += 1
+    // the (shrinking) edge table at all. (`this.`: the `rounds`
+    // parameter shadows the loop helper.)
+    val core = this.rounds(canon.union(canon.select(col("dst").as("src"),
+        col("src").as("dst"))).repartition(col("src")), rounds, "Graphs.kCore") {
+      sym =>
+        val keep = sym.groupBy("src").agg(count(lit(1)).as("d"))
+          .filter(col("d") >= k).select("src")
+        stateJoin(stateJoin(sym, keep, "src", strategy),
+            keep.withColumnRenamed("src", "dst"), "dst", strategy)
+          .select("src", "dst")
     }
-    sym.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
+    core.groupBy(col("src").as("node")).agg(count(lit(1)).as("core_deg"))
       .where(assert_true(col("core_deg") >= k,
         lit(s"k-core peeling did not converge in $rounds rounds — a " +
           "surviving node still has degree < " + k +
@@ -749,9 +751,8 @@ object Graphs {
     *
     * Multi-source layering: frontier rows are (seed, node) pairs, each
     * round one edge join + anti-join against the visited union (the
-    * [[bfsHops]] disjoint-layer shape, seed-tagged); state is bounded
-    * by \|seeds\|·\|V\| and each layer localCheckpoints so no round
-    * recomputes its predecessors. */
+    * [[bfsHops]] disjoint-layer shape through [[layers]], seed-tagged);
+    * state is bounded by \|seeds\|·\|V\|. */
   def harmonicCentrality(edges: DataFrame, nSeeds: Int = 8,
       maxHops: Int = 6, a: String = "da", b: String = "db",
       strategy: String = "broadcast"): DataFrame = {
@@ -766,29 +767,14 @@ object Graphs {
     // distinct on (seed, node = dst alias) plans exchange-free
     // (guide §2.4; the previous shape sort-merge-joined the cached
     // edges against the frontier every layer).
-    val sym = prepEdges(
-      edges.select(col(a).as("src"), col(b).as("dst"))
-        .union(edges.select(col(b).as("src"), col(a).as("dst")))
-        .distinct(),
-      "src", strategy, clusterBy = Some("dst"))
+    val sym = prepEdges(symmetric(edges, a, b), "src", strategy,
+      clusterBy = Some("dst"))
     val seeds = sym.select(col("src").as("node")).distinct()
       .orderBy("node").limit(nSeeds)
-    var frontiers = List(Materialize.barrier(seeds.select(col("node").as("seed"))
-      .withColumn("node", col("seed"))
-      .withColumn("dist", lit(0L)), "Graphs.harmonicCentrality.hop0"))
-    def visited = frontiers.reduce(_.unionByName(_))
-    var h = 1
-    while (h <= maxHops) {
-      val cand = stateJoin(sym,
-          frontiers.head.select(col("seed"), col("node").as("src")),
-          "src", strategy)
-        .select(col("seed"), col("dst").as("node")).distinct()
-      val next = Materialize.barrier(antiJoin(cand, visited.select("seed", "node"),
-          Seq("seed", "node"), strategy)
-        .withColumn("dist", lit(h.toLong)), s"Graphs.harmonicCentrality.hop$h")
-      frontiers ::= next
-      h += 1
-    }
+    val visited = layers(sym, seeds.select(col("node").as("seed"))
+        .withColumn("node", col("seed"))
+        .withColumn("dist", lit(0L)),
+      Seq("seed"), maxHops, strategy, "Graphs.harmonicCentrality")
     sym.unpersist()
     visited.filter(col("dist") >= 1)
       .groupBy("seed")

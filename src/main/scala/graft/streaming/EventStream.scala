@@ -161,6 +161,7 @@ object EventStream {
     val src = Paths.get(path)
     Files.copy(src, Paths.get(stage).resolve(src.getFileName))
     val out = graft.Scratch.fresh(s"stream-result-$tag")
+    val ckpt = graft.Scratch.fresh(s"stream-ckpt-$tag")
     val complete = outputMode == "complete"
     val sink: (DataFrame, Long) => Unit = { (batch, batchId) =>
       if (complete) batch.write.mode("overwrite").parquet(out)
@@ -172,6 +173,7 @@ object EventStream {
         readParquetStream(spark, stage, maxFilesPerTrigger,
           sourceSchema = srcSchema))
         .writeStream
+        .option("checkpointLocation", ckpt)
         .outputMode(outputMode)
         .foreachBatch(sink)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -179,8 +181,10 @@ object EventStream {
       q.awaitTermination()
       spark.read.parquet(out)
     } finally {
-      // the staged copy served this one run; don't accumulate per call
+      // the staged copy and the checkpoint served this one run; don't
+      // accumulate per call
       graft.Scratch.delete(stage)
+      graft.Scratch.delete(ckpt)
     }
   }
 
@@ -326,6 +330,7 @@ object EventStream {
     val q = readParquetStream(spark, stage, maxFilesPerTrigger = 1,
         sourceSchema = srcSchema)
       .writeStream
+      .option("checkpointLocation", graft.Scratch.fresh("stream-ckpt-snap"))
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, _: Long) =>
         if (!batch.isEmpty)
@@ -753,6 +758,7 @@ object EventStream {
       val q = readParquetStream(spark, stage.toString,
           maxFilesPerTrigger = 1, sourceSchema = srcDf.schema)
         .writeStream
+        .option("checkpointLocation", graft.Scratch.fresh("stream-ckpt-upsert"))
         .foreachBatch(mergeBatch)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
@@ -813,6 +819,7 @@ object EventStream {
       val q = readParquetStream(spark, stage.toString,
           maxFilesPerTrigger = 1, sourceSchema = srcDf.schema)
         .writeStream
+        .option("checkpointLocation", graft.Scratch.fresh("stream-ckpt-gate"))
         .foreachBatch(gateBatch)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
@@ -890,6 +897,7 @@ object EventStream {
           maxFilesPerTrigger = 1,
           sourceSchema = srcDf.select("vec_id", "embedding").schema)
         .writeStream
+        .option("checkpointLocation", graft.Scratch.fresh("stream-ckpt-embed"))
         .foreachBatch(gateBatch)
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()

@@ -51,14 +51,8 @@ object Curve {
       }.reduce(_.union(_)), s"Curve.docs${n}x")
 
     // the registered graph_triangles edge stream (capped co-purchase)
-    val basePairs = Materialize.cache(Tables(spark, sfDir, "lineitem")
-      .groupBy("l_orderkey")
-      .agg(slice(array_sort(collect_set(col("l_partkey"))),
-        1, graft.SparkEntry.CopurchaseMaxBasket).as("parts"))
-      .select(explode(flatten(transform(col("parts"), a =>
-        transform(filter(col("parts"), b => b > a),
-          b => struct(a.as("da"), b.as("db")))))).as("p"))
-      .select(col("p.da").as("da"), col("p.db").as("db")), "Curve.basePairs")
+    val basePairs = Materialize.cache(graft.SparkEntry.copurchaseTriEdges(
+      Tables(spark, sfDir, "lineitem")), "Curve.basePairs")
     val nodeShift = basePairs.agg(greatest(max("da"), max("db")))
       .head.getLong(0) + 1L
 

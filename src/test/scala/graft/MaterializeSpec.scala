@@ -77,6 +77,25 @@ class MaterializeSpec extends SparkTestBase {
     }
   }
 
+  test("graph loops name their round and hop barriers") {
+    import spark.implicits._
+    // 4-cycle: every node keeps degree 2, so one k-core peel converges
+    val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L)).toDF("da", "db")
+    Materialize.scope(spark) {
+      // the results hold their last barrier, so none is cleaned early
+      val held = Seq(
+        ops.Graphs.pagerankInt(edges, iters = 2),
+        ops.Graphs.labelProp(edges, rounds = 1),
+        ops.Graphs.kCore(edges, rounds = 1),
+        ops.Graphs.bfsHops(edges, Seq(1L).toDF("node"), maxHops = 1))
+      val names = spark.sparkContext.getRDDStorageInfo.map(_.name).toSet
+      Seq("Graphs.pagerankInt.round2", "Graphs.labelProp.round1",
+        "Graphs.kCore.round1", "Graphs.bfsHops.hop1").foreach(n =>
+        assert(names(n), s"no barrier named $n in $names"))
+      assert(held.map(_.count()) == Seq(4L, 4L, 4L, 3L))
+    }
+  }
+
   test("raw materialization and scratch-file calls live only in their seams") {
     val seams = Seq(
       "Materialize.scala" -> Seq("localCheckpoint(", ".persist(", ".cache()",

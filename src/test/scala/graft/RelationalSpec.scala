@@ -371,6 +371,24 @@ class RelationalSpec extends SparkTestBase {
     assert(got == Seq((10L, 20L, 2L)))
   }
 
+  test("copurchase builders: basket cap keeps the 64 lowest parts, " +
+      "min-support 2 drops single-order pairs") {
+    // orders 1 and 2 hold parts 1..70 (listed in scrambled order): only
+    // pairs among parts 1..64 may appear, each once per order. (100, 101)
+    // is in orders 3 and 4 (order 3 lists part 100 twice); (200, 201)
+    // only in order 5.
+    val big = (1L to 70L).map(p => (p * 37) % 70 + 1)
+    val li = (big.map(p => (1L, p)) ++ big.reverse.map(p => (2L, p)) ++
+      Seq((3L, 100L), (3L, 101L), (3L, 100L), (4L, 101L), (4L, 100L),
+        (5L, 200L), (5L, 201L))).toDF("l_orderkey", "l_partkey")
+    val capped = for (a <- 1L to 64L; b <- a + 1 to 64L) yield (a, b)
+    val tri = SparkEntry.copurchaseTriEdges(li).as[(Long, Long)].collect()
+    assert(tri.length == 2 * capped.length + 3)
+    assert(tri.toSet == (capped ++ Seq((100L, 101L), (200L, 201L))).toSet)
+    val edges = SparkEntry.copurchaseEdges(li).as[(Long, Long)].collect()
+    assert(edges.sorted.toSeq == capped :+ ((100L, 101L)))
+  }
+
   test("winsorize clamps into the exact per-group percentile band") {
     val ev = (1 to 100).map(i => (i.toLong,
       new java.sql.Timestamp(i * 1000L), 1L, "view", i.toDouble, "{}"))
