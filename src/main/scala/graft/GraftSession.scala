@@ -23,6 +23,10 @@ import org.apache.spark.sql.SparkSession
   *    cluster locale.
   *  - parquet nanos-as-long: the corpus' TIMESTAMP(NANOS) columns are
   *    unreadable as timestamps by Spark 4; graft.ops.Events normalizes.
+  *  - the `file:` scheme, for the FileSystem and the FileContext API, is
+  *    graft.sources.LocalFs: Hadoop's local filesystem without the
+  *    `chmod`/`readlink`/`ls` subprocess per file it starts when
+  *    `libhadoop` is absent. Other schemes keep Hadoop's classes.
   */
 object GraftSession {
 
@@ -44,6 +48,10 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[sources.LocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[sources.LocalFs].getName)
     master.fold(b)(b.master)
   }
 

@@ -79,12 +79,14 @@ object EventStream {
         col("event_type"), col("cnt"), col("sum_value"))
 
   /** Stateful operators instantiate one state store PER shuffle partition
-    * PER stateful op; at the parity runs' data volume the fixed store
-    * open/commit cost dominates (a stream-stream join pays 2
-    * stores/partition), so the parity streams run at 8 partitions —
-    * pinned at first run from this conf — under [[withConf]], which
-    * restores the batch conf after. Production streams size this to
-    * their key space. */
+    * PER stateful op (a stream-stream join pays 2 stores/partition), so
+    * the parity streams run at 8 partitions — pinned at first run from
+    * this conf — under [[withConf]], which restores the batch conf after.
+    * Much of the fixed store open/commit cost was `chmod`/`readlink`
+    * subprocesses, gone with [[graft.sources.LocalFs]]; since then 8 and
+    * 4 partitions measure the same (the six `write_stream` parities at
+    * sf0.1 on 4 cores, Bench min of 3: 8.6 / 7.9 s at 8, 7.8 / 8.1 s at
+    * 4). Production streams size this to their key space. */
   private val StreamPartitions = "spark.sql.shuffle.partitions" -> "8"
 
   /** The RocksDB state store, required by the v2 state API. */

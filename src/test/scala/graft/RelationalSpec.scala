@@ -361,14 +361,13 @@ class RelationalSpec extends SparkTestBase {
     // order 1 holds part 10 twice + part 20: the (10,20) pair counts once
     val li = Seq((1L, 10L), (1L, 10L), (1L, 20L), (2L, 10L), (2L, 20L))
       .toDF("l_orderkey", "l_partkey")
-    val distinct = li.distinct()
-    val got = distinct.select(col("l_orderkey"), col("l_partkey").as("pa"))
-      .join(distinct.select(col("l_orderkey"), col("l_partkey").as("pb")),
-        Seq("l_orderkey"))
-      .filter(col("pa") < col("pb"))
-      .groupBy("pa", "pb").agg(count(lit(1)).as("n"))
+    val got = SparkEntry.copurchaseTriEdges(li)
+      .groupBy("da", "db").agg(count(lit(1)).as("n"))
       .as[(Long, Long, Long)].collect().toSeq
     assert(got == Seq((10L, 20L, 2L)))
+    // two orders meet min-support 2
+    assert(SparkEntry.copurchaseEdges(li).as[(Long, Long)].collect().toSeq ==
+      Seq((10L, 20L)))
   }
 
   test("copurchase builders: basket cap keeps the 64 lowest parts, " +
@@ -483,14 +482,7 @@ class RelationalSpec extends SparkTestBase {
   test("triangleCountsSampled: sampled subgraph counts are per-node " +
       "<= exact, and the stats row's total estimate lands near truth " +
       "(sf0.001 co-purchase graph, VERDICT r11 item 2)") {
-    val li = Tables(spark, sf0001, "lineitem")
-    val pairs = li.groupBy("l_orderkey")
-      .agg(expr("slice(array_sort(collect_set(l_partkey)), 1, 64)")
-        .as("parts"))
-      .select(expr("explode(flatten(transform(parts, a -> " +
-        "transform(filter(parts, b -> b > a), " +
-        "b -> struct(a AS da, b AS db)))))").as("p"))
-      .select(col("p.da").as("da"), col("p.db").as("db"))
+    val pairs = SparkEntry.copurchaseTriEdges(Tables(spark, sf0001, "lineitem"))
     val exact = graft.ops.Graphs.triangleCounts(pairs)
       .as[(Long, Long)].collect().toMap
     val samp = graft.ops.Graphs.triangleCountsSampled(pairs)
