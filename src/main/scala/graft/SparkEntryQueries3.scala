@@ -615,9 +615,8 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
     // entities within ±10 positions — candidate volume a HARD
     // O(queries × 2w) no corpus can break (the other classic blocking;
     // production multi-pass ER unions this with the key passes). The
-    // global rank is DISTRIBUTED (prefix-sliced local windows + offset
-    // lift, Features.rangeNtileBucket's construction on string keys) and
-    // equals the oracle's plain row_number exactly.
+    // global rank comes from Features.sliceScan (README "Global order")
+    // and equals the oracle's plain row_number exactly.
     "er_sorted_neighborhood" -> ((s, dir) => {
       val (ents, dirty) = erCorpus(t(s, dir, "part"))
       graft.ops.EntityResolution.sortedNeighborhood(ents, dirty)
@@ -1435,8 +1434,8 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
       graft.ops.Events.lastTouchAttribution(t(s, dir, "events"))),
 
     // EXT RFM segmentation: per-user recency/frequency/monetary exact
-    // quintiles (distributed rangeNtileBucket — no single-partition
-    // window) composed into the 3-digit segment; ntile passes run over
+    // quintiles (rangeNtileBucket, README "Global order") composed
+    // into the 3-digit segment; ntile passes run over
     // the |users|-sized profile, the event scan happens once.
     "events_rfm" -> ((s, dir) =>
       graft.ops.Events.rfmSegments(t(s, dir, "events"))),
@@ -1467,9 +1466,9 @@ trait SparkEntryQueries3 extends SparkEntryQueries2 {
       graft.ops.Events.rollingActiveUsers(t(s, dir, "events"))),
 
     // EXT concurrency timeline: sweep-line (+1/−1 session boundaries,
-    // running sum = live sessions) with the global running sum computed
-    // DISTRIBUTED (withRunningTotal's sliced windows — no data-sized
-    // single-partition window); top-20 peak moments, global peak rides.
+    // running sum = live sessions) with the global running sum from
+    // withRunningTotal (README "Global order"); top-20 peak moments,
+    // global peak rides.
     "events_concurrency" -> ((s, dir) =>
       graft.ops.Events.concurrencyTimeline(t(s, dir, "events"))),
 

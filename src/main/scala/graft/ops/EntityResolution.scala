@@ -82,30 +82,21 @@ object EntityResolution {
       .select("q_key", "cand_key", "jw_bp")
       .orderBy("q_key", "cand_key")
 
-  /** Distributed exact global rank over (`name`, tie columns) — NO
-    * single-partition window (the PlanShapeSpec rule): rows are sliced
-    * by a 6-char ASCII prefix packed into a long (prefix packing is
-    * monotone in the lexicographic order, so slice boundaries respect
-    * it; 48 bits stays exact through approxQuantile's doubles), local
-    * row_numbers run per slice in parallel, and a #slices-row broadcast
-    * offset table lifts them to exact global ranks — the
-    * [[Features.rangeNtileBucket]] construction adapted to string keys.
+  /** Distributed exact global rank over (`name`, tie columns): the
+    * [[Features.sliceScan]] running count over `name +: tieCols`, sliced
+    * on a 6-char prefix of `name` packed base-256 into a long (prefix
+    * packing is monotone in the lexicographic order, so slice boundaries
+    * respect it; 48 bits stays exact through approxQuantile's doubles).
     * Ranks are identical to a plain `row_number() OVER (ORDER BY name,
     * ties)`, which is what lets a second engine recompute them.
     *
-    * As in [[Features.withRunningTotal]], the input — narrow (name,
-    * side, key) rank rows, never record payloads — is a
-    * [[graft.Materialize]] barrier for the three passes. The
-    * sortedNeighborhood call site ALSO checkpoints this function's
-    * OUTPUT — not redundant (ADVICE r13): the inner barrier covers the
-    * 3 input passes, the outer covers the 2 join-side consumers of the
-    * window output; dropping either re-runs a pass. */
+    * The input is narrow (name, side, key) rank rows, never record
+    * payloads. The sortedNeighborhood call site ALSO checkpoints this
+    * function's OUTPUT — not redundant (ADVICE r13): the construction's
+    * barrier covers its 3 input passes, the outer one the 2 join-side
+    * consumers of the rank output; dropping either re-runs a pass. */
   private[graft] def globalRank(rows: DataFrame, tieCols: Seq[String],
       out: String = "rn"): DataFrame = {
-    // Three passes over `rows` (quantile action, local window, counts)
-    // — materialize once, the rangeNtileBucket/withRunningTotal
-    // discipline.
-    val rowsIn = graft.Materialize.barrier(rows, "EntityResolution.globalRank.rows")
     val packed = (1 to 6).foldLeft(lit(0L)) { (acc, i) =>
       acc * 256L + coalesce(ascii(substring(col("name"), i, 1)), lit(0)) }
     // base-256 packing is monotone vs lexicographic order ONLY while
@@ -114,34 +105,13 @@ object EntityResolution {
     // assumption is enforced in-plan rather than assumed in the doc
     val prefixOk = coalesce(
       substring(col("name"), 1, 6).rlike("^[\\x00-\\xFF]*$"), lit(true))
-    val withKey = rowsIn.withColumn("__pk",
-      when(assert_true(prefixOk,
+    val sliceKey = when(assert_true(prefixOk,
         lit("globalRank: name prefix contains a code point > 255 — " +
           "base-256 prefix packing breaks lexicographic monotonicity; " +
           "pre-normalize names or widen the packing")).isNull,
-        packed).cast("double"))
-    val spark = rows.sparkSession
-    val parts = math.min(spark.sparkContext.defaultParallelism, 512)
-    val cuts = withKey.stat
-      .approxQuantile("__pk", (1 until parts).map(_.toDouble / parts).toArray, 0.001)
-      .distinct.sorted
-    val sliceId =
-      if (cuts.isEmpty) lit(0)
-      else size(filter(typedLit(cuts.toSeq), c => col("__pk") > c))
-    val sliced = withKey.withColumn("__sid", sliceId)
-    val wLocal = Window.partitionBy("__sid")
-      .orderBy(col("name") +: tieCols.map(col): _*)
-    val local = sliced.withColumn("__lrn",
-      row_number().over(wLocal).cast("long"))
-    val counts = sliced.groupBy("__sid").agg(count(lit(1)).as("__cnt"))
-    val wOff = Window.orderBy("__sid")
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offs = counts
-      .withColumn("__off", coalesce(sum("__cnt").over(wOff), lit(0L)))
-      .select("__sid", "__off")
-    local.join(broadcast(offs), Seq("__sid"))
-      .withColumn(out, col("__off") + col("__lrn"))
-      .drop("__pk", "__sid", "__lrn", "__off")
+        packed).cast("double")
+    Features.sliceScan(rows, sliceKey, col("name") +: tieCols.map(col),
+      lit(1L), out)._1
   }
 
   /** Sorted-neighborhood ER (Hernández & Stolfo 1995) — the OTHER

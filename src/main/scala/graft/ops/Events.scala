@@ -933,15 +933,14 @@ object Events {
     * three-digit RFM segment (555 = recent + frequent + big spender).
     *
     * The three scores are EXACT ntiles via
-    * [[Features.rangeNtileBucket]] — the distributed form with no
-    * single-partition window anywhere in the plan (the PlanShapeSpec
-    * rule); ties break on user_id so both engines assign identical
-    * buckets. Ascending order means higher score = more recent / more
+    * [[Features.rangeNtileBucket]] (the [[Features.sliceScan]]
+    * construction); ties break on user_id so both engines assign
+    * identical buckets. Ascending order means higher score = more recent / more
     * frequent / higher value, the conventional reading. Recency is
     * measured against the corpus max timestamp (a 1-row broadcast), in
     * whole UTC days — all integer.
     *
-    * Scale: one user-keyed aggregate, then three range-partitioned
+    * Scale: one user-keyed aggregate, then three sliced
     * ntile passes over the |users|-sized profile (not the event
     * stream) — the fact scan happens once. */
   def rfmSegments(events: DataFrame, n: Int = 5): DataFrame = {
@@ -1040,10 +1039,9 @@ object Events {
     * when did we peak": the classic sweep line (+1 at each session
     * start, −1 just past its end, running sum = live concurrency) with
     * the one piece that usually doesn't scale made distributed — the
-    * global running sum over boundary times runs through
-    * [[Features.withRunningTotal]]'s sliced windows, so no data-sized
-    * single-partition window exists anywhere in the plan (capacity
-    * planning's version of the PlanShapeSpec rule). Same-instant
+    * global running sum over boundary times is
+    * [[Features.withRunningTotal]] (the [[Features.sliceScan]]
+    * construction). Same-instant
     * boundaries collapse into one net delta first (starts and ends at
     * the same microsecond cancel before the scan, closed-interval
     * semantics: a session [a, b] is live AT b). Output: the top-`topK`
@@ -1133,7 +1131,7 @@ object Events {
 
   /** Pareto concentration report — "do 20% of users drive 80% of
     * events?": users ranked into exact activity deciles
-    * ([[Features.rangeNtileBucket]], no data-sized global window), each
+    * ([[Features.rangeNtileBucket]]), each
     * decile's user count, event mass, share, and the cumulative share
     * read from the heaviest decile down. The decile table is 10 rows,
     * so the cumulative window runs over an AGGREGATE (the PlanShapeSpec

@@ -84,70 +84,33 @@ object Features {
 
   /** Exact n-quantile bucketing, distributed — bit-identical to SQL
     * `ntile(n) OVER (ORDER BY v, tieKey)` with no single-partition
-    * window anywhere in the plan:
+    * window over raw rows: the global row number is [[sliceScan]]'s
+    * running count over (v, tieKey) (a running `sum(1)` over a ROWS
+    * frame of a total order is `row_number`), N is read off its
+    * per-slice table, and the exact SQL ntile split follows: with N
+    * rows and n buckets the first N mod n buckets get ceil(N/n) rows,
+    * the rest floor(N/n). A null `v` lands in slice 0 and sorts first
+    * there, as NULLS FIRST puts it first in the total order.
     *
-    *  1. range-repartition by (v, tieKey) — partition p holds a
-    *     contiguous, ordered slice of the total order;
-    *  2. local row_number per partition (window PARTITIONED by the range
-    *     partition id — parallel, not global);
-    *  3. per-partition row counts → running-sum offsets (a #partitions-row
-    *     table; its tiny window + the broadcast back are negligible);
-    *  4. global row number = offset + local row number, then the exact
-    *     SQL ntile split: with N rows and n buckets the first N mod n
-    *     buckets get ceil(N/n) rows, the rest floor(N/n).
-    *
-    * Output is boundary-independent (the global row number is fixed by
-    * the total order, wherever the cuts land), so determinism needs only
-    * that BOTH consumers below (local row numbers, per-partition counts)
-    * see the SAME slice assignment. `repartitionByRange` cannot promise
-    * that: its sampler reruns per subtree when Catalyst does not reuse
-    * the exchange (observed once the input carries broadcast joins), and
-    * two samplers can cut different boundaries — offsets from one
-    * partitioning applied to row numbers of another shift buckets by one.
-    * So the slice id is DERIVED, not sampled: cut points come from ONE
-    * driver-side `approxQuantile` job at plan-build time (the same
-    * collect-a-tiny-model-then-broadcast shape as a StringIndexer fit —
-    * #partitions-1 doubles), and `__pid` is a pure function of the value.
-    * Deterministic by construction, no pinned materialization needed;
-    * the 0.1% quantile error only skews slice sizes, never the output.
-    * Equal values always share a slice (cuts are on `v` alone), so slice
-    * boundaries respect the total order.
-    *
-    * Like [[withRunningTotal]], the input is a [[graft.Materialize]]
-    * barrier (size = the caller's derived frame — RFM per-user rollups,
-    * quantile-bucket feature rows); PlanShapeSpec pins one block set per
-    * pass. */
+    * Chained calls are why the input barrier matters here: events_rfm
+    * folds three ntile passes, and an un-checkpointed pass-2 input
+    * re-ran pass 1 (join + window + its own quantile job) per read —
+    * the whole events scan replayed ~a dozen times (measured 3.9 s →
+    * 2.0 s at sf0.1 with the barriers). */
   def rangeNtileBucket(df: DataFrame, v: String, tieKey: String,
       n: Int, out: String = "bucket"): DataFrame = {
     require(n >= 1, s"ntile requires n >= 1, got $n")
-    // Same three-pass construction (quantile action, window pass,
-    // counts aggregate) — materialize the input once, like
-    // [[withRunningTotal]]. CHAINED calls made this load-bearing:
-    // events_rfm folds three ntile passes, so an un-checkpointed pass-2
-    // input re-ran pass 1 (join + window + its own quantile job) per
-    // read — the whole events scan replayed ~a dozen times (measured
-    // 3.9 s → 2.0 s at sf0.1 with the checkpoints).
-    val in = graft.Materialize.barrier(df, "Features.rangeNtileBucket.in")
-    val ranged = in.withColumn("__pid",
-      when(col(v).isNull, lit(-1)).otherwise(sliceId(in, v)))
-    val wLocal = Window.partitionBy("__pid").orderBy(col(v), col(tieKey))
-    val local = ranged.withColumn("__lrn", row_number().over(wLocal).cast("long"))
-    val counts = ranged.groupBy("__pid").agg(count(lit(1)).as("__cnt"))
-    val wOff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    val offs = counts
-      .withColumn("__off", coalesce(sum("__cnt").over(wOff), lit(0L)))
-      .select("__pid", "__off")
-    val total = counts.agg(sum("__cnt").as("__total"))
-    local.join(broadcast(offs), Seq("__pid"))
-      .crossJoin(broadcast(total))
-      .withColumn("__rn", col("__off") + col("__lrn"))
+    val (ranked, slices) =
+      sliceScan(df, col(v), Seq(col(v), col(tieKey)), lit(1L), "__rn")
+    ranked
+      .crossJoin(broadcast(slices.agg(sum(SliceAgg).as("__total"))))
       .withColumn(out, expr(
         s"""CASE WHEN __rn <= ((__total div $n) + 1) * (__total % $n)
                  THEN (__rn - 1) div ((__total div $n) + 1) + 1
                  ELSE (__total % $n)
                       + (__rn - 1 - ((__total div $n) + 1) * (__total % $n))
                         div (__total div $n) + 1 END""").cast("long"))
-      .drop("__pid", "__lrn", "__off", "__total", "__rn")
+      .drop("__total", "__rn")
   }
 
   /** Max derived range slices for [[sliceId]]: slices only bound the
@@ -156,76 +119,98 @@ object Features {
     * driver-side quantile job) ~4 KB at any cluster width. */
   private val MaxSlices = 512
 
-  /** Derived range-slice id shared by [[rangeNtileBucket]] and
-    * [[withRunningTotal]]: one driver-side approxQuantile job at
-    * plan-build time fixes ≤ MaxSlices-1 cut points (deterministic by
-    * construction — see rangeNtileBucket's doc for why sampled
-    * repartitionByRange cannot be trusted here), then the slice id is the
-    * count of cuts strictly below the value — ONE flat higher-order
-    * `size(filter(cuts, c -> v > c))` over an array literal, constant
-    * expression depth and a vectorized O(#cuts) scan per row. The
-    * previous formulation folded a nested `when` PER CUT, so on a
-    * thousands-of-cores cluster (defaultParallelism-many cuts) the
-    * conditional tree grew past codegen limits and every row walked it
-    * branch by branch. */
-  private def sliceId(df: DataFrame, v: String): Column = {
+  /** The per-slice aggregate column of [[sliceScan]]'s slice table (and
+    * of [[Relational.skyline]]'s per-slice max): at most [[MaxSlices]]
+    * rows, so the one single-partition window allowed over a table
+    * carrying it is bounded. PlanShapeSpec whitelists exactly this name. */
+  private[graft] val SliceAgg = "__slice_agg"
+
+  /** Derived range-slice id of `key`: one driver-side approxQuantile job
+    * at plan-build time fixes ≤ MaxSlices-1 cut points, then the slice id
+    * is the count of cuts strictly below the key — ONE flat higher-order
+    * `size(filter(cuts, c -> key > c))` over an array literal, constant
+    * expression depth and a vectorized O(#cuts) scan per row. The slice
+    * id is a pure function of the key (see [[sliceScan]] for why a
+    * sampled `repartitionByRange` cannot be trusted here), equal keys
+    * share a slice, and slice order follows key order. A null key
+    * matches no cut and lands in slice 0; an empty or all-null input has
+    * no cuts and is one slice. */
+  private[ops] def sliceId(df: DataFrame, key: Column): Column = {
     val parts = math.min(
       df.sparkSession.sparkContext.defaultParallelism, MaxSlices)
-    val cuts = df.stat
-      .approxQuantile(v, (1 until parts).map(_.toDouble / parts).toArray, 0.001)
+    val cuts = df.select(key.as("__skey")).stat
+      .approxQuantile("__skey", (1 until parts).map(_.toDouble / parts).toArray, 0.001)
       .distinct.sorted
     if (cuts.isEmpty) lit(0)
-    else size(filter(typedLit(cuts.toSeq), c => col(v).cast("double") > c))
+    else size(filter(typedLit(cuts.toSeq), c => key.cast("double") > c))
+  }
+
+  /** The one exact global prefix over a total order: `out` is the
+    * inclusive running sum of `value` over ORDER BY `order`, computed
+    * with no single-partition window over raw rows. Returns the rows
+    * with `out` appended and the per-slice table (`__sid`, [[SliceAgg]]
+    * = the slice's sum of `value`), from which callers read totals
+    * without another pass over the input.
+    *
+    *  1. [[sliceId]] cuts the rows into ≤ MaxSlices contiguous slices of
+    *     the order by `sliceKey`, which must be monotone in `order`'s
+    *     leading column (so slice boundaries respect the total order);
+    *  2. a running sum per slice (window PARTITIONED by the slice id —
+    *     parallel, not global);
+    *  3. the per-slice sums → exclusive running-sum offsets (a ≤
+    *     MaxSlices-row table; its tiny window + the broadcast back are
+    *     negligible), added to the local sums.
+    *
+    * `order` must be a total order (unique), or the running sum is
+    * order-dependent. The output is boundary-independent (the prefix is
+    * fixed by the total order, wherever the cuts land), so determinism
+    * needs only that both consumers of the slice id (local sums and
+    * per-slice sums) see the SAME slice assignment. `repartitionByRange`
+    * cannot promise that: its sampler reruns per subtree when Catalyst
+    * does not reuse the exchange (observed once the input carries
+    * broadcast joins), and two samplers can cut different boundaries —
+    * offsets from one partitioning applied to sums of another shift the
+    * result. So the slice id is DERIVED, not sampled: cut points come
+    * from one driver-side `approxQuantile` job (the same
+    * collect-a-tiny-model-then-broadcast shape as a StringIndexer fit),
+    * and the 0.1% quantile error only skews slice sizes, never the
+    * output.
+    *
+    * The input is read three times (the quantile job, the local window,
+    * the per-slice aggregate), so it is one eager [[graft.Materialize]]
+    * barrier and all three passes read its blocks; PlanShapeSpec pins
+    * one block set per pass. Every registered caller hands in an
+    * already-reduced table (per-user rollups, boundary deltas, packed
+    * rank keys, per-doc aggregates — never raw events), which is what
+    * the barrier stores. Un-checkpointed, events_concurrency's upstream
+    * sessionize replayed 5× through the three passes (9.3 s cold → 3.0 s
+    * with the barrier). */
+  private[ops] def sliceScan(df: DataFrame, sliceKey: Column,
+      order: Seq[Column], value: Column, out: String): (DataFrame, DataFrame) = {
+    val in = graft.Materialize.barrier(df, "Features.sliceScan.in")
+    val ranged = in.withColumn("__sid", sliceId(in, sliceKey))
+    val wLocal = Window.partitionBy("__sid").orderBy(order: _*)
+      .rowsBetween(Window.unboundedPreceding, 0)
+    val slices = ranged.groupBy("__sid").agg(sum(value).as(SliceAgg))
+    val wOff = Window.orderBy("__sid").rowsBetween(Window.unboundedPreceding, -1)
+    val offs = slices
+      .withColumn("__off", coalesce(sum(SliceAgg).over(wOff), lit(0L)))
+      .select("__sid", "__off")
+    val scanned = ranged.withColumn("__lcum", sum(value).over(wLocal))
+      .join(broadcast(offs), Seq("__sid"))
+      .withColumn(out, col("__off") + col("__lcum"))
+      .drop("__sid", "__lcum", "__off")
+    (scanned, slices)
   }
 
   /** Inclusive global running total of `value` over ORDER BY `orderKey`,
     * distributed — the prefix-sum primitive behind corpus-order layouts
-    * (sequence packing, byte-offset manifests). Same derived-slice
-    * construction as [[rangeNtileBucket]]: one driver-side approxQuantile
-    * fixes slice cut points as a pure function of the key (deterministic —
-    * no resampled range partitioning), the per-slice window runs in
-    * parallel, and a #slices-row offsets table (tiny single-partition
-    * window over an Aggregate, per the PlanShapeSpec rule) is broadcast
-    * back. No single-partition window ever sees raw rows.
-    *
-    * `orderKey` must be numeric, non-null and UNIQUE — equal keys would
-    * make the running total order-dependent.
-    *
-    * The input is an eager [[graft.Materialize]] barrier (round 14,
-    * VERDICT r13 item 6), so even plan-only consumers execute the
-    * upstream lineage. The stored size is the INPUT FRAME, which for
-    * every registered caller is an already-reduced table (sessionize
-    * boundary deltas, packed rank keys, per-doc aggregates — NOT raw
-    * events; the heaviest is events_concurrency's distinct
-    * boundary-timestamp deltas, ≤ 2 rows per session). That is the
-    * chosen trade vs re-running the upstream 3× (or ~5× through chained
-    * callers — the round-13 measurement). PlanShapeSpec pins that all
-    * passes read ONE checkpointed block set (the round-13 win cannot
-    * silently regress to re-scans). */
+    * (sequence packing, byte-offset manifests): [[sliceScan]] sliced on
+    * the key itself. `orderKey` must be numeric, non-null and UNIQUE —
+    * equal keys would make the running total order-dependent. */
   def withRunningTotal(df: DataFrame, orderKey: String, value: String,
-      out: String): DataFrame = {
-    // The construction reads its input THREE times by design — the
-    // sliceId approxQuantile action, the per-slice window pass, and the
-    // offsets aggregate. Callers hand in derived tables (sessionize
-    // boundaries, packed rank keys), so materialize the input ONCE and
-    // let all three passes read blocks: un-checkpointed, the round-13
-    // isolation of events_concurrency measured the upstream sessionize
-    // replayed 5× through this function (3 passes here × 2 consumer
-    // references upstream), 9.3 s cold → 3.0 s with the checkpoints
-    // (guide §1.2 step 1 — don't compute things twice, let alone 5×).
-    val in = graft.Materialize.barrier(df, "Features.withRunningTotal.in")
-    val ranged = in.withColumn("__pid", sliceId(in, orderKey))
-    val wLocal = Window.partitionBy("__pid").orderBy(orderKey)
-      .rowsBetween(Window.unboundedPreceding, 0)
-    val local = ranged.withColumn("__lcum", sum(col(value)).over(wLocal))
-    val wOff = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-    val offs = ranged.groupBy("__pid").agg(sum(col(value)).as("__psum"))
-      .withColumn("__off", coalesce(sum("__psum").over(wOff), lit(0L)))
-      .select("__pid", "__off")
-    local.join(broadcast(offs), Seq("__pid"))
-      .withColumn(out, col("__off") + col("__lcum"))
-      .drop("__pid", "__lcum", "__off")
-  }
+      out: String): DataFrame =
+    sliceScan(df, col(orderKey), Seq(col(orderKey)), col(value), out)._1
 
   /** FP4 — the reference's null imputation: numeric nulls → -1, string
     * nulls → "-1" (exp4_work4.ipynb:127-128, README.md:320-321). */
@@ -250,9 +235,8 @@ object Features {
     * can be picked multiple times (the PPS-with-replacement convention;
     * callers wanting ≤1 cap the weight first). Σ picks = k exactly.
     *
-    * Scale: one distributed prefix sum ([[withRunningTotal]] — per-slice
-    * windows + a broadcast offsets table, no single-partition pass over
-    * raw rows) plus a broadcast 1-row total. Overflow guard: cum·k must
+    * Scale: one distributed prefix sum ([[withRunningTotal]]) plus a
+    * broadcast 1-row total. Overflow guard: cum·k must
     * stay under 2⁶³ — with Σw ≤ 9·10¹⁵ (a petabyte-scale char count)
     * and k ≤ 10³ the product is ≤ 9·10¹⁸·0.001; the require below
     * enforces it rather than silently wrapping. */
@@ -538,10 +522,10 @@ object Features {
 
   /** Curriculum training schedule — the deterministic global order a
     * curriculum-learning run feeds documents in: easy→hard STAGES by an
-    * integer difficulty column (exact ntile via [[rangeNtileBucket]] —
-    * no single-partition window sees raw rows), and WITHIN each stage a
-    * seeded hash shuffle (the [[temperatureSample]] affine-hash family)
-    * so no source or ingest order runs in long streaks. The output
+    * integer difficulty column (exact ntile via [[rangeNtileBucket]]),
+    * and WITHIN each stage a seeded hash shuffle (the
+    * [[temperatureSample]] affine-hash family) so no source or ingest
+    * order runs in long streaks. The output
     * `position` is the exact global 1-based rank in (stage,
     * shuffle_key, key) order, computed distributed via
     * [[withRunningTotal]] over a composite order key.
@@ -557,8 +541,7 @@ object Features {
     * needs).
     *
     * Scale shape: one ntile pass over the \|docs\| profile, a map-only
-    * hash column, then withRunningTotal's slice-local windows + a
-    * #slices-row broadcast — no corpus-sized single-partition anything. */
+    * hash column, then one [[withRunningTotal]] pass. */
   def curriculumSchedule(df: DataFrame, difficulty: String, key: String,
       nStages: Int = 4, shuffleMod: Long = 100000L): DataFrame = {
     import graft.functions.Portable.{P1, aCoef, bCoef}

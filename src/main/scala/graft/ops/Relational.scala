@@ -198,11 +198,11 @@ object Relational {
     * survives iff its gain strictly exceeds the best gain among all
     * STRICTLY cheaper points (equal-gain-cheaper dominates) and it is
     * the best gain at its own cost (equal-cost-higher-gain dominates).
-    * The strict-prefix max runs distributed — the
-    * [[Features.withRunningTotal]] slice construction with max instead
-    * of sum: per-slice window in parallel, #slices-row broadcast offset
-    * (a tiny single-partition window over an Aggregate, the
-    * PlanShapeSpec allowance), never a data-sized global window.
+    * The strict-prefix max runs distributed on
+    * [[Features.sliceScan]]'s slices, with max over an exclusive frame
+    * in place of its inclusive sum: per-slice window in parallel, a
+    * per-slice max table broadcast back as offsets, never a data-sized
+    * global window.
     *
     * Scale shape: two hash aggregates collapse the corpus to
     * \|distinct costs\| rows BEFORE any window (a bounded domain —
@@ -214,20 +214,12 @@ object Relational {
       .agg(count(lit(1)).as("n_rows"))
     val perCost = pts.groupBy("cost").agg(max("gain").as("gain"))
     // distributed strict-prefix max over cost order (cost unique here)
-    val parts = math.min(
-      df.sparkSession.sparkContext.defaultParallelism, 512)
-    val cuts = perCost.stat
-      .approxQuantile("cost", (1 until parts).map(_.toDouble / parts).toArray, 0.001)
-      .distinct.sorted
-    val sid =
-      if (cuts.isEmpty) lit(0)
-      else size(filter(typedLit(cuts.toSeq), c => col("cost").cast("double") > c))
-    val ranged = perCost.withColumn("__sid", sid)
+    val ranged = perCost.withColumn("__sid", Features.sliceId(perCost, col("cost")))
     val wLocal = Window.partitionBy("__sid").orderBy("cost")
       .rowsBetween(Window.unboundedPreceding, -1)
     val wOff = Window.orderBy("__sid").rowsBetween(Window.unboundedPreceding, -1)
-    val offs = ranged.groupBy("__sid").agg(max("gain").as("__smax"))
-      .withColumn("__off", max("__smax").over(wOff))
+    val offs = ranged.groupBy("__sid").agg(max("gain").as(Features.SliceAgg))
+      .withColumn("__off", max(Features.SliceAgg).over(wOff))
       .select("__sid", "__off")
     val frontier = ranged
       .withColumn("__lmax", max("gain").over(wLocal))

@@ -200,12 +200,15 @@ object Similarity {
     val scored = base.join(broadcast(q), col("vec_id") =!= col("q_id"))
       .withColumn("cosine",
         dot(col("embedding"), col("qv")) / (col("nrm") * col("qn")))
-    val w = Window.partitionBy("q_id").orderBy(desc("cosine"), asc("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "rnk", "vec_id", "cosine")
-      .orderBy("q_id", "rnk")
+    cosineTopK(scored, k)
   }
+
+  /** The top-k tail every exact re-rank shares: per query, the `k` best
+    * `cosine` rows, ties broken by vec_id, as (q_id, rnk, vec_id, cosine)
+    * sorted by (q_id, rnk). */
+  private def cosineTopK(scored: DataFrame, k: Int): DataFrame =
+    Relational.topNPerGroup(scored, "q_id", "cosine", "vec_id", k)
+      .select(col("q_id"), col("rn").as("rnk"), col("vec_id"), col("cosine"))
 
   /** MMR (maximal marginal relevance) diversity RE-RANK — the retrieval
     * post-processor that stops a RAG context window from filling with k
@@ -722,11 +725,7 @@ object Similarity {
       .join(base, Seq("vec_id"))
       .withColumn("cosine",
         dot(col("embedding"), col("qv")) / (col("nrm") * col("qn")))
-    val w = Window.partitionBy("q_id").orderBy(desc("cosine"), asc("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "rnk", "vec_id", "cosine")
-      .orderBy("q_id", "rnk")
+    cosineTopK(scored, k)
   }
 
   /** Persist the sign-LSH index: the per-(band, key) posting lists with
@@ -801,11 +800,7 @@ object Similarity {
       .join(base, Seq("vec_id"))
       .withColumn("cosine",
         dot(col("embedding"), col("qv")) / (col("nrm") * col("qn")))
-    val w = Window.partitionBy("q_id").orderBy(desc("cosine"), asc("vec_id"))
-    scored.withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "rnk", "vec_id", "cosine")
-      .orderBy("q_id", "rnk")
+    cosineTopK(scored, k)
   }
 
   /** Embedding-cosine near-duplicate detection as a dedup primitive:
@@ -934,15 +929,11 @@ object Similarity {
     val q = base.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("q_id"), col("embedding").as("qvv"),
         col("nrm").as("qn"))
-    val w = Window.partitionBy("q_id").orderBy(desc("cosine"), asc("vec_id"))
-    cand.join(base, Seq("vec_id"))
+    val scored = cand.join(base, Seq("vec_id"))
       .join(broadcast(q), Seq("q_id"))
       .withColumn("cosine",
         dot(col("embedding"), col("qvv")) / (col("nrm") * col("qn")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "rnk", "vec_id", "cosine")
-      .orderBy("q_id", "rnk")
+    cosineTopK(scored, k)
   }
 
   /** Default codebook-fit sample cap: quantizer training reads AT MOST
@@ -1382,16 +1373,12 @@ object Similarity {
       .select(col("q_id"),
         expr(s"vec_id div $MaxClusters").as("vec_id"),
         pmod(col("vec_id"), lit(MaxClusters.toLong)).cast("int").as("cluster"))
-    val w = Window.partitionBy("q_id").orderBy(desc("cosine"), asc("vec_id"))
-    cand.join(lists, Seq("cluster", "vec_id"))
+    val scored = cand.join(lists, Seq("cluster", "vec_id"))
       .join(broadcast(q.select(col("q_id"), col("embedding").as("qvv"),
         col("nrm").as("qn"))), Seq("q_id"))
       .withColumn("cosine",
         dot(col("embedding"), col("qvv")) / (col("nrm") * col("qn")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "rnk", "vec_id", "cosine")
-      .orderBy("q_id", "rnk")
+    cosineTopK(scored, k)
   }
 
   /** Persist an IVFADC index under `dir` — [[buildIvfIndex]]'s layout
@@ -1547,15 +1534,11 @@ object Similarity {
       .join(broadcast(q.select(col("q_id"), col("embedding").as("qvv"),
         col("nrm").as("qn"))), Seq("q_id"))
     // score only the probed inverted lists, exact cosine re-rank
-    val w = Window.partitionBy("q_id").orderBy(desc("cosine"), asc("vec_id"))
-    listed.join(broadcast(probes), Seq("cluster"))
+    val scored = listed.join(broadcast(probes), Seq("cluster"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cosine",
         dot(col("embedding"), col("qvv")) / (col("nrm") * col("qn")))
-      .withColumn("rnk", row_number().over(w))
-      .filter(col("rnk") <= k)
-      .select("q_id", "rnk", "vec_id", "cosine")
-      .orderBy("q_id", "rnk")
+    cosineTopK(scored, k)
   }
 
   /** Persist an IVF index under `dir` — the build-once/probe-many shape

@@ -675,9 +675,8 @@ object TextAnalysis {
     * a fixed order and cut every `budget` tokens" layout: for each doc,
     * its token count, global start offset, and the first/last training
     * sequence it lands in. The offset is an exact global prefix sum over
-    * doc_id order, computed DISTRIBUTED via [[Features.withRunningTotal]]
-    * (derived range slices + broadcast offsets — no single-partition
-    * window over raw rows, the one shape PlanShapeSpec forbids). */
+    * doc_id order, from [[Features.withRunningTotal]] (the
+    * [[Features.sliceScan]] construction). */
   def packSequences(docs: DataFrame, budget: Int = 256,
       id: String = "doc_id", text: String = "text"): DataFrame = {
     require(budget >= 1, s"budget >= 1, got $budget")

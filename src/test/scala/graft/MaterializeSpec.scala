@@ -102,17 +102,7 @@ class MaterializeSpec extends SparkTestBase {
         "getPersistentRDDs", "StorageLevel"),
       "Scratch.scala" -> Seq("java.io.tmpdir", "createTempDirectory",
         "ProcessHandle.current", "addShutdownHook"))
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the repository root: $root")
-    def files(d: java.io.File): Seq[java.io.File] =
-      d.listFiles.toSeq.flatMap(f => if (f.isDirectory) files(f) else Seq(f))
-    val code = for {
-      f <- files(root) if f.getName.endsWith(".scala")
-      src = scala.io.Source.fromFile(f, "UTF-8")
-      (line, n) <- try src.getLines().toList.zipWithIndex finally src.close()
-      c = line.trim
-      if !c.startsWith("//") && !c.startsWith("*") && !c.startsWith("/*")
-    } yield (f, n + 1, c)
+    val code = SourceScan.codeLines()
     val offenders = for {
       (seam, raw) <- seams
       (f, n, c) <- code if f.getName != seam && raw.exists(c.contains)

@@ -13,6 +13,22 @@ class PlanShapeSpec extends SparkTestBase {
       .queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
 
+  /** Single-partition windows that may see data-sized input: every one
+    * except the prefix construction's offsets window, whose child is the
+    * ≤ MaxSlices-row per-slice table (output [[ops.Features.SliceAgg]]).
+    * With `limitOk`, a window over a GlobalLimit-capped child (≤ k rows)
+    * is allowed too. */
+  private def dataSizedGlobalWindows(
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+      limitOk: Boolean = false) = {
+    import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Window => LWindow}
+    plan.collect {
+      case w: LWindow if w.partitionSpec.isEmpty &&
+        !w.child.output.exists(_.name == ops.Features.SliceAgg) &&
+        !(limitOk && w.child.collectFirst { case l: GlobalLimit => l }.nonEmpty) => w
+    }
+  }
+
   test("q1 scan is pruned to the single grouped column") {
     val plan = planOf("q1_group_count_sort")
     assert(plan.contains("ReadSchema: struct<c_mktsegment:string>"),
@@ -164,16 +180,10 @@ class PlanShapeSpec extends SparkTestBase {
       s"attribution must not self-join the stream:\n$attr")
     // RFM: no DATA-sized single-partition window (the rangeNtileBucket
     // contract — a global ntile would funnel all users through one
-    // partition). The op's own #slices-row offsets window (over the
-    // __cnt per-slice counts) is the documented, bounded exception.
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    // partition)
     val rfmPlan = SparkEntry.queries("events_rfm")(spark, sf0001)
       .queryExecution.optimizedPlan
-    val dataSizedGlobalWindows = rfmPlan.collect {
-      case w: LWindow if w.partitionSpec.isEmpty &&
-        !w.child.output.exists(_.name == "__cnt") => w
-    }
-    assert(dataSizedGlobalWindows.isEmpty,
+    assert(dataSizedGlobalWindows(rfmPlan).isEmpty,
       s"events_rfm plans a data-sized single-partition window:\n$rfmPlan")
     // link prediction: top-k via TakeOrdered; degree joins broadcast
     val links = planOf("graph_jaccard_links")
@@ -222,18 +232,11 @@ class PlanShapeSpec extends SparkTestBase {
     val rs = planOf("sim_range_search")
     assert(!rs.contains("Window") && !rs.contains("SortMergeJoin"),
       s"range search must be window-free:\n$rs")
-    // dq_key_skew: ranks come from withRunningTotal — the only
-    // single-partition windows allowed are its #slices-row offset
-    // tables (child output __psum/__cnt), never raw keys
-    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
+    // dq_key_skew: ranks come from withRunningTotal — no global window
+    // over raw keys
     val skewPlan = SparkEntry.queries("dq_key_skew")(spark, sf0001)
       .queryExecution.optimizedPlan
-    val rawGlobal = skewPlan.collect {
-      case w: LWindow if w.partitionSpec.isEmpty &&
-        !w.child.output.exists(c =>
-          c.name == "__psum" || c.name == "__cnt") => w
-    }
-    assert(rawGlobal.isEmpty,
+    assert(dataSizedGlobalWindows(skewPlan).isEmpty,
       s"dq_key_skew plans a data-sized global window:\n$skewPlan")
     // oversample: class table broadcasts, fact side never shuffles
     val ov = planOf("fp_oversample")
@@ -259,26 +262,18 @@ class PlanShapeSpec extends SparkTestBase {
 
   test("round-10 queries: distributed scans stay distributed, " +
       "marginals broadcast") {
-    import org.apache.spark.sql.catalyst.plans.logical.{GlobalLimit, Window => LWindow}
+    import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
     // concurrency timeline: the sweep-line prefix sum must NOT exist as
-    // a data-sized single-partition window. Two bounded shapes are
-    // allowed, exactly as in the generic single-partition-window audit
-    // below: withRunningTotal's #slices-row offset table (__psum/__cnt
-    // columns) and a window whose child is capped by a GlobalLimit
-    // (the ≤ topK peak-off-the-top-k window added in round 13).
+    // a data-sized single-partition window. Besides withRunningTotal's
+    // offsets window, a window whose child is capped by a GlobalLimit
+    // is allowed (the ≤ topK peak-off-the-top-k window added in round 13).
     val ct = SparkEntry.queries("events_concurrency")(spark, sf0001)
       .queryExecution.optimizedPlan
-    val rawGlobal = ct.collect {
-      case w: LWindow if w.partitionSpec.isEmpty &&
-        !w.child.output.exists(c =>
-          c.name == "__psum" || c.name == "__cnt") &&
-        w.child.collectFirst { case l: GlobalLimit => l }.isEmpty => w
-    }
-    assert(rawGlobal.isEmpty,
+    assert(dataSizedGlobalWindows(ct, limitOk = true).isEmpty,
       s"events_concurrency plans a data-sized global window:\n$ct")
     // planted regression: the pin must still fire on the pre-round-13
     // crossJoin(max-over-everything) shape — a global window directly
-    // over the unbounded timeline (no __psum/__cnt child, no limit).
+    // over the unbounded timeline (no per-slice child, no limit).
     val planted = {
       import spark.implicits._
       import org.apache.spark.sql.functions.max
@@ -288,13 +283,7 @@ class PlanShapeSpec extends SparkTestBase {
       tl.withColumn("peak", max("concurrency").over(WSpec.partitionBy()))
         .queryExecution.optimizedPlan
     }
-    val plantedHit = planted.collect {
-      case w: LWindow if w.partitionSpec.isEmpty &&
-        !w.child.output.exists(c =>
-          c.name == "__psum" || c.name == "__cnt") &&
-        w.child.collectFirst { case l: GlobalLimit => l }.isEmpty => w
-    }
-    assert(plantedHit.nonEmpty,
+    assert(dataSizedGlobalWindows(planted, limitOk = true).nonEmpty,
       "the data-sized-global-window pin no longer detects the regression " +
         "shape it was written for")
     // growth accounting: ONE user-keyed window spec, no self-join of
@@ -819,18 +808,12 @@ class PlanShapeSpec extends SparkTestBase {
 
   test("round-11 queries: prefix scans stay sliced, rollups broadcast") {
     import org.apache.spark.sql.catalyst.plans.logical.{Window => LWindow}
-    // skyline + ABC: the only global windows allowed are the
-    // #slices-row offset tables of the distributed prefix construction
-    // (outputs __smax / __psum), never a data-sized sort
+    // skyline + ABC: the only global windows allowed are the offsets
+    // windows over the per-slice tables, never a data-sized sort
     Seq("q45_skyline", "q46_abc_class").foreach { q =>
       val plan = SparkEntry.queries(q)(spark, sf0001)
         .queryExecution.optimizedPlan
-      val rawGlobal = plan.collect {
-        case w: LWindow if w.partitionSpec.isEmpty &&
-          !w.child.output.exists(c =>
-            c.name == "__smax" || c.name == "__psum") => w
-      }
-      assert(rawGlobal.isEmpty,
+      assert(dataSizedGlobalWindows(plan).isEmpty,
         s"$q plans a data-sized global window:\n$plan")
     }
     // position attribution: every window is user-keyed; one sort
