@@ -44,32 +44,55 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
        |  + ${fold(Portable.B2, Portable.P2)})""".stripMargin
   }
 
-  /** CTE chain ending in `mh_pairs(da, db, sig_matches)` — shared by the
-    * MinHash-LSH pair oracle and the composed dedup-pipeline oracle. */
-  private[graft] def minhashLshCtes(base: String = "documents"): String = {
+  /** `m0..m31` MinHash signature aggregates over shingle hashes `hh`:
+    * the DuckDB twin of [[graft.ops.Dedup.minhashSignatures]]. */
+  private def sigAggs: String = {
     import Portable._
-    val sigAggs = (0 until graft.ops.Dedup.MinhashK).map(i =>
+    (0 until graft.ops.Dedup.MinhashK).map(i =>
       s"min((${aCoef(i)} * (hh % $P1) + ${bCoef(i)}) % $P1) AS m$i").mkString(",\n           ")
-    val bandSelects = (0 until graft.ops.Dedup.MinhashBands).map { b =>
+  }
+
+  /** (doc_id, band_idx, band_hash) rows of signature table `sig`: the
+    * portable band-key fold of Dedup's bandKeysRaw, one SELECT per band. */
+  private def bandSelects(sig: String): String = {
+    import Portable._
+    (0 until graft.ops.Dedup.MinhashBands).map { b =>
       val key = (0 until 4).foldLeft(s"CAST(${b + 1} AS BIGINT)") { (acc, j) =>
         s"(($acc * $BandMix + m${4 * b + j}) % $P1)"
       }
-      s"SELECT doc_id, $b AS band_idx, $key AS band_hash FROM sig"
+      s"SELECT doc_id, $b AS band_idx, $key AS band_hash FROM $sig"
     }.mkString("\n           UNION ALL ")
-    val matches = (0 until graft.ops.Dedup.MinhashK)
-      .map(i => s"(CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END)")
-      .mkString(" + ")
+  }
+
+  /** Signature components on which aliases `sa` and `sb` agree. */
+  private def sigMatches: String = (0 until graft.ops.Dedup.MinhashK)
+    .map(i => s"(CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END)")
+    .mkString(" + ")
+
+  /** The shingle prologue of every MinHash twin: `tok` (the words of
+    * `base`), `shs` (their word 3-grams) and `h` (distinct (doc_id, hh)
+    * poly hashes, MATERIALIZED when `materialize`). Starts at `tok AS`
+    * and ends without a comma. */
+  private def shingleCtes(base: String, materialize: Boolean = false): String =
     s"""tok AS (SELECT doc_id, string_split(text, ' ') AS arr FROM $base),
        |  shs AS (SELECT doc_id, arr[i] || ' ' || arr[i+1] || ' ' || arr[i+2] AS s
        |          FROM tok, LATERAL (SELECT unnest(range(1, len(arr) - 1)) AS i) r
        |          WHERE len(arr) >= 3),
-       |  h AS (SELECT DISTINCT doc_id, ${polySql("s")} AS hh FROM shs),
+       |  h AS ${if (materialize) "MATERIALIZED " else ""}(SELECT DISTINCT doc_id, ${polySql("s")} AS hh FROM shs)""".stripMargin
+
+  /** CTE chain ending in `mh_pairs(da, db, sig_matches)`: the all-pairs
+    * MinHash-LSH chain with corpus-wide caps, shared by the twins of
+    * `dedup_minhash_lsh`, `dedup_pipeline`, `dedup_recall`,
+    * `pipeline_pretrain_report`, `split_leakage_safe` and
+    * `dedup_cap_stats`. */
+  private[graft] def minhashLshCtes(base: String = "documents"): String =
+    s"""${shingleCtes(base)},
        |  kept AS (SELECT doc_id, hh FROM h
        |           WHERE hh IN (SELECT hh FROM h GROUP BY hh HAVING count(*) <= 100)),
        |  sig AS (SELECT doc_id,
        |           $sigAggs
        |          FROM kept GROUP BY doc_id),
-       |  banded AS ($bandSelects),
+       |  banded AS (${bandSelects("sig")}),
        |  keptb AS (SELECT * FROM banded b
        |            WHERE NOT EXISTS (
        |              SELECT 1 FROM banded g
@@ -80,457 +103,200 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
        |             ON a.band_idx = b.band_idx AND a.band_hash = b.band_hash
        |            AND a.doc_id < b.doc_id),
        |  mh_pairs AS (
-       |    SELECT da, db, CAST($matches AS BIGINT) AS sig_matches
+       |    SELECT da, db, CAST($sigMatches AS BIGINT) AS sig_matches
        |    FROM cand JOIN sig sa ON sa.doc_id = da JOIN sig sb ON sb.doc_id = db
-       |    WHERE $matches >= 16)""".stripMargin
-  }
+       |    WHERE $sigMatches >= 16)""".stripMargin
 
   private[graft] def minhashLshOracle: String =
     s"""WITH ${minhashLshCtes()}
        |SELECT da, db, sig_matches FROM mh_pairs ORDER BY da, db""".stripMargin
 
-  /** Ingest-gate verdicts: reuses the minhash chain's `sig`/`keptb` CTEs
-    * (built over ALL documents = corpus ∪ batch, exactly what
-    * Dedup.ingestGate computes signatures over) and restricts the bucket
-    * probe to batch(odd) × corpus(even). Precedence CASE mirrors the
-    * operator: exact vs corpus > exact within batch > LSH near > new. */
+  // ---- The ingest-gate twins: one signature chain, one best-match
+  // probe and one verdict ladder, from which every gate twin is
+  // assembled (written independently of Dedup's Spark gate). Shared
+  // CTEs are MATERIALIZED: DuckDB 1.0 inlines a plain CTE at each
+  // reference, re-running the whole signature chain per use. ----
+
+  /** A cap-scoped signature chain over `h`, each name suffixed `sfx`:
+    * `hot` (shingles of more than 100 `scope` docs), `kept` (h without
+    * them), `sig` (signatures), `bandall` (band keys), `hotbk` (buckets
+    * of more than 50 `scope` docs) and `kb` (bandall without them).
+    * `scope` is the doc set whose statistics set the caps: the docs an
+    * index holds, or TRUE for the inline gate. */
+  private def sigChainCtes(scope: String, sfx: String = ""): String =
+    s"""hot$sfx AS (SELECT hh FROM h WHERE $scope
+       |          GROUP BY hh HAVING count(*) > 100),
+       |  kept$sfx AS (SELECT doc_id, hh FROM h
+       |           WHERE hh NOT IN (SELECT hh FROM hot$sfx)),
+       |  sig$sfx AS MATERIALIZED (SELECT doc_id, $sigAggs FROM kept$sfx GROUP BY doc_id),
+       |  bandall$sfx AS MATERIALIZED (${bandSelects(s"sig$sfx")}),
+       |  hotbk$sfx AS (SELECT band_idx, band_hash FROM bandall$sfx
+       |            WHERE $scope
+       |            GROUP BY 1, 2 HAVING count(*) > 50),
+       |  kb$sfx AS MATERIALIZED (SELECT * FROM bandall$sfx b WHERE NOT EXISTS (
+       |           SELECT 1 FROM hotbk$sfx g
+       |           WHERE g.band_idx = b.band_idx AND g.band_hash = b.band_hash))""".stripMargin
+
+  /** One best-match probe, each name suffixed `t`: `nc` (pairs of a
+    * batch doc `bid` and a candidate `cid` sharing a bucket of `kb`,
+    * restricted by `pair` over their rows `bb` and `cb`), `sc` (those
+    * with at least 16 of 32 components agreeing in `sig`) and `best`
+    * (each bid's most-agreeing cid, the smallest on ties). */
+  private def bestMatchCtes(t: String, kb: String, sig: String,
+      pair: String): String =
+    s"""nc$t AS (SELECT DISTINCT bb.doc_id AS bid, cb.doc_id AS cid
+       |          FROM $kb bb JOIN $kb cb
+       |            ON bb.band_idx = cb.band_idx AND bb.band_hash = cb.band_hash
+       |          WHERE $pair),
+       |  sc$t AS (SELECT bid, cid, CAST($sigMatches AS BIGINT) AS sm
+       |          FROM nc$t JOIN $sig sa ON sa.doc_id = bid
+       |                   JOIN $sig sb ON sb.doc_id = cid
+       |          WHERE $sigMatches >= 16),
+       |  best$t AS (SELECT bid, cid FROM (
+       |              SELECT bid, cid, row_number() OVER (PARTITION BY bid
+       |                       ORDER BY sm DESC, cid) AS rn
+       |              FROM sc$t) WHERE rn = 1)""".stripMargin
+
+  /** The verdict ladder over the rows `b` of `bat` ($id, fp): the
+    * fingerprint is in `dict` (fp, exact_id) > a smaller batch id has
+    * the same fingerprint > each near tier (verdict literal, best-match
+    * CTE of (bid, cid)) in order > 'new'. match_id is the id that
+    * decided, NULL for 'new'. */
+  private def verdictSql(id: String, bat: String, dict: String,
+      near: Seq[(String, String)]): String = {
+    val tiers = Seq(("'exact_dup'", "e.exact_id IS NOT NULL", "e.exact_id"),
+        ("'batch_dup'", s"b.$id <> k.batch_keep_id", "k.batch_keep_id")) ++
+      near.indices.map(i => (near(i)._1, s"n$i.cid IS NOT NULL", s"n$i.cid"))
+    def ladder(out: ((String, String, String)) => String, otherwise: String) =
+      tiers.map(t => s"WHEN ${t._2} THEN ${out(t)}")
+        .mkString("CASE ", "\n       ", s"\n       ELSE $otherwise END")
+    val nearJoins = near.zipWithIndex.map { case ((_, best), i) =>
+      s"\n  LEFT JOIN $best n$i ON n$i.bid = b.$id" }
+    s"""SELECT b.$id AS $id,
+       |  ${ladder(_._1, "'new'")} AS verdict,
+       |  ${ladder(_._3, "NULL")} AS match_id
+       |  FROM $bat b LEFT JOIN $dict e ON e.fp = b.fp
+       |  JOIN (SELECT fp, min($id) AS batch_keep_id FROM $bat GROUP BY 1) k
+       |    ON k.fp = b.fp""".stripMargin + nearJoins.mkString
+  }
+
+  /** An N-cycle gate over `fps ($id, fp)` whose corpus is the even ids:
+    * `cfp0` is the corpus dictionary, and cycle j gates the ids
+    * ≡ 2j+1 mod 2N (`bat$j`) against `dict$j` (cfp0 ∪ the admissions of
+    * earlier cycles) and the near tiers `probe(j)` returns with their
+    * CTEs. `v$j` holds cycle j's verdicts, `adm$j` the ids it admits.
+    * Starts at `cfp0 AS` and ends without a comma. */
+  private def gateCycleCtes(nCycles: Int, id: String, fps: String,
+      probe: Int => (Seq[String], Seq[(String, String)])): String = {
+    val cycles = (0 until nCycles).map { j =>
+      val (probeCtes, near) = probe(j)
+      val admitted = (0 until j).map(k =>
+        s""" UNION ALL
+           |           SELECT fp, min($id) AS exact_id FROM bat$k
+           |           WHERE $id IN (SELECT $id FROM adm$k) GROUP BY fp""".stripMargin)
+      (Seq(s"""bat$j AS MATERIALIZED (SELECT $id, fp FROM $fps
+              |           WHERE $id % ${2 * nCycles} = ${2 * j + 1})""".stripMargin,
+          s"dict$j AS (SELECT fp, exact_id FROM cfp0${admitted.mkString})") ++
+        probeCtes ++
+        Seq(s"v$j AS MATERIALIZED (${verdictSql(id, s"bat$j", s"dict$j", near)})",
+          s"adm$j AS MATERIALIZED (SELECT $id FROM v$j WHERE verdict = 'new')"))
+        .mkString(",\n  ")
+    }
+    (s"""cfp0 AS MATERIALIZED (SELECT fp, min($id) AS exact_id FROM $fps
+        |           WHERE $id % 2 = 0 GROUP BY 1)""".stripMargin +: cycles)
+      .mkString(",\n  ")
+  }
+
+  /** Batch rows of cycle j (doc_id ≡ 2j+1 mod 2N) against the corpus:
+    * the even ids and the admissions of earlier cycles. */
+  private def corpusPair(j: Int, nCycles: Int): String =
+    s"bb.doc_id % ${2 * nCycles} = ${2 * j + 1} AND (cb.doc_id % 2 = 0" +
+      (0 until j).map(k => s" OR cb.doc_id IN (SELECT doc_id FROM adm$k)").mkString + ")"
+
+  /** The sig-index lifecycle as an N-cycle gate: caps pinned over the
+    * even (indexed) half, as Dedup.buildSigIndex pins them, and each
+    * cycle probing the corpus its index holds by then — the build, the
+    * probes and the appends of Dedup.{build,probe,appendTo}SigIndex. */
+  private def sigIndexGateCtes(nCycles: Int): String =
+    s"""${shingleCtes("documents", materialize = true)},
+       |  ${sigChainCtes("doc_id % 2 = 0")},
+       |  fps AS (SELECT doc_id, md5(text) AS fp FROM documents),
+       |  ${gateCycleCtes(nCycles, "doc_id", "fps", j =>
+              (Seq(bestMatchCtes(s"$j", "kb", "sig", corpusPair(j, nCycles))),
+                Seq("'near_dup'" -> s"best$j")))}""".stripMargin
+
+  /** The cycles' verdicts stacked, each tagged with its admit_cycle. */
+  private def cycleUnion(nCycles: Int, id: String): String =
+    (0 until nCycles).map(j =>
+      s"SELECT $id, verdict, match_id, CAST($j AS BIGINT) AS admit_cycle FROM v$j")
+      .mkString("\n         UNION ALL ")
+
+  /** Ingest-gate verdicts (Dedup.ingestGate): caps scoped over all
+    * documents (corpus ∪ batch, planted pair included), batch = odd ids,
+    * and a second near tier, `batch_near_dup`, probing earlier batch
+    * docs. */
   private[graft] def ingestGateOracle: String = {
-    val matches = (0 until graft.ops.Dedup.MinhashK)
-      .map(i => s"(CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END)")
-      .mkString(" + ")
+    val batchPair = "bb.doc_id % 2 = 1 AND cb.doc_id % 2 = 1 AND cb.doc_id < bb.doc_id"
     s"""WITH docs_p AS (
        |   SELECT doc_id, text FROM documents
        |   UNION ALL SELECT $PlantedNearDupIdA, '$PlantedNearDupTextA'
        |   UNION ALL SELECT $PlantedNearDupIdB, '$PlantedNearDupTextB'),
-       | ${minhashLshCtes("docs_p")},
-       | corp AS (SELECT doc_id, md5(text) AS fp FROM docs_p WHERE doc_id % 2 = 0),
-       | bat  AS (SELECT doc_id, md5(text) AS fp FROM docs_p WHERE doc_id % 2 = 1),
-       | cfp AS (SELECT fp, min(doc_id) AS exact_id FROM corp GROUP BY 1),
-       | bk  AS (SELECT fp, min(doc_id) AS batch_keep_id FROM bat GROUP BY 1),
-       | nc AS (SELECT DISTINCT bb.doc_id AS bid, cb.doc_id AS cid
-       |        FROM keptb bb JOIN keptb cb
-       |          ON bb.band_idx = cb.band_idx AND bb.band_hash = cb.band_hash
-       |        WHERE bb.doc_id % 2 = 1 AND cb.doc_id % 2 = 0),
-       | sc AS (SELECT bid, cid, CAST($matches AS BIGINT) AS sm
-       |        FROM nc JOIN sig sa ON sa.doc_id = bid
-       |                JOIN sig sb ON sb.doc_id = cid
-       |        WHERE $matches >= 16),
-       | best AS (SELECT bid, cid FROM (
-       |            SELECT bid, cid,
-       |                   row_number() OVER (PARTITION BY bid
-       |                                      ORDER BY sm DESC, cid) AS rn
-       |            FROM sc) WHERE rn = 1),
-       | nbb AS (SELECT DISTINCT bb.doc_id AS bid, cb.doc_id AS bbid
-       |         FROM keptb bb JOIN keptb cb
-       |           ON bb.band_idx = cb.band_idx AND bb.band_hash = cb.band_hash
-       |         WHERE bb.doc_id % 2 = 1 AND cb.doc_id % 2 = 1
-       |           AND cb.doc_id < bb.doc_id),
-       | sbb AS (SELECT bid, bbid, CAST($matches AS BIGINT) AS sm
-       |         FROM nbb JOIN sig sa ON sa.doc_id = bid
-       |                  JOIN sig sb ON sb.doc_id = bbid
-       |         WHERE $matches >= 16),
-       | bestb AS (SELECT bid, bbid FROM (
-       |             SELECT bid, bbid,
-       |                    row_number() OVER (PARTITION BY bid
-       |                                       ORDER BY sm DESC, bbid) AS rn
-       |             FROM sbb) WHERE rn = 1)
-       |SELECT b.doc_id AS doc_id,
-       |  CASE WHEN e.exact_id IS NOT NULL THEN 'exact_dup'
-       |       WHEN b.doc_id <> k.batch_keep_id THEN 'batch_dup'
-       |       WHEN nb.cid IS NOT NULL THEN 'near_dup'
-       |       WHEN bb2.bbid IS NOT NULL THEN 'batch_near_dup'
-       |       ELSE 'new' END AS verdict,
-       |  CASE WHEN e.exact_id IS NOT NULL THEN e.exact_id
-       |       WHEN b.doc_id <> k.batch_keep_id THEN k.batch_keep_id
-       |       WHEN nb.cid IS NOT NULL THEN nb.cid
-       |       WHEN bb2.bbid IS NOT NULL THEN bb2.bbid
-       |       ELSE NULL END AS match_id
-       |FROM bat b LEFT JOIN cfp e ON e.fp = b.fp
-       |JOIN bk k ON k.fp = b.fp
-       |LEFT JOIN best nb ON nb.bid = b.doc_id
-       |LEFT JOIN bestb bb2 ON bb2.bid = b.doc_id
-       |ORDER BY doc_id""".stripMargin
+       |  ${shingleCtes("docs_p", materialize = true)},
+       |  ${sigChainCtes("TRUE")},
+       |  fps AS (SELECT doc_id, md5(text) AS fp FROM docs_p),
+       |  ${gateCycleCtes(1, "doc_id", "fps", _ =>
+              (Seq(bestMatchCtes("c", "kb", "sig", corpusPair(0, 1)),
+                  bestMatchCtes("b", "kb", "sig", batchPair)),
+                Seq("'near_dup'" -> "bestc", "'batch_near_dup'" -> "bestb")))}
+       |SELECT doc_id, verdict, match_id FROM v0 ORDER BY doc_id""".stripMargin
   }
 
-  /** Persisted-sig-index probe: the ingest-gate verdict chain with
-    * CORPUS-SCOPED caps — df hot list and hot buckets computed over the
-    * even (indexed) half only, batch signatures built by dropping the
-    * CORPUS hot shingles (exactly what Dedup.buildSigIndex persists and
-    * probeSigIndex reads back). Mirrors the operator's build→probe
-    * semantics end to end in one SQL chain. */
-  /** Two-cycle sig-index oracle: one shared shingle/signature chain with
-    * BUILD-PINNED (even-half-scoped) hot lists, probe of batch 1
-    * (doc_id ≡ 1 mod 4), admission of its `new` docs, then probe of
-    * batch 2 (doc_id ≡ 3 mod 4) against even ∪ admitted — exactly the
-    * parquet-append state the operator maintains. */
-  private[graft] def sigIndexAppendOracle: String = {
-    import Portable._
-    def sigAggs = (0 until graft.ops.Dedup.MinhashK).map(i =>
-      s"min((${aCoef(i)} * (hh % $P1) + ${bCoef(i)}) % $P1) AS m$i")
-      .mkString(",\n           ")
-    def bandSelects(sigTable: String) =
-      (0 until graft.ops.Dedup.MinhashBands).map { b =>
-        val key = (0 until 4).foldLeft(s"CAST(${b + 1} AS BIGINT)") { (acc, j) =>
-          s"(($acc * $BandMix + m${4 * b + j}) % $P1)"
-        }
-        s"SELECT doc_id, $b AS band_idx, $key AS band_hash FROM $sigTable"
-      }.mkString("\n           UNION ALL ")
-    val matches = (0 until graft.ops.Dedup.MinhashK)
-      .map(i => s"(CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END)")
-      .mkString(" + ")
-    s"""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS arr FROM documents),
-       |  shs AS (SELECT doc_id, arr[i] || ' ' || arr[i+1] || ' ' || arr[i+2] AS s
-       |          FROM tok, LATERAL (SELECT unnest(range(1, len(arr) - 1)) AS i) r
-       |          WHERE len(arr) >= 3),
-       |  h AS (SELECT DISTINCT doc_id, ${polySql("s")} AS hh FROM shs),
-       |  hot AS (SELECT hh FROM h WHERE doc_id % 2 = 0
-       |          GROUP BY hh HAVING count(*) > 100),
-       |  kept AS (SELECT doc_id, hh FROM h
-       |           WHERE hh NOT IN (SELECT hh FROM hot)),
-       |  sig AS (SELECT doc_id, $sigAggs FROM kept GROUP BY doc_id),
-       |  bandall AS (${bandSelects("sig")}),
-       |  hotbk AS (SELECT band_idx, band_hash FROM bandall
-       |            WHERE doc_id % 2 = 0
-       |            GROUP BY 1, 2 HAVING count(*) > 50),
-       |  kb AS (SELECT * FROM bandall b WHERE NOT EXISTS (
-       |           SELECT 1 FROM hotbk g
-       |           WHERE g.band_idx = b.band_idx AND g.band_hash = b.band_hash)),
-       |  corp1 AS (SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 2 = 0),
-       |  cfp1 AS (SELECT fp, min(doc_id) AS exact_id FROM corp1 GROUP BY 1),
-       |  bat1 AS (SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 4 = 1),
-       |  bk1 AS (SELECT fp, min(doc_id) AS batch_keep_id FROM bat1 GROUP BY 1),
-       |  nc1 AS (SELECT DISTINCT bb.doc_id AS bid, cb.doc_id AS cid
-       |          FROM kb bb JOIN kb cb
-       |            ON bb.band_idx = cb.band_idx AND bb.band_hash = cb.band_hash
-       |          WHERE bb.doc_id % 4 = 1 AND cb.doc_id % 2 = 0),
-       |  sc1 AS (SELECT bid, cid, CAST($matches AS BIGINT) AS sm
-       |          FROM nc1 JOIN sig sa ON sa.doc_id = bid
-       |                   JOIN sig sb ON sb.doc_id = cid
-       |          WHERE $matches >= 16),
-       |  best1 AS (SELECT bid, cid FROM (
-       |              SELECT bid, cid, row_number() OVER (PARTITION BY bid
-       |                       ORDER BY sm DESC, cid) AS rn
-       |              FROM sc1) WHERE rn = 1),
-       |  v1 AS (SELECT b.doc_id,
-       |           CASE WHEN e.exact_id IS NOT NULL THEN 'exact_dup'
-       |                WHEN b.doc_id <> k.batch_keep_id THEN 'batch_dup'
-       |                WHEN nb.cid IS NOT NULL THEN 'near_dup'
-       |                ELSE 'new' END AS verdict
-       |         FROM bat1 b LEFT JOIN cfp1 e ON e.fp = b.fp
-       |         JOIN bk1 k ON k.fp = b.fp
-       |         LEFT JOIN best1 nb ON nb.bid = b.doc_id),
-       |  adm AS (SELECT doc_id FROM v1 WHERE verdict = 'new'),
-       |  cfp2 AS (SELECT fp, exact_id FROM cfp1
-       |           UNION ALL
-       |           SELECT fp, min(doc_id) AS exact_id FROM bat1
-       |           WHERE doc_id IN (SELECT doc_id FROM adm) GROUP BY fp),
-       |  bat2 AS (SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 4 = 3),
-       |  bk2 AS (SELECT fp, min(doc_id) AS batch_keep_id FROM bat2 GROUP BY 1),
-       |  nc2 AS (SELECT DISTINCT bb.doc_id AS bid, cb.doc_id AS cid
-       |          FROM kb bb JOIN kb cb
-       |            ON bb.band_idx = cb.band_idx AND bb.band_hash = cb.band_hash
-       |          WHERE bb.doc_id % 4 = 3
-       |            AND (cb.doc_id % 2 = 0
-       |                 OR cb.doc_id IN (SELECT doc_id FROM adm))),
-       |  sc2 AS (SELECT bid, cid, CAST($matches AS BIGINT) AS sm
-       |          FROM nc2 JOIN sig sa ON sa.doc_id = bid
-       |                   JOIN sig sb ON sb.doc_id = cid
-       |          WHERE $matches >= 16),
-       |  best2 AS (SELECT bid, cid FROM (
-       |              SELECT bid, cid, row_number() OVER (PARTITION BY bid
-       |                       ORDER BY sm DESC, cid) AS rn
-       |              FROM sc2) WHERE rn = 1)
-       |SELECT b.doc_id AS doc_id,
-       |  CASE WHEN e.exact_id IS NOT NULL THEN 'exact_dup'
-       |       WHEN b.doc_id <> k.batch_keep_id THEN 'batch_dup'
-       |       WHEN nb.cid IS NOT NULL THEN 'near_dup'
-       |       ELSE 'new' END AS verdict,
-       |  CASE WHEN e.exact_id IS NOT NULL THEN e.exact_id
-       |       WHEN b.doc_id <> k.batch_keep_id THEN k.batch_keep_id
-       |       WHEN nb.cid IS NOT NULL THEN nb.cid
-       |       ELSE NULL END AS match_id
-       |FROM bat2 b LEFT JOIN cfp2 e ON e.fp = b.fp
-       |JOIN bk2 k ON k.fp = b.fp
-       |LEFT JOIN best2 nb ON nb.bid = b.doc_id
-       |ORDER BY doc_id""".stripMargin
-  }
+  /** `dedup_sig_index_probe`: one cycle, the odd half against the index
+    * built on the even half. */
+  private[graft] def sigIndexProbeOracle: String =
+    s"""WITH ${sigIndexGateCtes(1)}
+       |SELECT doc_id, verdict, match_id FROM v0 ORDER BY doc_id""".stripMargin
 
-  /** Rebuild-phase oracle: the [[sigIndexAppendOracle]] chain (build on
-    * the even half, probe batch 1, admit, probe batch 2 against the
-    * BUILD-PINNED caps) joined side-by-side with a REBUILT chain whose
-    * hot-shingle dfs and hot buckets are re-scoped over the grown corpus
-    * (even ∪ cycle-1 admits) — exactly what Dedup.buildSigIndex computes
-    * when rerun on the union. The verdict_parity column is the
-    * cap-drift measurement. cfpu (the grown md5 dictionary) is shared by
-    * both sides: admitted docs' fps are disjoint from the corpus
-    * dictionary by the admission rule itself.
-    *
-    * Multi-referenced CTEs are AS MATERIALIZED: DuckDB 1.0 INLINES every
-    * CTE reference, so without it `adm` (5 references) re-evaluates the
-    * whole pinned signature chain per use — measured >15 min at sf0.01
-    * vs ~20 s materialized (the unrolled-CTE planning lesson's sibling;
-    * single-reference CTEs stay plain). */
-  private[graft] def sigIndexRebuildOracle: String = {
-    import Portable._
-    def sigAggs = (0 until graft.ops.Dedup.MinhashK).map(i =>
-      s"min((${aCoef(i)} * (hh % $P1) + ${bCoef(i)}) % $P1) AS m$i")
-      .mkString(",\n           ")
-    def bandSelects(sigTable: String) =
-      (0 until graft.ops.Dedup.MinhashBands).map { b =>
-        val key = (0 until 4).foldLeft(s"CAST(${b + 1} AS BIGINT)") { (acc, j) =>
-          s"(($acc * $BandMix + m${4 * b + j}) % $P1)"
-        }
-        s"SELECT doc_id, $b AS band_idx, $key AS band_hash FROM $sigTable"
-      }.mkString("\n           UNION ALL ")
-    val matches = (0 until graft.ops.Dedup.MinhashK)
-      .map(i => s"(CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END)")
-      .mkString(" + ")
-    val member = "(doc_id % 2 = 0 OR doc_id IN (SELECT doc_id FROM adm))"
-    s"""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS arr FROM documents),
-       |  shs AS (SELECT doc_id, arr[i] || ' ' || arr[i+1] || ' ' || arr[i+2] AS s
-       |          FROM tok, LATERAL (SELECT unnest(range(1, len(arr) - 1)) AS i) r
-       |          WHERE len(arr) >= 3),
-       |  h AS MATERIALIZED (SELECT DISTINCT doc_id, ${polySql("s")} AS hh FROM shs),
-       |  hot AS (SELECT hh FROM h WHERE doc_id % 2 = 0
-       |          GROUP BY hh HAVING count(*) > 100),
-       |  kept AS (SELECT doc_id, hh FROM h
-       |           WHERE hh NOT IN (SELECT hh FROM hot)),
-       |  sig AS MATERIALIZED (SELECT doc_id, $sigAggs FROM kept GROUP BY doc_id),
-       |  bandall AS MATERIALIZED (${bandSelects("sig")}),
-       |  hotbk AS (SELECT band_idx, band_hash FROM bandall
-       |            WHERE doc_id % 2 = 0
-       |            GROUP BY 1, 2 HAVING count(*) > 50),
-       |  kb AS MATERIALIZED (SELECT * FROM bandall b WHERE NOT EXISTS (
-       |           SELECT 1 FROM hotbk g
-       |           WHERE g.band_idx = b.band_idx AND g.band_hash = b.band_hash)),
-       |  corp1 AS (SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 2 = 0),
-       |  cfp1 AS MATERIALIZED (SELECT fp, min(doc_id) AS exact_id FROM corp1 GROUP BY 1),
-       |  bat1 AS MATERIALIZED (SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 4 = 1),
-       |  bk1 AS (SELECT fp, min(doc_id) AS batch_keep_id FROM bat1 GROUP BY 1),
-       |  nc1 AS (SELECT DISTINCT bb.doc_id AS bid, cb.doc_id AS cid
-       |          FROM kb bb JOIN kb cb
-       |            ON bb.band_idx = cb.band_idx AND bb.band_hash = cb.band_hash
-       |          WHERE bb.doc_id % 4 = 1 AND cb.doc_id % 2 = 0),
-       |  sc1 AS (SELECT bid, cid, CAST($matches AS BIGINT) AS sm
-       |          FROM nc1 JOIN sig sa ON sa.doc_id = bid
-       |                   JOIN sig sb ON sb.doc_id = cid
-       |          WHERE $matches >= 16),
-       |  best1 AS (SELECT bid, cid FROM (
-       |              SELECT bid, cid, row_number() OVER (PARTITION BY bid
-       |                       ORDER BY sm DESC, cid) AS rn
-       |              FROM sc1) WHERE rn = 1),
-       |  v1 AS (SELECT b.doc_id,
-       |           CASE WHEN e.exact_id IS NOT NULL THEN 'exact_dup'
-       |                WHEN b.doc_id <> k.batch_keep_id THEN 'batch_dup'
-       |                WHEN nb.cid IS NOT NULL THEN 'near_dup'
-       |                ELSE 'new' END AS verdict
-       |         FROM bat1 b LEFT JOIN cfp1 e ON e.fp = b.fp
-       |         JOIN bk1 k ON k.fp = b.fp
-       |         LEFT JOIN best1 nb ON nb.bid = b.doc_id),
-       |  adm AS MATERIALIZED (SELECT doc_id FROM v1 WHERE verdict = 'new'),
-       |  cfpu AS MATERIALIZED (SELECT fp, exact_id FROM cfp1
-       |           UNION ALL
-       |           SELECT fp, min(doc_id) AS exact_id FROM bat1
-       |           WHERE doc_id IN (SELECT doc_id FROM adm) GROUP BY fp),
-       |  bat2 AS MATERIALIZED (SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 4 = 3),
-       |  bk2 AS MATERIALIZED (SELECT fp, min(doc_id) AS batch_keep_id FROM bat2 GROUP BY 1),
-       |  nca AS (SELECT DISTINCT bb.doc_id AS bid, cb.doc_id AS cid
-       |          FROM kb bb JOIN kb cb
-       |            ON bb.band_idx = cb.band_idx AND bb.band_hash = cb.band_hash
-       |          WHERE bb.doc_id % 4 = 3
-       |            AND (cb.doc_id % 2 = 0
-       |                 OR cb.doc_id IN (SELECT doc_id FROM adm))),
-       |  sca AS (SELECT bid, cid, CAST($matches AS BIGINT) AS sm
-       |          FROM nca JOIN sig sa ON sa.doc_id = bid
-       |                   JOIN sig sb ON sb.doc_id = cid
-       |          WHERE $matches >= 16),
-       |  besta AS (SELECT bid, cid FROM (
-       |              SELECT bid, cid, row_number() OVER (PARTITION BY bid
-       |                       ORDER BY sm DESC, cid) AS rn
-       |              FROM sca) WHERE rn = 1),
-       |  va AS (SELECT b.doc_id,
-       |           CASE WHEN e.exact_id IS NOT NULL THEN 'exact_dup'
-       |                WHEN b.doc_id <> k.batch_keep_id THEN 'batch_dup'
-       |                WHEN nb.cid IS NOT NULL THEN 'near_dup'
-       |                ELSE 'new' END AS verdict,
-       |           CASE WHEN e.exact_id IS NOT NULL THEN e.exact_id
-       |                WHEN b.doc_id <> k.batch_keep_id THEN k.batch_keep_id
-       |                WHEN nb.cid IS NOT NULL THEN nb.cid
-       |                ELSE NULL END AS match_id
-       |         FROM bat2 b LEFT JOIN cfpu e ON e.fp = b.fp
-       |         JOIN bk2 k ON k.fp = b.fp
-       |         LEFT JOIN besta nb ON nb.bid = b.doc_id),
-       |  hotr AS (SELECT hh FROM h WHERE $member
-       |           GROUP BY hh HAVING count(*) > 100),
-       |  keptr AS (SELECT doc_id, hh FROM h
-       |            WHERE hh NOT IN (SELECT hh FROM hotr)),
-       |  sigr AS MATERIALIZED (SELECT doc_id, $sigAggs FROM keptr GROUP BY doc_id),
-       |  bandr AS MATERIALIZED (${bandSelects("sigr")}),
-       |  hotbkr AS (SELECT band_idx, band_hash FROM bandr
-       |             WHERE $member
-       |             GROUP BY 1, 2 HAVING count(*) > 50),
-       |  kbr AS MATERIALIZED (SELECT * FROM bandr b WHERE NOT EXISTS (
-       |            SELECT 1 FROM hotbkr g
-       |            WHERE g.band_idx = b.band_idx AND g.band_hash = b.band_hash)),
-       |  ncr AS (SELECT DISTINCT bb.doc_id AS bid, cb.doc_id AS cid
-       |          FROM kbr bb JOIN kbr cb
-       |            ON bb.band_idx = cb.band_idx AND bb.band_hash = cb.band_hash
-       |          WHERE bb.doc_id % 4 = 3
-       |            AND (cb.doc_id % 2 = 0
-       |                 OR cb.doc_id IN (SELECT doc_id FROM adm))),
-       |  scr AS (SELECT bid, cid, CAST($matches AS BIGINT) AS sm
-       |          FROM ncr JOIN sigr sa ON sa.doc_id = bid
-       |                   JOIN sigr sb ON sb.doc_id = cid
-       |          WHERE $matches >= 16),
-       |  bestr AS (SELECT bid, cid FROM (
-       |              SELECT bid, cid, row_number() OVER (PARTITION BY bid
-       |                       ORDER BY sm DESC, cid) AS rn
-       |              FROM scr) WHERE rn = 1),
-       |  vr AS (SELECT b.doc_id,
-       |           CASE WHEN e.exact_id IS NOT NULL THEN 'exact_dup'
-       |                WHEN b.doc_id <> k.batch_keep_id THEN 'batch_dup'
-       |                WHEN nb.cid IS NOT NULL THEN 'near_dup'
-       |                ELSE 'new' END AS verdict,
-       |           CASE WHEN e.exact_id IS NOT NULL THEN e.exact_id
-       |                WHEN b.doc_id <> k.batch_keep_id THEN k.batch_keep_id
-       |                WHEN nb.cid IS NOT NULL THEN nb.cid
-       |                ELSE NULL END AS match_id
-       |         FROM bat2 b LEFT JOIN cfpu e ON e.fp = b.fp
-       |         JOIN bk2 k ON k.fp = b.fp
-       |         LEFT JOIN bestr nb ON nb.bid = b.doc_id)
+  /** `dedup_sig_index_append`: cycle 1 of two — batch 2 (doc_id ≡ 3
+    * mod 4) against the even half plus batch 1's admissions, caps still
+    * pinned at build time. */
+  private[graft] def sigIndexAppendOracle: String =
+    s"""WITH ${sigIndexGateCtes(2)}
+       |SELECT doc_id, verdict, match_id FROM v1 ORDER BY doc_id""".stripMargin
+
+  /** `dedup_sig_index_rebuild`: batch 2's build-pinned verdicts (the
+    * append twin's `v1`) beside the verdicts of a second chain whose
+    * caps are re-scoped over the grown corpus (even ∪ `adm0`), as
+    * Dedup.buildSigIndex computes them when rerun on it. The
+    * verdict_parity column is the cap-drift measurement. */
+  private[graft] def sigIndexRebuildOracle: String =
+    s"""WITH ${sigIndexGateCtes(2)},
+       |  ${sigChainCtes("(doc_id % 2 = 0 OR doc_id IN (SELECT doc_id FROM adm0))", "r")},
+       |  ${bestMatchCtes("r", "kbr", "sigr", corpusPair(1, 2))},
+       |  vr AS (${verdictSql("doc_id", "bat1", "dict1", Seq("'near_dup'" -> "bestr"))})
        |SELECT r.doc_id AS doc_id,
        |  r.verdict AS verdict_rebuilt, r.match_id AS match_rebuilt,
        |  a.verdict AS verdict_appended, a.match_id AS match_appended,
        |  CAST(CASE WHEN r.verdict = a.verdict THEN 1 ELSE 0 END AS BIGINT)
        |    AS verdict_parity
-       |FROM vr r JOIN va a ON a.doc_id = r.doc_id
+       |FROM vr r JOIN v1 a ON a.doc_id = r.doc_id
        |ORDER BY doc_id""".stripMargin
-  }
 
-  /** N-cycle streaming-gate oracle: the [[sigIndexAppendOracle]] chain
-    * generalized — cycle j gates docs with `doc_id % 2n = 2j+1` against
-    * even ∪ (admissions of all earlier cycles), and the emitted
-    * admit_cycle is recomputed as `(doc_id % 2n) div 2`, pinning the
+  /** `stream_ingest_gate_parity`: every cycle of the N-cycle sig-index
+    * gate, with admit_cycle = (doc_id % 2N) div 2 pinning the
     * micro-batch order itself under the hash check. */
-  private[graft] def streamGateOracle(nCycles: Int): String = {
-    import Portable._
-    def sigAggs = (0 until graft.ops.Dedup.MinhashK).map(i =>
-      s"min((${aCoef(i)} * (hh % $P1) + ${bCoef(i)}) % $P1) AS m$i")
-      .mkString(",\n           ")
-    def bandSelects(sigTable: String) =
-      (0 until graft.ops.Dedup.MinhashBands).map { b =>
-        val key = (0 until 4).foldLeft(s"CAST(${b + 1} AS BIGINT)") { (acc, j) =>
-          s"(($acc * $BandMix + m${4 * b + j}) % $P1)"
-        }
-        s"SELECT doc_id, $b AS band_idx, $key AS band_hash FROM $sigTable"
-      }.mkString("\n           UNION ALL ")
-    val matches = (0 until graft.ops.Dedup.MinhashK)
-      .map(i => s"(CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END)")
-      .mkString(" + ")
-    val mod = 2 * nCycles
-    val cycles = (0 until nCycles).map { j =>
-      val admUnion = (0 until j).map(k =>
-        s"OR cb.doc_id IN (SELECT doc_id FROM adm$k)").mkString(" ")
-      val cfpUnion = (0 until j).map(k =>
-        s"""UNION ALL
-           |           SELECT fp, min(doc_id) AS exact_id FROM bat$k
-           |           WHERE doc_id IN (SELECT doc_id FROM adm$k) GROUP BY fp""".stripMargin)
-        .mkString("\n           ")
-      s"""bat$j AS (SELECT doc_id, md5(text) AS fp FROM documents
-         |           WHERE doc_id % $mod = ${2 * j + 1}),
-         |  bk$j AS (SELECT fp, min(doc_id) AS batch_keep_id FROM bat$j GROUP BY 1),
-         |  cfpu$j AS (SELECT fp, exact_id FROM cfp0
-         |           $cfpUnion),
-         |  nc$j AS (SELECT DISTINCT bb.doc_id AS bid, cb.doc_id AS cid
-         |          FROM kb bb JOIN kb cb
-         |            ON bb.band_idx = cb.band_idx AND bb.band_hash = cb.band_hash
-         |          WHERE bb.doc_id % $mod = ${2 * j + 1}
-         |            AND (cb.doc_id % 2 = 0 $admUnion)),
-         |  sc$j AS (SELECT bid, cid, CAST($matches AS BIGINT) AS sm
-         |          FROM nc$j JOIN sig sa ON sa.doc_id = bid
-         |                   JOIN sig sb ON sb.doc_id = cid
-         |          WHERE $matches >= 16),
-         |  best$j AS (SELECT bid, cid FROM (
-         |              SELECT bid, cid, row_number() OVER (PARTITION BY bid
-         |                       ORDER BY sm DESC, cid) AS rn
-         |              FROM sc$j) WHERE rn = 1),
-         |  v$j AS (SELECT b.doc_id,
-         |           CASE WHEN e.exact_id IS NOT NULL THEN 'exact_dup'
-         |                WHEN b.doc_id <> k.batch_keep_id THEN 'batch_dup'
-         |                WHEN nb.cid IS NOT NULL THEN 'near_dup'
-         |                ELSE 'new' END AS verdict,
-         |           CASE WHEN e.exact_id IS NOT NULL THEN e.exact_id
-         |                WHEN b.doc_id <> k.batch_keep_id THEN k.batch_keep_id
-         |                WHEN nb.cid IS NOT NULL THEN nb.cid
-         |                ELSE NULL END AS match_id
-         |         FROM bat$j b LEFT JOIN cfpu$j e ON e.fp = b.fp
-         |         JOIN bk$j k ON k.fp = b.fp
-         |         LEFT JOIN best$j nb ON nb.bid = b.doc_id),
-         |  adm$j AS (SELECT doc_id FROM v$j WHERE verdict = 'new')""".stripMargin
-    }.mkString(",\n  ")
-    val finalUnion = (0 until nCycles).map(j =>
-      s"SELECT doc_id, verdict, match_id, CAST($j AS BIGINT) AS admit_cycle FROM v$j")
-      .mkString("\n         UNION ALL ")
-    s"""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS arr FROM documents),
-       |  shs AS (SELECT doc_id, arr[i] || ' ' || arr[i+1] || ' ' || arr[i+2] AS s
-       |          FROM tok, LATERAL (SELECT unnest(range(1, len(arr) - 1)) AS i) r
-       |          WHERE len(arr) >= 3),
-       |  h AS (SELECT DISTINCT doc_id, ${polySql("s")} AS hh FROM shs),
-       |  hot AS (SELECT hh FROM h WHERE doc_id % 2 = 0
-       |          GROUP BY hh HAVING count(*) > 100),
-       |  kept AS (SELECT doc_id, hh FROM h
-       |           WHERE hh NOT IN (SELECT hh FROM hot)),
-       |  sig AS (SELECT doc_id, $sigAggs FROM kept GROUP BY doc_id),
-       |  bandall AS (${bandSelects("sig")}),
-       |  hotbk AS (SELECT band_idx, band_hash FROM bandall
-       |            WHERE doc_id % 2 = 0
-       |            GROUP BY 1, 2 HAVING count(*) > 50),
-       |  kb AS (SELECT * FROM bandall b WHERE NOT EXISTS (
-       |           SELECT 1 FROM hotbk g
-       |           WHERE g.band_idx = b.band_idx AND g.band_hash = b.band_hash)),
-       |  corp0 AS (SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 2 = 0),
-       |  cfp0 AS (SELECT fp, min(doc_id) AS exact_id FROM corp0 GROUP BY 1),
-       |  $cycles
-       |SELECT * FROM ($finalUnion)
+  private[graft] def streamGateOracle(nCycles: Int): String =
+    s"""WITH ${sigIndexGateCtes(nCycles)}
+       |SELECT * FROM (${cycleUnion(nCycles, "doc_id")})
        |ORDER BY doc_id""".stripMargin
-  }
 
   /** N-cycle replay of [[graft.streaming.EventStream.embedGateParityRun]]
     * on the [[vecFpSql]] fingerprint basis: the same planted-duplicate
     * union as the registered query (ids 0→10000003, 1→10000007,
     * 3→10000005 — residues mod 2N pin each plant's cycle), corpus = even
     * ids, cycle j probes corpus ∪ admissions of cycles < j. Exact-only
-    * verdicts (no near-dup tier — fingerprint identity is the gate).
-    * Multi-referenced aggregating CTEs are MATERIALIZED (DuckDB inlines
-    * plain CTEs per reference — see lint_oracles.py rationale). */
-  private[graft] def embedGateOracle(nCycles: Int): String = {
-    val mod = 2 * nCycles
-    val cycles = (0 until nCycles).map { j =>
-      val idxUnion = (0 until j).map(k =>
-        s"""UNION ALL
-           |           SELECT fp, exact_id FROM adm$k""".stripMargin)
-        .mkString("\n           ")
-      s"""bat$j AS MATERIALIZED (SELECT vec_id, fp FROM f
-         |          WHERE vec_id % $mod = ${2 * j + 1}),
-         |  bk$j AS (SELECT fp, min(vec_id) AS batch_keep_id FROM bat$j GROUP BY 1),
-         |  idx$j AS (SELECT fp, exact_id FROM corp
-         |           $idxUnion),
-         |  v$j AS MATERIALIZED (SELECT b.vec_id,
-         |           CASE WHEN e.exact_id IS NOT NULL THEN 'exact_dup'
-         |                WHEN b.vec_id <> k.batch_keep_id THEN 'batch_dup'
-         |                ELSE 'new' END AS verdict,
-         |           CASE WHEN e.exact_id IS NOT NULL THEN e.exact_id
-         |                WHEN b.vec_id <> k.batch_keep_id THEN k.batch_keep_id
-         |                END AS match_id
-         |         FROM bat$j b LEFT JOIN idx$j e ON e.fp = b.fp
-         |         JOIN bk$j k ON k.fp = b.fp),
-         |  adm$j AS MATERIALIZED (SELECT fp, min(vec_id) AS exact_id FROM bat$j
-         |          WHERE vec_id IN (SELECT vec_id FROM v$j WHERE verdict = 'new')
-         |          GROUP BY 1)""".stripMargin
-    }.mkString(",\n  ")
-    val finalUnion = (0 until nCycles).map(j =>
-      s"SELECT vec_id, verdict, match_id, CAST($j AS BIGINT) AS admit_cycle FROM v$j")
-      .mkString("\n         UNION ALL ")
+    * verdicts (no near-dup tier — fingerprint identity is the gate). */
+  private[graft] def embedGateOracle(nCycles: Int): String =
     s"""WITH base AS (SELECT vec_id, embedding FROM embeddings
        |           UNION ALL
        |           SELECT CASE vec_id WHEN 0 THEN 10000003
@@ -538,82 +304,10 @@ trait SparkEntryOracleHelpers1 extends SparkEntryHelpers {
        |                              ELSE 10000005 END AS vec_id, embedding
        |           FROM embeddings WHERE vec_id IN (0, 1, 3)),
        |  f AS MATERIALIZED (SELECT vec_id, ${vecFpSql("embedding")} AS fp FROM base),
-       |  corp AS MATERIALIZED (SELECT fp, min(vec_id) AS exact_id FROM f
-       |          WHERE vec_id % 2 = 0 GROUP BY 1),
-       |  $cycles
+       |  ${gateCycleCtes(nCycles, "vec_id", "f", _ => (Nil, Nil))}
        |SELECT vec_id, verdict, match_id, admit_cycle
-       |FROM ($finalUnion)
+       |FROM (${cycleUnion(nCycles, "vec_id")})
        |ORDER BY vec_id""".stripMargin
-  }
-
-  private[graft] def sigIndexProbeOracle: String = {
-    import Portable._
-    def sigAggs = (0 until graft.ops.Dedup.MinhashK).map(i =>
-      s"min((${aCoef(i)} * (hh % $P1) + ${bCoef(i)}) % $P1) AS m$i")
-      .mkString(",\n           ")
-    def bandSelects(sigTable: String) =
-      (0 until graft.ops.Dedup.MinhashBands).map { b =>
-        val key = (0 until 4).foldLeft(s"CAST(${b + 1} AS BIGINT)") { (acc, j) =>
-          s"(($acc * $BandMix + m${4 * b + j}) % $P1)"
-        }
-        s"SELECT doc_id, $b AS band_idx, $key AS band_hash FROM $sigTable"
-      }.mkString("\n           UNION ALL ")
-    val matches = (0 until graft.ops.Dedup.MinhashK)
-      .map(i => s"(CASE WHEN sa.m$i = sb.m$i THEN 1 ELSE 0 END)")
-      .mkString(" + ")
-    s"""WITH tok AS (SELECT doc_id, string_split(text, ' ') AS arr FROM documents),
-       |  shs AS (SELECT doc_id, arr[i] || ' ' || arr[i+1] || ' ' || arr[i+2] AS s
-       |          FROM tok, LATERAL (SELECT unnest(range(1, len(arr) - 1)) AS i) r
-       |          WHERE len(arr) >= 3),
-       |  h AS (SELECT DISTINCT doc_id, ${polySql("s")} AS hh FROM shs),
-       |  hot AS (SELECT hh FROM h WHERE doc_id % 2 = 0
-       |          GROUP BY hh HAVING count(*) > 100),
-       |  keptc AS (SELECT doc_id, hh FROM h WHERE doc_id % 2 = 0
-       |            AND hh NOT IN (SELECT hh FROM hot)),
-       |  keptbt AS (SELECT doc_id, hh FROM h WHERE doc_id % 2 = 1
-       |             AND hh NOT IN (SELECT hh FROM hot)),
-       |  sigc AS (SELECT doc_id, $sigAggs FROM keptc GROUP BY doc_id),
-       |  sigb AS (SELECT doc_id, $sigAggs FROM keptbt GROUP BY doc_id),
-       |  bandc AS (${bandSelects("sigc")}),
-       |  hotbk AS (SELECT band_idx, band_hash FROM bandc
-       |            GROUP BY 1, 2 HAVING count(*) > 50),
-       |  kbc AS (SELECT * FROM bandc b WHERE NOT EXISTS (
-       |            SELECT 1 FROM hotbk g
-       |            WHERE g.band_idx = b.band_idx AND g.band_hash = b.band_hash)),
-       |  bandb AS (${bandSelects("sigb")}),
-       |  kbb AS (SELECT * FROM bandb b WHERE NOT EXISTS (
-       |            SELECT 1 FROM hotbk g
-       |            WHERE g.band_idx = b.band_idx AND g.band_hash = b.band_hash)),
-       |  nc AS (SELECT DISTINCT bb.doc_id AS bid, cb.doc_id AS cid
-       |         FROM kbb bb JOIN kbc cb
-       |           ON bb.band_idx = cb.band_idx AND bb.band_hash = cb.band_hash),
-       |  sc AS (SELECT bid, cid, CAST($matches AS BIGINT) AS sm
-       |         FROM nc JOIN sigb sa ON sa.doc_id = bid
-       |                 JOIN sigc sb ON sb.doc_id = cid
-       |         WHERE $matches >= 16),
-       |  best AS (SELECT bid, cid FROM (
-       |             SELECT bid, cid,
-       |                    row_number() OVER (PARTITION BY bid
-       |                                       ORDER BY sm DESC, cid) AS rn
-       |             FROM sc) WHERE rn = 1),
-       |  corp AS (SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 2 = 0),
-       |  bat  AS (SELECT doc_id, md5(text) AS fp FROM documents WHERE doc_id % 2 = 1),
-       |  cfp AS (SELECT fp, min(doc_id) AS exact_id FROM corp GROUP BY 1),
-       |  bk  AS (SELECT fp, min(doc_id) AS batch_keep_id FROM bat GROUP BY 1)
-       |SELECT b.doc_id AS doc_id,
-       |  CASE WHEN e.exact_id IS NOT NULL THEN 'exact_dup'
-       |       WHEN b.doc_id <> k.batch_keep_id THEN 'batch_dup'
-       |       WHEN nb.cid IS NOT NULL THEN 'near_dup'
-       |       ELSE 'new' END AS verdict,
-       |  CASE WHEN e.exact_id IS NOT NULL THEN e.exact_id
-       |       WHEN b.doc_id <> k.batch_keep_id THEN k.batch_keep_id
-       |       WHEN nb.cid IS NOT NULL THEN nb.cid
-       |       ELSE NULL END AS match_id
-       |FROM bat b LEFT JOIN cfp e ON e.fp = b.fp
-       |JOIN bk k ON k.fp = b.fp
-       |LEFT JOIN best nb ON nb.bid = b.doc_id
-       |ORDER BY doc_id""".stripMargin
-  }
 
   /** The co-purchase twins' CTE prologue, written independently of the
     * Spark builders it checks: `li` (each order's distinct parts),

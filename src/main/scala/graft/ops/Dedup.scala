@@ -460,10 +460,6 @@ object Dedup {
     lshPairsFromSignatures(sig, maxBucket, minSigMatches)
   }
 
-  /** Band a (persisted) signature table into LSH buckets and emit scored
-    * candidate pairs — the back half of [[minhashLsh]], split out so
-    * composed ops ([[minhashRecall]]) can feed it a signature table built
-    * from a SHARED shingle scan instead of paying a second explode. */
   /** (doc_id, band_idx, band_hash) rows from a signature table, with
     * buckets above `maxBucket` members dropped (the hot-bucket cap —
     * fixed-width broadcast hot-list, same discipline as [[shingleHashes]]).
@@ -471,12 +467,21 @@ object Dedup {
     * probe so both see identical bucket selectivity. */
   private def bandedKeys(sig: DataFrame, maxBucket: Int): DataFrame = {
     val banded = bandKeysRaw(sig)
-    val hotBuckets = banded.groupBy("band_idx", "band_hash")
+    capBands(banded, hotBucketsOf(banded, maxBucket))
+  }
+
+  /** The (band_idx, band_hash) buckets of `banded` with more than
+    * `maxBucket` members. */
+  private def hotBucketsOf(banded: DataFrame, maxBucket: Int): DataFrame =
+    banded.groupBy("band_idx", "band_hash")
       .agg(count(lit(1)).as("bs")).filter(col("bs") > maxBucket)
       .select("band_idx", "band_hash")
-    banded
-      .join(broadcast(hotBuckets), Seq("band_idx", "band_hash"), "left_anti")
-  }
+
+  /** The hot-bucket cap: `banded` rows without the buckets listed in
+    * `hotBuckets`, a fixed-width broadcast anti-join. Every banded table
+    * the gates and the index probe is capped here. */
+  private def capBands(banded: DataFrame, hotBuckets: DataFrame): DataFrame =
+    banded.join(broadcast(hotBuckets), Seq("band_idx", "band_hash"), "left_anti")
 
   /** Uncapped (doc_id, band_idx, band_hash) banding of a signature table
     * — the raw stream [[bandedKeys]] caps and [[buildSigIndex]] persists
@@ -499,17 +504,77 @@ object Dedup {
     .map(j => when(col(s"sa.m$j") === col(s"sb.m$j"), 1L).otherwise(0L))
     .reduce(_ + _)
 
+  /** Distinct pairs of a row of `b` and a row of `c` sharing an LSH
+    * bucket, as (`left`, `right`) doc ids; `cond` further restricts a
+    * pair through the aliases `b` and `c`. */
+  private def bucketPairs(b: DataFrame, c: DataFrame, left: String,
+      right: String, cond: Column = lit(true)): DataFrame =
+    b.as("b").join(c.as("c"),
+        col("b.band_idx") === col("c.band_idx") &&
+          col("b.band_hash") === col("c.band_hash") && cond)
+      .select(col("b.doc_id").as(left), col("c.doc_id").as(right))
+      .distinct()
+
+  /** The gates' best-match probe: candidate pairs `cand (bid, other)`
+    * re-scored on the signature tables `sigA` (the bid side) and `sigB`,
+    * kept at >= `minSigMatches` agreeing components, and each bid's
+    * most-agreeing `other` taken, the smallest id on ties. Output
+    * (doc_id, other). */
+  private def bestMatch(cand: DataFrame, sigA: DataFrame, sigB: DataFrame,
+      other: String, minSigMatches: Int): DataFrame = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy("bid").orderBy(desc("sig_matches"), asc(other))
+    cand
+      .join(sigA.as("sa"), col("bid") === col("sa.doc_id"))
+      .join(sigB.as("sb"), col(other) === col("sb.doc_id"))
+      .withColumn("sig_matches", sigMatchCount)
+      .filter(col("sig_matches") >= minSigMatches)
+      .select(col("bid"), col(other), col("sig_matches"))
+      .withColumn("__rn", row_number().over(w))
+      .filter(col("__rn") === 1)
+      .select(col("bid").as("doc_id"), col(other))
+  }
+
+  /** The gates' verdict ladder over batch fingerprints `bfp (id, fp)`:
+    * `exact_dup` (the fp is in the dictionary `cfp (fp, exact_id)`) >
+    * `batch_dup` (a smaller batch id has the same fp) > each near tier
+    * (verdict, frame of (id, matched id)) in order > `new`. match_id is
+    * the id that decided, null for `new`. Output (id, verdict,
+    * match_id), unordered. */
+  private[graft] def gateVerdicts(bfp: DataFrame, cfp: DataFrame,
+      nearTiers: Seq[(String, DataFrame)], id: String): DataFrame = {
+    val bkeep = bfp.groupBy("fp").agg(min(id).as("batch_keep_id"))
+    val near = nearTiers.indices.map(i => s"__near$i")
+    val joined = nearTiers.zip(near).foldLeft(
+        bfp.join(cfp, Seq("fp"), "left").join(bkeep, "fp")) {
+      case (df, ((_, tier), m)) => df.join(tier.toDF(id, m), Seq(id), "left")
+    }
+    val tiers = Seq(
+        (lit("exact_dup"), col("exact_id").isNotNull, col("exact_id")),
+        (lit("batch_dup"), col(id) =!= col("batch_keep_id"), col("batch_keep_id"))) ++
+      nearTiers.zip(near).map { case ((v, _), m) => (lit(v), col(m).isNotNull, col(m)) }
+    def ladder(out: ((Column, Column, Column)) => Column): Column =
+      tiers.tail.foldLeft(when(tiers.head._2, out(tiers.head))) {
+        (c, t) => c.when(t._2, out(t)) }
+    joined.select(col(id),
+      ladder(_._1).otherwise(lit("new")).as("verdict"),
+      ladder(_._3).as("match_id"))
+  }
+
+  /** The md5 dictionary (fp, exact_id): each distinct text's smallest id. */
+  private def fpDict(docs: DataFrame, id: String, text: String): DataFrame =
+    docs.select(md5(col(text)).as("fp"), col(id).as("cid"))
+      .groupBy("fp").agg(min("cid").as("exact_id"))
+
+  /** Band a (persisted) signature table into LSH buckets and emit scored
+    * candidate pairs — the back half of [[minhashLsh]], split out so
+    * composed ops ([[minhashRecall]]) can feed it a signature table built
+    * from a SHARED shingle scan instead of paying a second explode. */
   private def lshPairsFromSignatures(sig: DataFrame, maxBucket: Int,
       minSigMatches: Int): DataFrame = {
     val kept = Materialize.cache(bandedKeys(sig, maxBucket),
       "Dedup.lshPairsFromSignatures.kept")
-    val cand = kept.as("a").join(kept.as("b"),
-        col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_hash") === col("b.band_hash") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("da"), col("b.doc_id").as("db"))
-      .distinct()
-    cand
+    bucketPairs(kept, kept, "da", "db", col("b.doc_id") < col("c.doc_id"))
       .join(sig.as("sa"), col("da") === col("sa.doc_id"))
       .join(sig.as("sb"), col("db") === col("sb.doc_id"))
       .withColumn("sig_matches", sigMatchCount)
@@ -575,10 +640,8 @@ object Dedup {
         .join(batchNN.select(col(id)), id :: Nil, "left_semi")
         .isEmpty,
       "ingestGate requires corpus and batch doc ids to be disjoint")
-    val cfp = corpusNN.select(md5(col(text)).as("fp"), col(id).as("cid"))
-      .groupBy("fp").agg(min("cid").as("exact_id"))
+    val cfp = fpDict(corpusNN, id, text)
     val bfp = batchNN.select(col(id).as("doc_id"), md5(col(text)).as("fp"))
-    val bkeep = bfp.groupBy("fp").agg(min("doc_id").as("batch_keep_id"))
 
     // near-dup probe: one signature build over corpus ∪ batch, split back
     // into sides by membership (id-width join, no parity assumption)
@@ -592,58 +655,15 @@ object Dedup {
     val batchIds = batchNN.select(col(id).as("doc_id"))
     val keptB = kept.join(batchIds, "doc_id")
     val keptC = kept.join(batchIds, Seq("doc_id"), "left_anti")
-    val cand = keptB.as("b").join(keptC.as("c"),
-        col("b.band_idx") === col("c.band_idx") &&
-          col("b.band_hash") === col("c.band_hash"))
-      .select(col("b.doc_id").as("bid"), col("c.doc_id").as("cid"))
-      .distinct()
-    val wBest = org.apache.spark.sql.expressions.Window
-      .partitionBy("bid").orderBy(desc("sig_matches"), asc("cid"))
-    val near = cand
-      .join(sig.as("sa"), col("bid") === col("sa.doc_id"))
-      .join(sig.as("sb"), col("cid") === col("sb.doc_id"))
-      .withColumn("sig_matches", sigMatchCount)
-      .filter(col("sig_matches") >= minSigMatches)
-      .select(col("bid"), col("cid"), col("sig_matches"))
-      .withColumn("__rn", row_number().over(wBest))
-      .filter(col("__rn") === 1)
-      .select(col("bid").as("doc_id"), col("cid").as("near_id"))
-
+    val near = bestMatch(bucketPairs(keptB, keptC, "bid", "cid"),
+      sig, sig, "cid", minSigMatches)
     // intra-batch near-dup quadrant (verdict 4): same banded keys, each
     // batch doc against EARLIER batch docs only — batch-sized work
-    val candBB = keptB.as("b").join(keptB.as("c"),
-        col("b.band_idx") === col("c.band_idx") &&
-          col("b.band_hash") === col("c.band_hash") &&
-          col("c.doc_id") < col("b.doc_id"))
-      .select(col("b.doc_id").as("bid"), col("c.doc_id").as("bbid"))
-      .distinct()
-    val wBestB = org.apache.spark.sql.expressions.Window
-      .partitionBy("bid").orderBy(desc("sig_matches"), asc("bbid"))
-    val nearB = candBB
-      .join(sig.as("sa"), col("bid") === col("sa.doc_id"))
-      .join(sig.as("sb"), col("bbid") === col("sb.doc_id"))
-      .withColumn("sig_matches", sigMatchCount)
-      .filter(col("sig_matches") >= minSigMatches)
-      .select(col("bid"), col("bbid"), col("sig_matches"))
-      .withColumn("__rn", row_number().over(wBestB))
-      .filter(col("__rn") === 1)
-      .select(col("bid").as("doc_id"), col("bbid").as("batch_near_id"))
-
-    bfp.join(cfp, Seq("fp"), "left")
-      .join(bkeep, "fp")
-      .join(near, Seq("doc_id"), "left")
-      .join(nearB, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("exact_id").isNotNull, lit("exact_dup"))
-          .when(col("doc_id") =!= col("batch_keep_id"), lit("batch_dup"))
-          .when(col("near_id").isNotNull, lit("near_dup"))
-          .when(col("batch_near_id").isNotNull, lit("batch_near_dup"))
-          .otherwise(lit("new")).as("verdict"),
-        when(col("exact_id").isNotNull, col("exact_id"))
-          .when(col("doc_id") =!= col("batch_keep_id"), col("batch_keep_id"))
-          .when(col("near_id").isNotNull, col("near_id"))
-          .when(col("batch_near_id").isNotNull, col("batch_near_id"))
-          .as("match_id"))
+    val nearB = bestMatch(
+      bucketPairs(keptB, keptB, "bid", "bbid", col("c.doc_id") < col("b.doc_id")),
+      sig, sig, "bbid", minSigMatches)
+    gateVerdicts(bfp, cfp,
+      Seq("near_dup" -> near, "batch_near_dup" -> nearB), "doc_id")
       .orderBy("doc_id")
   }
 
@@ -672,14 +692,9 @@ object Dedup {
       maxDf: Int = 100, maxBucket: Int = 50,
       id: String = "doc_id", text: String = "text"): Unit = {
     val c = corpus.filter(col(text).isNotNull)
-    c.select(md5(col(text)).as("fp"), col(id).as("cid"))
-      .groupBy("fp").agg(min("cid").as("exact_id"))
-      .write.mode("overwrite").parquet(s"$path/fp")
+    fpDict(c, id, text).write.mode("overwrite").parquet(s"$path/fp")
     val sh = Materialize.barrier( // feeds the hot list + the kept stream
-      Spread(c.select(col(id).as("doc_id"), col(text).as("text")))
-        .select(col("doc_id"),
-          explode(graft.functions.WordShinglePolyHashes(col("text"), k)).as("h")),
-      "Dedup.buildSigIndex.shingles")
+      polyShingles(c, k, id, text), "Dedup.buildSigIndex.shingles")
     val hot = Materialize.barrier( // feeds the sink + the anti join
       sh.groupBy("h").agg(count(lit(1)).as("df"))
         .filter(col("df") > maxDf).select("h"), "Dedup.buildSigIndex.hot")
@@ -688,13 +703,31 @@ object Dedup {
       sh.join(broadcast(hot), Seq("h"), "left_anti")), "Dedup.buildSigIndex.sig")
     sig.write.mode("overwrite").parquet(s"$path/sig")
     val banded = Materialize.barrier(bandKeysRaw(sig), "Dedup.buildSigIndex.banded")
-    val hotBuckets = Materialize.barrier(banded.groupBy("band_idx", "band_hash")
-      .agg(count(lit(1)).as("bs")).filter(col("bs") > maxBucket)
-      .select("band_idx", "band_hash"), "Dedup.buildSigIndex.hotBuckets")
+    val hotBuckets = Materialize.barrier(hotBucketsOf(banded, maxBucket),
+      "Dedup.buildSigIndex.hotBuckets")
     hotBuckets.write.mode("overwrite").parquet(s"$path/hot_buckets")
-    banded
-      .join(broadcast(hotBuckets), Seq("band_idx", "band_hash"), "left_anti")
-      .write.mode("overwrite").parquet(s"$path/banded")
+    capBands(banded, hotBuckets).write.mode("overwrite").parquet(s"$path/banded")
+  }
+
+  /** (doc_id, h) word k-shingle poly hashes of `docs`, uncapped and not
+    * deduplicated per doc: the stream an index caps with its own hot list. */
+  private def polyShingles(docs: DataFrame, k: Int, id: String,
+      text: String): DataFrame =
+    Spread(docs.select(col(id).as("doc_id"), col(text).as("text")))
+      .select(col("doc_id"),
+        explode(graft.functions.WordShinglePolyHashes(col("text"), k)).as("h"))
+
+  /** Signatures of `docs` under the index at `path`'s build-time caps,
+    * behind the barrier `barrier` (they feed two consumers), and their
+    * band keys capped by its hot buckets: what [[appendToSigIndex]]
+    * appends and [[probeSigIndex]] probes with. */
+  private def indexedSignatures(spark: org.apache.spark.sql.SparkSession,
+      path: String, docs: DataFrame, k: Int, id: String, text: String,
+      barrier: String): (DataFrame, DataFrame) = {
+    val hot = spark.read.parquet(s"$path/hot_shingles")
+    val sig = Materialize.barrier(minhashSignatures(polyShingles(docs, k, id, text)
+      .join(broadcast(hot), Seq("h"), "left_anti")), barrier)
+    (sig, capBands(bandKeysRaw(sig), spark.read.parquet(s"$path/hot_buckets")))
   }
 
   /** Incremental index maintenance — the steady-state cycle the
@@ -716,20 +749,11 @@ object Dedup {
       path: String, admitted: DataFrame, k: Int = 3,
       id: String = "doc_id", text: String = "text"): Unit = {
     val a = admitted.filter(col(text).isNotNull)
-    a.select(md5(col(text)).as("fp"), col(id).as("cid"))
-      .groupBy("fp").agg(min("cid").as("exact_id"))
-      .write.mode("append").parquet(s"$path/fp")
-    val hot = spark.read.parquet(s"$path/hot_shingles")
-    val sh = Spread(a.select(col(id).as("doc_id"), col(text).as("text")))
-      .select(col("doc_id"),
-        explode(graft.functions.WordShinglePolyHashes(col("text"), k)).as("h"))
-    val sig = Materialize.barrier(minhashSignatures( // sig sink + banding
-      sh.join(broadcast(hot), Seq("h"), "left_anti")), "Dedup.appendToSigIndex.sig")
+    fpDict(a, id, text).write.mode("append").parquet(s"$path/fp")
+    val (sig, bands) = indexedSignatures(spark, path, a, k, id, text,
+      "Dedup.appendToSigIndex.sig") // sig sink + banding
     sig.write.mode("append").parquet(s"$path/sig")
-    val hotBuckets = spark.read.parquet(s"$path/hot_buckets")
-    bandKeysRaw(sig)
-      .join(broadcast(hotBuckets), Seq("band_idx", "band_hash"), "left_anti")
-      .write.mode("append").parquet(s"$path/banded")
+    bands.write.mode("append").parquet(s"$path/banded")
   }
 
   /** Classify `batch` against a [[buildSigIndex]] index: same verdicts
@@ -745,47 +769,13 @@ object Dedup {
       id: String = "doc_id", text: String = "text"): DataFrame = {
     val b = batch.filter(col(text).isNotNull)
     val bfp = b.select(col(id).as("doc_id"), md5(col(text)).as("fp"))
-    val bkeep = bfp.groupBy("fp").agg(min("doc_id").as("batch_keep_id"))
-    val cfp = spark.read.parquet(s"$path/fp")
-    val hot = spark.read.parquet(s"$path/hot_shingles")
-    val sh = Spread(b.select(col(id).as("doc_id"), col(text).as("text")))
-      .select(col("doc_id"),
-        explode(graft.functions.WordShinglePolyHashes(col("text"), k)).as("h"))
-    val bsig = Materialize.barrier(minhashSignatures( // banding + verify side
-      sh.join(broadcast(hot), Seq("h"), "left_anti")), "Dedup.probeSigIndex.bsig")
-    val hotBuckets = spark.read.parquet(s"$path/hot_buckets")
-    val bBand = bandKeysRaw(bsig)
-      .join(broadcast(hotBuckets), Seq("band_idx", "band_hash"), "left_anti")
-    val cand = bBand.as("b")
-      .join(spark.read.parquet(s"$path/banded").as("c"),
-        col("b.band_idx") === col("c.band_idx") &&
-          col("b.band_hash") === col("c.band_hash"))
-      .select(col("b.doc_id").as("bid"), col("c.doc_id").as("cid"))
-      .distinct()
-    val wBest = org.apache.spark.sql.expressions.Window
-      .partitionBy("bid").orderBy(desc("sig_matches"), asc("cid"))
-    val near = cand
-      .join(bsig.as("sa"), col("bid") === col("sa.doc_id"))
-      .join(spark.read.parquet(s"$path/sig").as("sb"),
-        col("cid") === col("sb.doc_id"))
-      .withColumn("sig_matches", sigMatchCount)
-      .filter(col("sig_matches") >= minSigMatches)
-      .select(col("bid"), col("cid"), col("sig_matches"))
-      .withColumn("__rn", row_number().over(wBest))
-      .filter(col("__rn") === 1)
-      .select(col("bid").as("doc_id"), col("cid").as("near_id"))
-    bfp.join(cfp, Seq("fp"), "left")
-      .join(bkeep, "fp")
-      .join(near, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("exact_id").isNotNull, lit("exact_dup"))
-          .when(col("doc_id") =!= col("batch_keep_id"), lit("batch_dup"))
-          .when(col("near_id").isNotNull, lit("near_dup"))
-          .otherwise(lit("new")).as("verdict"),
-        when(col("exact_id").isNotNull, col("exact_id"))
-          .when(col("doc_id") =!= col("batch_keep_id"), col("batch_keep_id"))
-          .when(col("near_id").isNotNull, col("near_id")).as("match_id"))
-      .orderBy("doc_id")
+    val (bsig, bBand) = indexedSignatures(spark, path, b, k, id, text,
+      "Dedup.probeSigIndex.bsig") // banding + verify side
+    val cand = bucketPairs(bBand, spark.read.parquet(s"$path/banded"), "bid", "cid")
+    val near = bestMatch(cand, bsig, spark.read.parquet(s"$path/sig"), "cid",
+      minSigMatches)
+    gateVerdicts(bfp, spark.read.parquet(s"$path/fp"), Seq("near_dup" -> near),
+      "doc_id").orderBy("doc_id")
   }
 
   /** MinHash candidate recall vs the exact Jaccard answer, from ONE
@@ -1112,15 +1102,7 @@ object Dedup {
     // the same chain minhashLsh runs
     val kept = sh.join(broadcast(hot.select("h")), Seq("h"), "left_anti")
       .select("doc_id", "h")
-    val sig = minhashSignatures(kept)
-    import graft.functions.Portable.{P1, BandMix}
-    val bandCols = (0 until MinhashBands).map { b =>
-      (0 until 4).foldLeft(lit(b + 1L).cast("long")) { (bk, j) =>
-        (bk * lit(BandMix) + col(s"m${4 * b + j}")) % lit(P1)
-      }
-    }
-    val banded = sig.select(col("doc_id"),
-      posexplode(array(bandCols: _*)).as(Seq("band_idx", "band_hash")))
+    val banded = bandKeysRaw(minhashSignatures(kept))
     val bandStage = stageRow("minhash_band", banded,
       Seq("band_idx", "band_hash"), lshMaxBucket)
 

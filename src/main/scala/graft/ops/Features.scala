@@ -394,15 +394,24 @@ object Features {
     * Computed over the DISTINCT-score table (one hash agg collapses the
     * rows, the prefix runs over |distinct scores| — bounded by the
     * score's resolution, bp ⇒ ≤ 10⁴ rows — so the cumulative window is
-    * aggregate-sized, never row-sized). Output: one row with n_pos,
-    * n_neg, u2, auc_bp. Degenerate inputs (no positives or no
-    * negatives) fail loudly in-plan — AUC of one class is undefined,
-    * not 0. */
+    * aggregate-sized, never row-sized; a score outside [0, 10⁴] fails
+    * in-plan). Output: one row with n_pos, n_neg, u2, auc_bp.
+    * Degenerate inputs (no positives or no negatives) fail loudly
+    * in-plan — AUC of one class is undefined, not 0. */
   def aucExact(df: DataFrame, scoreBp: Column, label: Column): DataFrame = {
     val base = df.select(scoreBp.cast("long").as("s"),
       label.cast("long").as("y"))
     val byScore = base.groupBy("s")
       .agg(count(lit(1)).as("cnt"), sum("y").as("cnt_pos"))
+      // the window below is unpartitioned, and only basis-point scores
+      // keep its input aggregate-sized: a raw score would funnel one row
+      // per distinct value through one task. Fail loudly instead (the
+      // assert is null on success, so results are unchanged).
+      .withColumn("s",
+        when(assert_true(col("s").isNull || col("s").between(0L, 10000L),
+          lit("aucExact: score outside [0, 10000] — pass basis-point " +
+            "scores, or the distinct-score window is data-sized")).isNull,
+          col("s")))
     val w = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, -1)
     byScore
       .withColumn("below", coalesce(sum("cnt").over(w), lit(0L)))

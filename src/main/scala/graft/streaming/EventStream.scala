@@ -874,18 +874,8 @@ object EventStream {
       val bfp = graft.Materialize.barrier(batch.select(col("vec_id"), // probe + append
           graft.ops.Similarity.vecFingerprint(col("embedding")).as("fp")),
         s"EventStream.embedGate.fp$batchId")
-      val bkeep = bfp.groupBy("fp").agg(min("vec_id").as("batch_keep_id"))
-      val verdicts = graft.Materialize.barrier(bfp
-        .join(spark.read.parquet(idx), Seq("fp"), "left")
-        .join(bkeep, "fp")
-        .select(col("vec_id"),
-          when(col("exact_id").isNotNull, lit("exact_dup"))
-            .when(col("vec_id") =!= col("batch_keep_id"), lit("batch_dup"))
-            .otherwise(lit("new")).as("verdict"),
-          when(col("exact_id").isNotNull, col("exact_id"))
-            .when(col("vec_id") =!= col("batch_keep_id"),
-              col("batch_keep_id"))
-            .as("match_id")), // sink + admit join must not re-probe
+      val verdicts = graft.Materialize.barrier( // sink + admit join must not re-probe
+        graft.ops.Dedup.gateVerdicts(bfp, spark.read.parquet(idx), Nil, "vec_id"),
         s"EventStream.embedGate.verdicts$batchId")
       verdicts.withColumn("admit_cycle", lit(batchId))
         .write.mode("append").parquet(out)

@@ -257,6 +257,10 @@ class MlPipelineSpec extends SparkTestBase {
     // one-class input fails loudly
     val e = intercept[Exception](auc(Seq((1L, 1L), (2L, 1L))))
     assert(e.getMessage.contains("both classes"))
+    // a raw (not basis-point) score fails loudly in-plan, naming aucExact
+    val raw = intercept[Exception](auc(Seq((1234567L, 1L), (5L, 0L))))
+    assert(raw.getMessage.contains("aucExact: score outside [0, 10000]"),
+      raw.getMessage)
   }
 
   test("calibrationReport: perfectly calibrated bins gap 0; a lying bin drives ECE") {

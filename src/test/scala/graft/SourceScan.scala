@@ -17,4 +17,16 @@ object SourceScan {
       if !c.startsWith("//") && !c.startsWith("*") && !c.startsWith("/*")
     } yield (f, n + 1, c)
   }
+
+  private val Member =
+    """^  (?:(?:private|protected)(?:\[\w+\])? )?(?:override )?(?:lazy )?(?:def|val|object|class) (\w+).*""".r
+
+  /** The name of the member of a top-level object or trait (declared at
+    * two-space indent) whose body holds 1-based line `n` of `f`; "" for
+    * a line above the first member. */
+  def enclosingMember(f: java.io.File, n: Int): String = {
+    val src = scala.io.Source.fromFile(f, "UTF-8")
+    val lines = try src.getLines().take(n).toVector finally src.close()
+    lines.reverseIterator.collectFirst { case Member(name) => name }.getOrElse("")
+  }
 }

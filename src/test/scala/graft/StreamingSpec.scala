@@ -188,6 +188,20 @@ class StreamingSpec extends SparkTestBase {
       (11L, "new", None, 2L)))
   }
 
+  test("stream gate cycle 1 equals the batch sig-index append lifecycle at sf0.001") {
+    import org.apache.spark.sql.functions.col
+    // both build on the even half, admit what cycle 0 (doc_id ≡ 1 mod 4)
+    // lets in, then gate doc_id ≡ 3 mod 4: once through parquet appends
+    // between batch queries, once across real micro-batches
+    val batch = SparkEntry.queries("dedup_sig_index_append")(spark, sf0001)
+      .as[(Long, String, Option[Long])].collect().toSeq
+    val stream = SparkEntry.queries("stream_ingest_gate_parity")(spark, sf0001)
+      .filter(col("admit_cycle") === 1L).drop("admit_cycle")
+      .as[(Long, String, Option[Long])].collect().toSeq
+    assert(batch.nonEmpty)
+    assert(stream == batch)
+  }
+
   test("embedGateParityRun: vector gate crosses cycles on fingerprint identity") {
     // same cycle geometry as the text gate (cycle = (vec_id % 6) div 2
     // for odd ids, even = corpus) but exact-only verdicts on the

@@ -308,6 +308,30 @@ class TextDedupSpec extends SparkTestBase {
     assert(e.getMessage.contains("disjoint"))
   }
 
+  test("the gates' verdict ladder, best-match probe and band fold each have one home per engine") {
+    val dedup = "ops/Dedup.scala"
+    val twins = "SparkEntryOracleHelpers1.scala"
+    // (construction, its marker, the files the rule covers, its homes)
+    val rules = Seq[(String, String => Boolean, String, Set[(String, String)])](
+      ("verdict ladder", _.contains("exact_dup"), "",
+        Set(dedup -> "gateVerdicts", twins -> "verdictSql")),
+      ("best-match probe",
+        c => c.contains("partitionBy(\"bid\")") || c.contains("PARTITION BY bid"), "",
+        Set(dedup -> "bestMatch", twins -> "bestMatchCtes")),
+      ("band fold", _.contains("BandMix"), dedup, Set(dedup -> "bandKeysRaw")))
+    val code = SourceScan.codeLines()
+    val offenders = for {
+      (what, marks, scope, homes) <- rules
+      (f, n, c) <- code
+      if marks(c) && f.getPath.endsWith(scope)
+      member = SourceScan.enclosingMember(f, n)
+      if !homes.exists { case (file, m) => f.getPath.endsWith(file) && m == member }
+    } yield s"$what outside its home: ${f.getPath}:$n (in $member): $c"
+    if (offenders.nonEmpty)
+      fail("reuse Dedup.gateVerdicts/bestMatch/bandKeysRaw or the twins' " +
+        "verdictSql/bestMatchCtes:\n" + offenders.mkString("\n"))
+  }
+
   test("portable kernels: poly-shingle count matches string path; SimHash60 fits 60 bits") {
     val docs = Tables(spark, sf0001, "documents").limit(200)
       .union(Seq((90001L, "a b", "x", "x", 3L), (90002L, "ends with space ", "x", "x", 16L))

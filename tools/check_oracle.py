@@ -7,13 +7,16 @@ Reads <verifyOutDir>/<name>/ (Spark parquet) + <verifyOutDir>/oracle_sql.json,
 runs each oracle SQL in DuckDB with the sf parquet tables registered as
 views, and compares: row count, column names (sorted), and exact values
 with columns sorted by name (per the driver contract: "compare sorts
-columns by name before hashing values"). Exits 1 on any failure, and
-when nothing was compared.
+columns by name before hashing values"). Each PASS/FAIL line carries the
+twin's DuckDB seconds (running and fetching its SQL), and the five
+slowest twins are listed at the end. Exits 1 on any failure, and when
+nothing was compared.
 """
 import glob
 import json
 import math
 import sys
+import time
 
 import duckdb
 
@@ -36,17 +39,20 @@ def main(sf_dir, out_dir):
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
     oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
+    secs = {}
     for name, sql in sorted(oracle.items()):
         files = sorted(glob.glob(f"{out_dir}/{name}/*.parquet"))
         if not files:
             print(f"FAIL {name}: no spark result parquet")
             n_fail += 1
             continue
+        t0 = time.perf_counter()
         try:
             got = con.sql(
                 f"SELECT * FROM read_parquet({files!r})")
             got_cols = sorted(got.columns)
             got_rows = got.fetchall()
+            t0 = time.perf_counter()  # the twin's own time starts here
             exp = con.sql(sql)
             exp_cols = sorted(exp.columns)
             # reorder columns by sorted name
@@ -54,29 +60,35 @@ def main(sf_dir, out_dir):
             eidx = [exp.columns.index(c) for c in exp_cols]
             exp_rows = exp.fetchall()
         except Exception as e:
-            print(f"FAIL {name}: exception {e}")
+            secs[name] = time.perf_counter() - t0
+            print(f"FAIL {name}: exception {e} [{secs[name]:.2f}s]")
             n_fail += 1
             continue
+        secs[name] = took = time.perf_counter() - t0
         ok = True
         if got_cols != exp_cols:
-            print(f"FAIL {name}: cols spark={got_cols} oracle={exp_cols}")
+            print(f"FAIL {name}: cols spark={got_cols} oracle={exp_cols} [{took:.2f}s]")
             ok = False
         elif len(got_rows) != len(exp_rows):
-            print(f"FAIL {name}: rows spark={len(got_rows)} oracle={len(exp_rows)}")
+            print(f"FAIL {name}: rows spark={len(got_rows)} oracle={len(exp_rows)} [{took:.2f}s]")
             ok = False
         else:
             for i, (g, e) in enumerate(zip(got_rows, exp_rows)):
                 gr = [norm(g[j]) for j in gidx]
                 er = [norm(e[j]) for j in eidx]
                 if gr != er:
-                    print(f"FAIL {name}: row {i} spark={gr} oracle={er}")
+                    print(f"FAIL {name}: row {i} spark={gr} oracle={er} [{took:.2f}s]")
                     ok = False
                     break
         if ok:
-            print(f"PASS {name} ({len(got_rows)} rows)")
+            print(f"PASS {name} ({len(got_rows)} rows) [{took:.2f}s]")
             n_pass += 1
         else:
             n_fail += 1
+    slowest = sorted(secs.items(), key=lambda kv: -kv[1])[:5]
+    if slowest:
+        print("slowest twins (DuckDB s): " +
+              ", ".join(f"{n} {s:.2f}" for n, s in slowest))
     print(f"== {n_pass} pass, {n_fail} fail ==")
     if n_pass + n_fail == 0:
         # an empty oracle_sql.json proves nothing; never report it clean
